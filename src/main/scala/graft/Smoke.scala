@@ -6,29 +6,6 @@ import org.apache.spark.sql.SparkSession
   * t1 smoke). `sbt -batch "runMain graft.Smoke"`. */
 object Smoke {
 
-  /** A fresh session with the Bench flagship-arm config (shuffle width
-    * 64, AQE on, /dev/shm spill) at `local[cores]` — shared by the
-    * `--cluster-time` and `--profile rows cores` probes so their walls
-    * are comparable with the recorded scaling arms. */
-  private def benchArmSession(cores: Int, bcast: String = "33554432"): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-bench-arm")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", bcast)
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark"
-        else System.getProperty("java.io.tmpdir"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
       .master("local[8]")
@@ -42,218 +19,6 @@ object Smoke {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // dev probe: `runMain graft.Smoke --profile [rows] [cores]` times the
-    // flagship stage by stage (each phase materialized via noop write —
-    // numbers overlap-free but NOT additive to the fused pipeline, which
-    // shares scans; this is for finding the dominant phase, not a sum).
-    // With a cores arg the run uses the Bench arm config (fresh
-    // local[cores] session, shuffle width 64) so per-stage walls can be
-    // compared across parallelism levels for an Amdahl decomposition.
-    if (args.headOption.contains("--profile")) {
-      import graft.operators.{DedupPipeline, DedupConfig, ConnectedComponents}
-      import graft.sources.SyntheticCorpus
-      import org.apache.spark.sql.functions.col
-      val rows = if (args.length > 1) args(1).toLong else 600000L
-      val s = if (args.length > 2) {
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        benchArmSession(args(2).toInt)
-      } else spark
-      val cfg = DedupConfig()
-      def time[T](label: String)(body: => T): T = {
-        val t = System.nanoTime()
-        val r = body
-        println(f"[profile] $label%-18s ${(System.nanoTime() - t) / 1e9}%7.1f s")
-        r
-      }
-      val corpus = SyntheticCorpus.corpus(s, rows, partitions = 64).toDF()
-      time("gen+scan")(corpus.write.format("noop").mode("overwrite").save())
-      val tagged = DedupPipeline.exactDedupWindowed(
-        DedupPipeline.sketches(corpus, cfg)).persist()
-      time("sketch+window")(tagged.write.format("noop").mode("overwrite").save())
-      val skReps = tagged.where(col("image_id") === col("rep"))
-      val cands = DedupPipeline.candidates(skReps, cfg).persist()
-      time("band+bucket")(cands.write.format("noop").mode("overwrite").save())
-      val confirmed = DedupPipeline.confirm(cands, skReps, cfg).persist()
-      time("confirm")(confirmed.write.format("noop").mode("overwrite").save())
-      val edges = tagged.where(col("image_id") =!= col("rep"))
-        .select(col("vid").as("src"),
-          org.apache.spark.sql.functions.xxhash64(col("rep")).as("dst"))
-        .union(confirmed.select(col("a").as("src"), col("b").as("dst")))
-      val labels = time("cc")(ConnectedComponents.run(edges))
-      time("relabel")(DedupPipeline.clustersFromEdges(
-          tagged.select(col("image_id"), col("vid")), edges)
-        .write.format("noop").mode("overwrite").save())
-      labels.unpersist(); tagged.unpersist(); cands.unpersist(); confirmed.unpersist()
-      s.stop()
-      return
-    }
-    // dev probe: `runMain graft.Smoke --band-breakdown rows cores` times
-    // the candidate stage's three sub-steps separately (band compute /
-    // window bucket-gate / pair gen) on a persisted sketch table, for
-    // per-sub-step scaling reads across parallelism levels
-    if (args.headOption.contains("--band-breakdown")) {
-      import graft.operators.{DedupPipeline, DedupConfig, Lsh}
-      import graft.sources.SyntheticCorpus
-      import org.apache.spark.sql.functions._
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      val rows = args(1).toLong
-      val cores = args(2).toInt
-      val s = benchArmSession(cores)
-      val cfg = DedupConfig()
-      def time[T](label: String)(body: => T): T = {
-        val t = System.nanoTime()
-        val r = body
-        println(f"[band] $label%-16s ${(System.nanoTime() - t) / 1e9}%7.1f s")
-        r
-      }
-      val tagged = DedupPipeline.exactDedupWindowed(DedupPipeline.sketches(
-        SyntheticCorpus.corpus(s, rows, partitions = 64).toDF(), cfg)).persist()
-      tagged.write.format("noop").mode("overwrite").save()
-      val skReps = tagged.where(col("image_id") === col("rep"))
-      val banded = DedupPipeline.bandedAll(skReps, cfg).persist()
-      time("explode")(banded.write.format("noop").mode("overwrite").save())
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("bandKey"))
-      val kept = banded.withColumn("bn", count(lit(1)).over(w))
-        .where(col("bn") >= 2 && col("bn") <= col("cap"))
-      time("window-gate")(kept.select(col("id")).write.format("noop").mode("overwrite").save())
-      time("pairs-full")(Lsh.candidatePairsCapped(banded)
-        .write.format("noop").mode("overwrite").save())
-      banded.unpersist(); tagged.unpersist()
-      s.stop()
-      return
-    }
-    // dev probe: `runMain graft.Smoke --cluster-time rows cores [nopre]`
-    // times ONE full flagship clustering run in a fresh session at
-    // local[cores] with the Bench arm config (shuffle width 64, split
-    // 64) — the fast A/B harness for flagship plan changes; `nopre`
-    // disables the confirm prefilter
-    if (args.headOption.contains("--cluster-time")) {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      val rows = args(1).toLong
-      val cores = args(2).toInt
-      val cfg = graft.operators.DedupConfig(
-        confirmPrefilter = !args.contains("nopre"))
-      // optional bcast=<bytes> arg overrides the AQE broadcast budget
-      val bcast = args.collectFirst { case a if a.startsWith("bcast=") =>
-        a.stripPrefix("bcast=") }.getOrElse("33554432")
-      val s2 = benchArmSession(cores, bcast)
-      graft.sources.SyntheticCorpus.corpus(s2, 2000L).toDF()
-        .write.format("noop").mode("overwrite").save() // JIT warmup
-      val cache = new graft.operators.CacheHandle()
-      def gcMs: Long = {
-        import scala.jdk.CollectionConverters._
-        java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-          .asScala.map(_.getCollectionTime).sum
-      }
-      // task accounting: wall − taskSum/cores ≈ the serial residue the
-      // executor threads never see (driver scheduling, job setup, gaps)
-      val nTasks = new java.util.concurrent.atomic.AtomicLong
-      val taskMs = new java.util.concurrent.atomic.AtomicLong
-      val nJobs = new java.util.concurrent.atomic.AtomicLong
-      val gapMs = new java.util.concurrent.atomic.AtomicLong
-      val lastJobEnd = new java.util.concurrent.atomic.AtomicLong(-1L)
-      s2.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          nTasks.incrementAndGet()
-          if (e.taskMetrics != null) taskMs.addAndGet(e.taskMetrics.executorRunTime)
-        }
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          nJobs.incrementAndGet()
-          val prev = lastJobEnd.get
-          if (prev > 0) gapMs.addAndGet(math.max(0L, e.time - prev))
-        }
-        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          lastJobEnd.set(e.time)
-      })
-      val gc0 = gcMs
-      val t0 = System.nanoTime()
-      graft.operators.DedupPipeline.clusters(
-          graft.sources.SyntheticCorpus.corpus(s2, rows, partitions = 64).toDF(),
-          cfg, cache = cache)
-        .write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // listener events post asynchronously — drain before reading the
-      // counters (same as Bench.flagship) or trailing task/job events
-      // under-count exactly the loaded runs this probe diagnoses
-      try org.apache.spark.sql.graft.Bridge.drainListeners(s2.sparkContext, 10000)
-      catch { case _: Throwable => () }
-      println(f"[cluster-time] rows=$rows cores=$cores " +
-        f"prefilter=${cfg.confirmPrefilter} wall=$wall%.1f s " +
-        f"gc=${(gcMs - gc0) / 1000.0}%.1f s jobs=${nJobs.get} tasks=${nTasks.get} " +
-        f"taskSum=${taskMs.get / 1000.0}%.1f s busy=${taskMs.get / 1000.0 / cores / wall * 100}%.0f%% " +
-        f"interJobGap=${gapMs.get / 1000.0}%.1f s")
-      cache.release()
-      s2.stop()
-      return
-    }
-    // dev probe: `runMain graft.Smoke --confirm-breakdown [rows]` reports
-    // where the confirm stage's time goes: candidate count, the cap_lcs
-    // sentinel distribution (-1 cheap-confirmed / -2 irrelevant / >=0 the
-    // pairs that actually paid the suffix sort), and edge count
-    if (args.headOption.contains("--confirm-breakdown")) {
-      import graft.operators.{DedupPipeline, DedupConfig}
-      import graft.sources.SyntheticCorpus
-      import org.apache.spark.sql.functions.{col, lit, count, sum, when}
-      val rows = if (args.length > 1) args(1).toLong else 600000L
-      val cfg = DedupConfig()
-      val corpus = SyntheticCorpus.corpus(spark, rows, partitions = 64).toDF()
-      val tagged = DedupPipeline.exactDedupWindowed(
-        DedupPipeline.sketches(corpus, cfg)).persist()
-      val skReps = tagged.where(col("image_id") === col("rep"))
-      val cands = DedupPipeline.candidates(skReps, cfg).persist()
-      val nCands = cands.count()
-      val t0 = System.nanoTime()
-      val sc = DedupPipeline.scores(cands, skReps, cfg).persist()
-      val dist = sc.agg(
-        count(lit(1)).as("pairs"),
-        sum(when(col("cap_lcs") === -1, 1L).otherwise(0L)).as("cheap"),
-        sum(when(col("cap_lcs") === -2, 1L).otherwise(0L)).as("irrelevant"),
-        sum(when(col("cap_lcs") >= 0, 1L).otherwise(0L)).as("lcs_paid")).head()
-      val tScore = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val nEdges = sc.where(DedupPipeline.edgeRule(cfg)).count()
-      val tFilter = (System.nanoTime() - t1) / 1e9
-      println(f"[breakdown] rows=$rows cands=$nCands score=$tScore%.1fs " +
-        f"filter=$tFilter%.1fs edges=$nEdges")
-      println(s"[breakdown] cap_lcs: cheap=${dist.getLong(1)} " +
-        s"irrelevant=${dist.getLong(2)} lcs_paid=${dist.getLong(3)}")
-      sc.unpersist(); cands.unpersist(); tagged.unpersist()
-      spark.stop()
-      return
-    }
-    // dev probe: `runMain graft.Smoke --confirm-plan [rows]` prints the
-    // EXECUTED (post-AQE) plan of the confirm join, to check whether the
-    // merge hint leaves room for a runtime broadcast
-    if (args.headOption.contains("--confirm-plan")) {
-      import graft.operators.{DedupPipeline, DedupConfig}
-      import graft.sources.SyntheticCorpus
-      val rows = if (args.length > 1) args(1).toLong else 100000L
-      val cfg = DedupConfig()
-      val corpus = SyntheticCorpus.corpus(spark, rows, partitions = 16).toDF()
-      val tagged = DedupPipeline.exactDedupWindowed(
-        DedupPipeline.sketches(corpus, cfg)).persist()
-      val skReps = tagged.where(org.apache.spark.sql.functions.col("image_id") ===
-        org.apache.spark.sql.functions.col("rep"))
-      val cands = DedupPipeline.candidates(skReps, cfg)
-      val confirmed = DedupPipeline.confirm(cands, skReps, cfg)
-      val t1 = System.nanoTime()
-      // collect() executes THIS dataset's own QueryExecution, so the
-      // printed adaptive plan is the FINAL one (count() would spawn a
-      // separate execution and leave this plan un-finalized)
-      val n = confirmed.collect().length
-      println(f"[probe] confirm rows=$n in ${(System.nanoTime() - t1) / 1e9}%.1f s")
-      println(confirmed.queryExecution.executedPlan.toString
-        .linesIterator.filter(l => l.contains("Join") || l.contains("Sort ") ||
-          l.contains("Exchange") || l.contains("AdaptiveSparkPlan")).mkString("\n"))
-      spark.stop()
-      return
-    }
     val t0 = System.nanoTime()
     // `runMain graft.Smoke <queryName> [sfDir]` smokes ONE registered
     // query; no args = the flagship entry (the driver's t1 smoke)

@@ -26,38 +26,32 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
    * In-loop shuffle width. The loop runs with AQE off (see below), so the
    * width must be picked explicitly — data-adaptively, not clamped:
    *
-   *  - `explicit > 0` (caller override) always wins;
-   *  - otherwise scale with the edge count (`ceil(edges/edgesPerPartition)`)
-   *    so a 100-TB edge set runs as wide as the session allows, bounded by
+   *  - scale with the edge count (`ceil(edges/edgesPerPartition)`) so a
+   *    100-TB edge set runs as wide as the session allows, bounded by
    *    the session's `spark.sql.shuffle.partitions` as the ceiling (a
    *    caller that raised it gets the raise honored);
    *  - floor of `min(8, ceiling)`: tiny edge sets keep the small fixed
    *    width that makes each round one pipelined job locally (the round-2
    *    serial-term fix) without ever exceeding the session value.
    *
-   * Pure function — unit-tested in CcSpec.
+   * Pure function — unit-tested in PipelineSpec.
    */
-  def chooseLoopWidth(edgeCount: Long, explicit: Int, sessionParts: Int,
+  def chooseLoopWidth(edgeCount: Long, sessionParts: Int,
       edgesPerPartition: Long): Int = {
-    if (explicit > 0) explicit
-    else {
-      val ceilingParts = math.max(1, sessionParts)
-      val byData = math.ceil(edgeCount.toDouble / math.max(1L, edgesPerPartition)).toLong
-      val floorParts = math.min(8, ceilingParts)
-      math.max(floorParts.toLong, math.min(ceilingParts.toLong, byData)).toInt
-    }
+    val ceilingParts = math.max(1, sessionParts)
+    val byData = math.ceil(edgeCount.toDouble / math.max(1L, edgesPerPartition)).toLong
+    val floorParts = math.min(8, ceilingParts)
+    math.max(floorParts.toLong, math.min(ceilingParts.toLong, byData)).toInt
   }
 
   /**
    * @param edges two Long columns `src`, `dst` (undirected, dups ok).
-   * @param loopShufflePartitions explicit in-loop shuffle width (0 = size
-   *        from the edge count via [[chooseLoopWidth]]).
-   * @param edgesPerPartition target edges per reducer when auto-sizing.
+   * @param edgesPerPartition target edges per reducer when sizing the
+   *        in-loop shuffle width via [[chooseLoopWidth]].
    * @return DataFrame (id: Long, component: Long) — component = min node
    *         id reachable; covers only nodes appearing in `edges`.
    */
   def run(edges: DataFrame, maxIter: Int = 25,
-      loopShufflePartitions: Int = 0,
       edgesPerPartition: Long = 2000000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -66,7 +60,7 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
     // it (sketching, banding, confirm at corpus scale) — it must run
     // under the session's own parallelism and AQE settings. The edge
     // count rides on the SAME job as an observed metric (no separate
-    // count action), and is only requested when auto-sizing needs it.
+    // count action).
     val obs0 = org.apache.spark.sql.Observation()
     var e = edges.select($"src", $"dst").where($"src" =!= $"dst")
       .select(least($"src", $"dst").as("src"), greatest($"src", $"dst").as("dst"))
@@ -88,12 +82,8 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
     val aqeBefore = conf.get("spark.sql.adaptive.enabled", "true")
     val partsBefore = conf.get("spark.sql.shuffle.partitions", "200")
     val sessionParts = scala.util.Try(partsBefore.trim.toInt).getOrElse(200)
-    // explicit override short-circuits: the edge count is irrelevant then,
-    // so don't even read the observed metric (ADVICE r3). Otherwise it
-    // came for free with the checkpoint job above.
-    val loopWidth = if (loopShufflePartitions > 0) loopShufflePartitions
-      else chooseLoopWidth(obs0.get("edges").asInstanceOf[Long], 0,
-        sessionParts, edgesPerPartition)
+    val loopWidth = chooseLoopWidth(obs0.get("edges").asInstanceOf[Long],
+      sessionParts, edgesPerPartition)
     logWarning(s"[cc] loop shuffle width=$loopWidth (session=$partsBefore)")
     conf.set("spark.sql.adaptive.enabled", "false")
     conf.set("spark.sql.shuffle.partitions", loopWidth.toString)

@@ -64,35 +64,8 @@ final case class DedupConfig(
     // confirm-stage work and memory on pathological captions; any real
     // splice/containment decision resolves well within it
     lcsMaxChars: Int = 4096,
-    // the slim coincidence-reject pass in front of the confirm join
-    // (see [[DedupPipeline.prefilter]]); exposed as a dial for A/B
-    // measurement — the edge set is identical either way
-    confirmPrefilter: Boolean = true,
     ccMaxIter: Int = 25)
 
-/**
- * The flagship operator: near-duplicate detection + clustering over the
- * `(image_id, bytes, w, h, fmt, caption, phash)` table.
- *
- * Stage graph (shuffle boundaries marked ⇄):
- *
- *   scan → sketch (narrow; bytes projected away immediately after)
- *        ⇄ exact-dedup pre-aggregation (groupBy exact_key — removes
- *          exact-dup mass BEFORE LSH: the worst bucket skew becomes a
- *          pre-aggregation, SURVEY.md §7)
- *        → band explode (narrow)
- *        ⇄ bucket grouping → in-bucket pair generation (capped, counted)
- *        ⇄ pair dedup
- *        ⇄ confirm join (pairs × sketches × sketches, AQE skew-join)
- *        → edge filter (narrow)
- *        ⇄ connected components (large-star/small-star, O(log n) rounds)
- *        ⇄ representative relabel
- *
- * Four candidate sources are unioned, mirroring the reference's
- * multi-sketch records (`Signature.signatures`, one per ksize×moltype —
- * here one per modality): image MinHash bands, caption MinHash bands,
- * phash bit-blocks, caption SimHash bit-blocks.
- */
 /** Tracks DataFrames persisted while building a pipeline so callers can
   * release executor cache once the result is materialized (a long-lived
   * session running many pipelines would otherwise leak cache). */
@@ -102,6 +75,30 @@ final class CacheHandle {
   def release(): Unit = { dfs.foreach(_.unpersist(false)); dfs = Nil }
 }
 
+/**
+ * The flagship operator: near-duplicate detection + clustering over the
+ * `(image_id, bytes, w, h, fmt, caption, phash)` table.
+ *
+ * Stage graph (shuffle boundaries marked ⇄):
+ *
+ *   scan → sketch (narrow; bytes projected away immediately after)
+ *        ⇄ exact-dedup window (partitionBy exact_key — removes
+ *          exact-dup mass BEFORE LSH: the worst bucket skew becomes a
+ *          pre-aggregation, SURVEY.md §7)
+ *        → band explode (narrow)
+ *        ⇄ bucket grouping → in-bucket pair generation (capped, counted)
+ *        ⇄ pair dedup
+ *        ⇄ staged confirm join (slim image/fingerprint side, the
+ *          corroboration reject, then the caption side for survivors)
+ *        → edge filter (narrow)
+ *        ⇄ connected components (large-star/small-star, O(log n) rounds)
+ *        ⇄ representative relabel
+ *
+ * Five candidate sources are unioned, mirroring the reference's
+ * multi-sketch records (`Signature.signatures`, one per ksize×moltype —
+ * here one per modality): image MinHash bands, caption MinHash bands,
+ * phash bit-blocks, caption SimHash bit-blocks, and exact-phash groups.
+ */
 object DedupPipeline {
 
   /** Per-row sketching; `bytes` is projected away here and never shuffled.
@@ -124,19 +121,6 @@ object DedupPipeline {
         coalesce(md5(encode(col("caption"), "UTF-8")), lit("nc")))).as("exact_key"))
   }
 
-  /** Exact-duplicate pre-aggregation: representative per exact_key +
-    * member→representative edges. Returns (reps, exactEdges).
-    * Kept for the checkpointed variant; [[clusters]] uses the single-
-    * shuffle window formulation below. */
-  def exactDedup(sk: DataFrame): (DataFrame, DataFrame) = {
-    val reps = sk.groupBy(col("exact_key")).agg(min(col("image_id")).as("rep"))
-    val exactEdges = sk.select(col("exact_key"), col("image_id"))
-      .join(reps, "exact_key")
-      .where(col("image_id") =!= col("rep"))
-      .select(col("image_id").as("a"), col("rep").as("b"))
-    (reps, exactEdges)
-  }
-
   /** Single-shuffle exact dedup: one window pass over `exact_key` tags
     * every row with its group representative — replaces groupBy +
     * broadcast-back + semi-join (3 shuffles → 1). */
@@ -151,8 +135,8 @@ object DedupPipeline {
 
   /** The exploded (id, bandKey, cap) band table feeding the shared bucket
     * shuffle — all five candidate sources union'd. Split out of
-    * [[candidates]] so the band-stage probes can time band computation
-    * and bucket gating separately. */
+    * [[candidates]] so bucket accounting ([[Lsh.bucketStats]]) reads the
+    * same table the pair generation does. */
   def bandedAll(skReps: DataFrame, cfg: DedupConfig): DataFrame = {
     val cap = Lsh.explodeBands(
       skReps.select(col("vid").as("id"),
@@ -200,8 +184,9 @@ object DedupPipeline {
   }
 
   /**
-   * Per-rule edge predicates over a [[scores]] frame — split out so the
-   * spec layer can attribute each caught pair to the rule that caught it.
+   * Per-rule edge predicates over a [[scores]] or [[scoresAllRules]]
+   * frame — split out so the spec layer can attribute each caught pair
+   * to the rule that caught it.
    *
    * SCALE PRINCIPLE (round-5 redesign): no single weak modality may merge
    * on its own. At 10⁵ reps the complete candidate set (post-Manku keys)
@@ -227,12 +212,13 @@ object DedupPipeline {
   def edgeRules(cfg: DedupConfig): Seq[(String, Column)] = {
     val imgAny = col("img_sim") > 0.0 // >= 1 shared pixel shingle of 128
     val phNear = col("ph_ham") <= cfg.phashMaxHamming
+    val corrob = corroborated(col("img_sim"), col("ph_ham"), cfg) // imgAny || phNear
     Seq(
       "img_minhash" -> (col("img_sim") >= cfg.tauImg),
-      "cap_minhash" -> (col("cap_sim") >= cfg.tauCap && (imgAny || phNear)),
+      "cap_minhash" -> (col("cap_sim") >= cfg.tauCap && corrob),
       "phash_corrob" -> (phNear && col("cap_sim") >= 0.3 && imgAny),
       "simhash_corrob" -> (col("sh_ham") <= cfg.simhashMaxHamming &&
-        col("cap_sim") >= cfg.tauCapCorroborated && (imgAny || phNear)),
+        col("cap_sim") >= cfg.tauCapCorroborated && corrob),
       // the suffix-array pass has two shapes with DIFFERENT floors:
       //  - containment (capsub): lcs >= substringMinLen is only evidence
       //    together with near-total sketch containment + image support —
@@ -254,36 +240,20 @@ object DedupPipeline {
   def edgeRule(cfg: DedupConfig): Column =
     edgeRules(cfg).map(_._2).reduce(_ || _)
 
-  /** Candidate scoring: reference-semantics similarity/containment plus
-    * fingerprint distances and the suffix-array substring pass, one row
-    * per candidate pair. [[confirm]] = scores.where(edgeRule).
-    *
-    * `lcsAll = false` (the pipeline default) short-circuits the
-    * suffix-array kernel: a pair already confirmed by one of the CHEAP
-    * rules (sketch jaccard / fingerprint hamming — vectorized per-pair
-    * O(num) work) is an edge no matter what `cap_lcs` says, so the
-    * O(len·log len) per-pair suffix sort is skipped and `cap_lcs` carries
-    * the sentinel -1 ("not computed"). The emitted EDGE SET is identical
-    * either way; at scale the majority of true-dup candidates confirm
-    * cheap, so the expensive kernel runs only on the minority that needs
-    * it. The rule-attribution spec passes `lcsAll = true` to score every
-    * rule on every pair. */
-  def scores(cands: DataFrame, sk: DataFrame, cfg: DedupConfig,
-      lcsAll: Boolean = false): DataFrame =
-    if (lcsAll || !cfg.confirmPrefilter) scoresMonolithic(cands, sk, cfg, lcsAll)
-    else scoresStaged(cands, sk, cfg)
-
   /**
-   * The pipeline-mode confirm shape: STAGED scoring. Stage 1 joins the
-   * candidates against a slim `(img_mins, phash, cap_simhash)`
-   * projection (~40% of the full payload bytes) and computes the
-   * image/fingerprint scores; the coincidence-reject gate runs right
-   * there — `img_sim > 0 OR ph_ham <= phashMaxHamming` is the
-   * corroboration floor EVERY [[edgeRules]] entry requires (see
-   * [[prefilter]] for the rule-by-rule argument), so pairs failing it
-   * are dropped before the caption sketches and the normalized caption
-   * STRING ever join. Stage 2 attaches the caption payload to the
-   * survivors only and computes the caption scores + the gated LCS.
+   * Candidate scoring, the pipeline's confirm shape: reference-semantics
+   * similarity/containment plus fingerprint distances and the gated
+   * suffix-array substring pass, one row per candidate pair that passes
+   * [[corroborated]]. [[confirm]] = scores.where(edgeRule).
+   *
+   * STAGED: stage 1 joins the candidates against a slim
+   * `(img_mins, phash, cap_simhash)` projection (~40% of the full payload
+   * bytes) and computes the image/fingerprint scores; the coincidence-
+   * reject gate runs right there — [[corroborated]] is the floor EVERY
+   * [[edgeRules]] entry requires, so pairs failing it are dropped before
+   * the caption sketches and the normalized caption STRING ever join.
+   * Stage 2 attaches the caption payload to the survivors only and
+   * computes the caption scores + the gated LCS.
    *
    * Why staged: fingerprint joint keys admit pairwise-coincidence
    * candidates in bulk (1.53M of 1.56M candidates at 600k rows), and a
@@ -294,11 +264,22 @@ object DedupPipeline {
    * exactly the shape that survives 10¹² rows (nothing wide ever
    * shuffles for a pair no rule could confirm).
    *
-   * The emitted EDGE SET is identical to the monolithic shape
-   * (spec-asserted); dropped pairs are provably non-edges.
+   * Join strategy is left to AQE's RUNTIME statistics, not hinted:
+   * sessions disable the STATIC broadcast planner (UDF-derived size
+   * estimates are garbage), so at validation scale AQE broadcasts the
+   * small candidate side from true stage sizes, and at scale it keeps
+   * the spill-safe sort-merge join. A merge hint would PIN sort-merge
+   * (AQE honors hints) even when the candidate side is a few MB.
+   *
+   * The suffix-array kernel is gated twice, and `cap_lcs` carries a
+   * sentinel where it was skipped: -1 = a CHEAP rule (sketch jaccard /
+   * fingerprint hamming — vectorized per-pair O(num) work) already
+   * confirms the pair, so it is an edge whatever `cap_lcs` says; -2 =
+   * [[lcsRelevance]] fails, so no `cap_lcs` value could make it an edge.
+   * Only the remaining pairs pay the O(len·log len) per-pair suffix sort.
+   * The emitted EDGE SET equals [[scoresAllRules]]'s (spec-asserted).
    */
-  private def scoresStaged(cands: DataFrame, sk: DataFrame,
-      cfg: DedupConfig): DataFrame = {
+  def scores(cands: DataFrame, sk: DataFrame, cfg: DedupConfig): DataFrame = {
     val sa = sk.select(col("vid").as("a"), col("img_mins").as("img_a"),
       col("phash").as("ph_a"), col("cap_simhash").as("sh_a"))
     val sb = sk.select(col("vid").as("b"), col("img_mins").as("img_b"),
@@ -307,7 +288,7 @@ object DedupPipeline {
       .withColumn("img_sim", jaccard(col("img_a"), col("img_b"), cfg.imgSketch))
       .withColumn("ph_ham", hamming64(col("ph_a"), col("ph_b")))
       .withColumn("sh_ham", hamming64(col("sh_a"), col("sh_b")))
-      .where(col("img_sim") > 0.0 || col("ph_ham") <= cfg.phashMaxHamming)
+      .where(corroborated(col("img_sim"), col("ph_ham"), cfg))
       .select(col("a"), col("b"), col("img_sim"), col("ph_ham"), col("sh_ham"))
     val ca = sk.select(col("vid").as("a"), col("cap_mins").as("cap_a"),
       col("cap_norm").as("cn_a"))
@@ -318,9 +299,8 @@ object DedupPipeline {
       .withColumn("cap_contain",
         greatest(containment(col("cap_a"), col("cap_b")),
           containment(col("cap_b"), col("cap_a"))))
-    val lcsExpr = captionLcs(
-      substring(col("cn_a"), 1, cfg.lcsMaxChars),
-      substring(col("cn_b"), 1, cfg.lcsMaxChars))
+    // suffix_lcs is the only rule that reads cap_lcs: the OR of the
+    // others is the cheap-confirm gate
     val cheapConfirmed = edgeRules(cfg)
       .collect { case (name, c) if name != "suffix_lcs" => c }
       .reduce(_ || _)
@@ -328,29 +308,23 @@ object DedupPipeline {
       .withColumn("cap_lcs",
         when(cheapConfirmed, lit(-1))
           .when(!lcsRelevance(cfg), lit(-2))
-          .otherwise(lcsExpr))
+          .otherwise(capLcs(cfg)))
       .withColumn("substr_hit", col("cap_lcs") >= cfg.substringMinLen)
   }
 
-  private def scoresMonolithic(cands: DataFrame, sk: DataFrame, cfg: DedupConfig,
-      lcsAll: Boolean): DataFrame = {
+  /** Ungated reference scoring: every candidate pair, every score, the
+    * suffix-array kernel run on every pair (no sentinels). The specs use
+    * it as ground truth for [[scores]]' edge set and to attribute each
+    * caught pair to every rule that fires on it. Same columns as
+    * [[scores]] plus the joined sketch payload. */
+  def scoresAllRules(cands: DataFrame, sk: DataFrame, cfg: DedupConfig): DataFrame = {
     val a = sk.select(
       col("vid").as("a"), col("cap_mins").as("cap_a"), col("img_mins").as("img_a"),
       col("cap_simhash").as("sh_a"), col("phash").as("ph_a"), col("cap_norm").as("cn_a"))
     val b = sk.select(
       col("vid").as("b"), col("cap_mins").as("cap_b"), col("img_mins").as("img_b"),
       col("cap_simhash").as("sh_b"), col("phash").as("ph_b"), col("cap_norm").as("cn_b"))
-    // join strategy is left to AQE's RUNTIME statistics, not hinted:
-    // sessions disable the STATIC broadcast planner (UDF-derived size
-    // estimates are garbage — the round-2 maxResultSize crash), so at
-    // validation scale AQE converts to a broadcast of the small candidate
-    // side from true stage sizes (no shuffle/sort of the wide sketch
-    // rows), and at 10^12-row scale — candidate set far beyond any
-    // broadcast threshold — it keeps the spill-safe sort-merge join. The
-    // earlier merge hint PINNED sort-merge: AQE honors hints, so both
-    // confirm joins shuffled AND sorted the wide sketch table twice even
-    // when the candidate side was a few MB (round-4 probe, 2.6x slower).
-    val scored = cands.join(a, "a").join(b, "b")
+    cands.join(a, "a").join(b, "b")
       .withColumn("img_sim", jaccard(col("img_a"), col("img_b"), cfg.imgSketch))
       .withColumn("cap_sim", jaccard(col("cap_a"), col("cap_b"), cfg.capSketch))
       .withColumn("ph_ham", hamming64(col("ph_a"), col("ph_b")))
@@ -358,40 +332,34 @@ object DedupPipeline {
       .withColumn("cap_contain",
         greatest(containment(col("cap_a"), col("cap_b")),
           containment(col("cap_b"), col("cap_a"))))
-      // exact-substring pass (north rule): generalized-suffix-array
-      // longest common substring. Containment of the shorter caption is
-      // the special case lcs == min(len); unlike contains(), this also
-      // catches head/tail caption rewrites that keep a long shared chunk.
-      // Inputs are capped at lcsMaxChars (pathological megabyte captions
-      // must not blow the per-pair suffix sort; decisions resolve far
-      // below the cap)
-    val lcsExpr = captionLcs(
-      substring(col("cn_a"), 1, cfg.lcsMaxChars),
-      substring(col("cn_b"), 1, cfg.lcsMaxChars))
-    // cheap-rule disjunction (everything but suffix_lcs — the only rule
-    // that reads cap_lcs) gates the expensive kernel; -1 = "already an
-    // edge, not computed". A second gate skips pairs where the kernel
-    // CANNOT MATTER: suffix_lcs only fires when its non-lcs
-    // corroborations hold ([[lcsRelevance]] — the rule with the lcs
-    // terms removed), so a pair failing them keeps the same edge status
-    // whatever cap_lcs would be; -2 = "irrelevant, not computed". This
-    // is the gate that matters at scale: fingerprint-coincidence
-    // candidates (img_sim = 0 junk) were paying the O(len·log len)
-    // suffix sort precisely because they confirmed nothing cheap —
-    // 36 µs/pair × millions. The emitted EDGE SET is provably identical
-    // under both gates; the rule-attribution spec passes `lcsAll = true`
-    // to score every rule on every pair.
-    val cheapConfirmed = edgeRules(cfg)
-      .collect { case (name, c) if name != "suffix_lcs" => c }
-      .reduce(_ || _)
-    scored
-      .withColumn("cap_lcs",
-        if (lcsAll) lcsExpr
-        else when(cheapConfirmed, lit(-1))
-          .when(!lcsRelevance(cfg), lit(-2))
-          .otherwise(lcsExpr))
+      .withColumn("cap_lcs", capLcs(cfg))
       .withColumn("substr_hit", col("cap_lcs") >= cfg.substringMinLen)
   }
+
+  /** Exact-substring pass (north rule): generalized-suffix-array longest
+    * common substring of the normalized captions. Containment of the
+    * shorter caption is the special case lcs == min(len); unlike
+    * contains(), this also catches head/tail caption rewrites that keep a
+    * long shared chunk. Inputs are capped at lcsMaxChars (pathological
+    * megabyte captions must not blow the per-pair suffix sort; decisions
+    * resolve far below the cap). */
+  private def capLcs(cfg: DedupConfig): Column =
+    captionLcs(
+      substring(col("cn_a"), 1, cfg.lcsMaxChars),
+      substring(col("cn_b"), 1, cfg.lcsMaxChars))
+
+  /**
+   * The weakest corroboration EVERY [[edgeRules]] entry requires:
+   * `img_sim > 0 OR ph_ham <= phashMaxHamming` (check each rule:
+   * img_minhash implies img_sim ≥ τ > 0; cap_minhash, simhash_corrob and
+   * suffix_lcs's splice branch carry the disjunction explicitly;
+   * phash_corrob and suffix_lcs's containment branch each require one
+   * side of it). A pair failing it is provably not an edge, so both
+   * [[scores]] and [[prefilter]] drop it from `(img_mins, phash)` alone.
+   * Edit together with [[edgeRules]].
+   */
+  private def corroborated(imgSim: Column, phHam: Column, cfg: DedupConfig): Column =
+    imgSim > 0.0 || phHam <= cfg.phashMaxHamming
 
   /** The suffix_lcs rule's NON-lcs corroborations (both branches, lcs
     * terms removed): when false, no cap_lcs value can make the pair an
@@ -432,29 +400,17 @@ object DedupPipeline {
   }
 
   /**
-   * Slim candidate reject pass — the shuffle-mass gate in front of the
-   * full confirm join. Every [[edgeRules]] entry requires at least the
-   * weakest corroboration `img_sim > 0 OR ph_ham <= phashMaxHamming`
-   * (check each rule: img_minhash implies img_sim ≥ τ > 0; cap_minhash,
-   * simhash_corrob and suffix_lcs's splice branch carry the disjunction
-   * explicitly; phash_corrob and suffix_lcs's containment branch each
-   * require one side of it) — so a pair failing BOTH can be dropped
-   * from just `(img_mins, phash)`, before the caption sketches, the
-   * simhash, and the normalized caption STRING ever shuffle for it.
+   * The slim candidate reject pass on its own: the candidates that pass
+   * [[corroborated]], judged from just `(img_mins, phash)`. [[scores]]
+   * applies the same predicate inside its first join; this standalone
+   * form lets a caller count what the reject drops.
    *
-   * Why this matters at scale: fingerprint joint keys admit
+   * Why the reject matters at scale: fingerprint joint keys admit
    * pairwise-coincidence candidates in bulk (measured at 600k rows:
    * 1.53M of 1.56M candidates are junk with zero shared pixel shingles
-   * and a far phash), and a candidate side that large is past any
-   * broadcast threshold — the full confirm join degrades to sort-merge,
-   * i.e. the WIDE sketch payload (~2.5 KB/row) gets shuffled and sorted
-   * per junk pair. The slim pass sorts ~40% of the bytes, and the
-   * surviving candidate set is near edge density, small enough that AQE
-   * runtime-broadcasts it in the full join at any realistic scale-out.
-   *
-   * INVARIANT (spec-asserted): the keep condition is the OR of the
-   * corroboration terms shared by every rule in [[edgeRules]] — edit
-   * them together.
+   * and a far phash). Rejecting them on ~40% of the payload bytes keeps
+   * the caption sketches and the normalized caption STRING from ever
+   * shuffling for a pair no rule could confirm.
    */
   def prefilter(cands: DataFrame, sk: DataFrame, cfg: DedupConfig): DataFrame = {
     val a = sk.select(col("vid").as("a"),
@@ -462,16 +418,12 @@ object DedupPipeline {
     val b = sk.select(col("vid").as("b"),
       col("img_mins").as("pimg_b"), col("phash").as("pph_b"))
     cands.join(a, "a").join(b, "b")
-      .where(jaccard(col("pimg_a"), col("pimg_b"), cfg.imgSketch) > 0.0 ||
-        hamming64(col("pph_a"), col("pph_b")) <= cfg.phashMaxHamming)
+      .where(corroborated(jaccard(col("pimg_a"), col("pimg_b"), cfg.imgSketch),
+        hamming64(col("pph_a"), col("pph_b")), cfg))
       .select(col("a"), col("b"))
   }
 
-  /** Confirm candidates with reference-semantics scores; emit edges.
-    * Pipeline mode uses the staged shape ([[scoresStaged]]): the slim
-    * coincidence-reject runs inside the first scoring join, and only
-    * the survivors see the caption payload. The edge set is provably
-    * identical to the monolithic shape (spec-asserted). */
+  /** Confirm candidates with the staged [[scores]]; emit edges. */
   def confirm(cands: DataFrame, sk: DataFrame, cfg: DedupConfig): DataFrame =
     scores(cands, sk, cfg).where(edgeRule(cfg))
       .select(col("a"), col("b"), col("img_sim"), col("cap_sim"),

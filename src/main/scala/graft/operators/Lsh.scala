@@ -30,9 +30,11 @@ import org.apache.spark.sql.functions._
 object Lsh {
 
   /**
-   * @param banded DataFrame with columns (id: String, bandKey: Long) —
-   *               one row per (row, band) from `explode`d band arrays.
-   * @return pairs (a, b) with a < b (string order), distinct.
+   * @param banded DataFrame with columns (id, bandKey: Long) — one row per
+   *               (row, band) from `explode`d band arrays. The flagship
+   *               passes the Long `vid`; any orderable id type works.
+   * @return pairs (a, b) with a < b in the id type's natural order
+   *         (numeric for Long ids), distinct.
    */
   def candidatePairs(banded: DataFrame, maxBucket: Int = 64): DataFrame =
     candidatePairsCapped(banded.withColumn("cap", lit(maxBucket)))

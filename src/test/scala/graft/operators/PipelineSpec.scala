@@ -117,18 +117,15 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("cc loop width: explicit override wins; auto honors the session ceiling") {
-    // explicit override always wins
-    assert(ConnectedComponents.chooseLoopWidth(10L, explicit = 123,
-      sessionParts = 4, edgesPerPartition = 2000000L) === 123)
     // tiny edge set: keep the small fixed width (one pipelined job/round)
-    assert(ConnectedComponents.chooseLoopWidth(100L, 0, 32, 2000000L) === 8)
+    assert(ConnectedComponents.chooseLoopWidth(100L, 32, 2000000L) === 8)
     // big edge set: width grows with the data, up to the session ceiling —
     // the round-2 clamp bug made this impossible (min(8, 2000) = 8)
-    assert(ConnectedComponents.chooseLoopWidth(10000000000L, 0, 2000, 2000000L) === 2000)
+    assert(ConnectedComponents.chooseLoopWidth(10000000000L, 2000, 2000000L) === 2000)
     // session ceiling below the floor: never exceed the session value
-    assert(ConnectedComponents.chooseLoopWidth(10000000000L, 0, 4, 2000000L) === 4)
+    assert(ConnectedComponents.chooseLoopWidth(10000000000L, 4, 2000000L) === 4)
     // mid-size: proportional between floor and ceiling
-    assert(ConnectedComponents.chooseLoopWidth(100000000L, 0, 2000, 2000000L) === 50)
+    assert(ConnectedComponents.chooseLoopWidth(100000000L, 2000, 2000000L) === 50)
   }
 
   test("cc loop runs wider than 8 when the session raises shuffle partitions") {
@@ -180,10 +177,10 @@ class PipelineSpec extends AnyFunSuite {
       .select(xxhash64($"dup_id").as("a"), xxhash64($"src_id").as("b"))
     val nPairs = gt.count()
     assert(nPairs > 0, "corpus must contain capedit pairs")
-    // lcsAll: attribution needs EVERY rule scored on every pair — the
-    // pipeline default short-circuits the LCS kernel on cheap-confirmed
+    // scoresAllRules: attribution needs EVERY rule scored on every pair —
+    // the pipeline's scores short-circuits the LCS kernel on cheap-confirmed
     // pairs (edge set identical; asserted by the short-circuit test)
-    val scored = DedupPipeline.scores(gt, sk, cfg, lcsAll = true)
+    val scored = DedupPipeline.scoresAllRules(gt, sk, cfg)
     val rules = DedupPipeline.edgeRules(cfg)
     val agg = scored.agg(
       count(lit(1)).as("n"),
@@ -217,7 +214,8 @@ class PipelineSpec extends AnyFunSuite {
     val skReps = tagged.where($"image_id" === $"rep")
     val cands = DedupPipeline.candidates(skReps, cfg).cache()
     def edgeSet(all: Boolean): Set[(Long, Long)] =
-      DedupPipeline.scores(cands, skReps, cfg, lcsAll = all)
+      (if (all) DedupPipeline.scoresAllRules(cands, skReps, cfg)
+       else DedupPipeline.scores(cands, skReps, cfg))
         .where(DedupPipeline.edgeRule(cfg))
         .select($"a", $"b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val full = edgeSet(true)
@@ -226,10 +224,9 @@ class PipelineSpec extends AnyFunSuite {
     assert(short === full, "short-circuit changed the confirmed edge set")
     // both gates are load-bearing: cheap-confirmed pairs skip the kernel
     // (-1), and pairs where no lcs value could matter skip it too (-2).
-    // Pinned to the monolithic shape (confirmPrefilter = false) — the
-    // staged shape drops most -2 candidates before the kernel gate
-    val bySentinel = DedupPipeline.scores(cands, skReps,
-        cfg.copy(confirmPrefilter = false))
+    // The staged shape drops most -2 candidates before the kernel gate,
+    // but enough corroborated pairs still reach it for both to fire
+    val bySentinel = DedupPipeline.scores(cands, skReps, cfg)
       .groupBy($"cap_lcs" === -1, $"cap_lcs" === -2).count()
       .collect().map(r => (r.getBoolean(0), r.getBoolean(1)) -> r.getLong(2)).toMap
     assert(bySentinel.getOrElse((true, false), 0L) > 0,
@@ -249,9 +246,9 @@ class PipelineSpec extends AnyFunSuite {
     val cands = DedupPipeline.candidates(skReps, cfg).cache()
     val nCands = cands.count()
     // the slim reject may only drop pairs no rule could confirm: edges
-    // from the COMPLETE scoring of every candidate (lcsAll — the
-    // monolithic all-pairs shape) must survive the staged path exactly
-    val unfiltered = DedupPipeline.scores(cands, skReps, cfg, lcsAll = true)
+    // from the COMPLETE scoring of every candidate (scoresAllRules — the
+    // ungated all-pairs shape) must survive the staged path exactly
+    val unfiltered = DedupPipeline.scoresAllRules(cands, skReps, cfg)
       .where(DedupPipeline.edgeRule(cfg))
       .select($"a", $"b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val kept = DedupPipeline.prefilter(cands, skReps, cfg)
