@@ -20,13 +20,6 @@ import graft.sources.ImageCodec
  */
 object GraftFunctions {
 
-  /** murmur3_x64_128 low-64 of a string, reference `_hash_murmur`
-    * (`/root/reference/src/lib.rs:33-35`). */
-  def murmur64(c: Column, seed: Long = 42L): Column = {
-    val f = udf((s: String) => if (s == null) null else java.lang.Long.valueOf(Murmur3.hash64(s, seed)))
-    f(c)
-  }
-
   private val emptyMins: Column = typedlit(Array.emptyLongArray)
 
   /** Caption MinHash sketch: normalized char-k-shingles → bottom-num mins.

@@ -1,14 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.{MinHash, SketchConfig}
+import graft.core.SketchConfig
+import graft.functions.GraftFunctions
 
 /**
  * Linear-index search — the Spark re-expression of `LinearIndex::find`
  * (`/root/reference/src/index/linear.rs:25-45`): the query sketch is
- * broadcast (closure-captured: a few KB) and every DB row is scored with
- * the reference predicates, a narrow filter over the sketch table:
+ * a plan literal (a few KB) and every DB row is scored with the
+ * reference predicates by the codegen'd `GraftFunctions` kernels, a
+ * narrow filter over the sketch table:
  *
  *  - similarity (`search_minhashes`, `/root/reference/src/index/search.rs:3-5`):
  *    `node.similarity(query) > threshold` — strict `>`, combined-denominator
@@ -25,28 +27,19 @@ object SignatureSearch {
 
   /** A db row with a NULL mins column is a malformed sketch the loaders
     * reject (FAILFAST) — if one reaches a score kernel anyway, fail with
-    * a diagnosis instead of an executor NPE mid-stage. */
-  private def requireMins(mins: Seq[Long]): Array[Long] = {
-    if (mins == null)
-      throw new IllegalArgumentException(
-        "sketch row with null mins reached the score kernel (malformed signature input)")
-    mins.toArray
-  }
+    * a diagnosis instead of scoring it null. */
+  private def requireMins(score: Column): Column =
+    when(col("mins").isNull, raise_error(lit(
+      "sketch row with null mins reached the score kernel (malformed signature input)")))
+      .otherwise(score)
 
   def linear(db: DataFrame, queryMins: Array[Long], cfg: SketchConfig,
       threshold: Double, mode: String,
       queryAbunds: Array[Long] = null): DataFrame = {
-    val localCfg = cfg
-    val q = queryMins
+    val q = typedlit(queryMins)
     val score = mode match {
-      case "similarity" =>
-        udf((mins: Seq[Long]) => MinHash.compare(requireMins(mins), q, localCfg))
-      case "containment" =>
-        udf((mins: Seq[Long]) => {
-          val m = requireMins(mins)
-          if (m.isEmpty) 0.0
-          else MinHash.countCommon(m, q).toDouble / m.length
-        })
+      case "similarity" => GraftFunctions.jaccard(col("mins"), q, cfg)
+      case "containment" => GraftFunctions.containment(col("mins"), q)
       case "abundance" =>
         // published-sourmash `similarity(ignore_abundance=False)` =
         // angular similarity (1 − 2·acos(ρ)/π, published sourmash
@@ -57,8 +50,8 @@ object SignatureSearch {
         // semantics. A sketch without stored abundances scores as
         // flat counts of 1 (the sketch IS its support set then).
         val qa = if (queryAbunds != null) queryAbunds
-          else Array.fill(q.length)(1L)
-        require(qa.length == q.length, "queryAbunds/queryMins length mismatch")
+          else Array.fill(queryMins.length)(1L)
+        require(qa.length == queryMins.length, "queryAbunds/queryMins length mismatch")
         // The MinHash/finch surface names the multiplicity column `abunds`
         // (the reference's field name, src/lib.rs:45); some signature
         // frames carry `abundances`. Resolve whichever is present; a
@@ -67,16 +60,11 @@ object SignatureSearch {
           if (db.columns.contains("abunds")) col("abunds")
           else if (db.columns.contains("abundances")) col("abundances")
           else lit(null).cast("array<long>")
-        return db.withColumn("score",
-          udf((mins: Seq[Long], abunds: Seq[Long]) => {
-            val m = requireMins(mins)
-            val a = if (abunds != null) abunds.toArray else Array.fill(m.length)(1L)
-            MinHash.angularSimilarity(m, a, q, qa)
-          }).apply(col("mins"), abundCol))
-          .where(col("score") > threshold)
+        GraftFunctions.angularSimilarity(col("mins"),
+          coalesce(abundCol, array_repeat(lit(1L), size(col("mins")))), q, typedlit(qa))
       case other => throw new IllegalArgumentException(s"unknown mode $other")
     }
-    db.withColumn("score", score(col("mins")))
+    db.withColumn("score", requireMins(score))
       .where(col("score") > threshold) // strict >, per the reference
   }
 

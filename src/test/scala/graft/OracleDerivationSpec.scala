@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.SparkTestSession
+import graft.queries.Multimodal
 
 /**
- * Re-derives the regression-frozen oracle constants (`Queries.m02Expected`
+ * Re-derives the regression-frozen oracle constants (`Multimodal.m02Expected`
  * / `m03Expected`) from the live `SyntheticCorpus` + `DedupConfig` and
  * compares them to the frozen literals. A corpus or config change fails
  * HERE, loudly, with the fresh literals to paste — instead of surfacing
@@ -24,10 +25,10 @@ class OracleDerivationSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .sortBy(_._1).toSeq
-    val frozen = Queries.m02Expected.sortBy(_._1)
+    val frozen = Multimodal.m02Expected.sortBy(_._1)
     assert(got === frozen,
       "\nSyntheticCorpus/DedupConfig changed: RE-DERIVE the frozen m02 oracle.\n" +
-        "Paste into Queries.m02Expected:\n" +
+        "Paste into Multimodal.m02Expected:\n" +
         got.map { case (f, n, mn, mx, np) =>
           s"""    ("$f", ${n}L, ${mn}L, ${mx}L, ${np}L)""" }.mkString(",\n"))
   }
@@ -38,10 +39,10 @@ class OracleDerivationSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6)))
       .sortBy(_._1).toSeq
-    val frozen = Queries.m04Expected.sortBy(_._1)
+    val frozen = Multimodal.m04Expected.sortBy(_._1)
     assert(got === frozen,
       "\nSyntheticCorpus/ImageCodec changed: RE-DERIVE the frozen m04 oracle.\n" +
-        "Paste into Queries.m04Expected:\n" +
+        "Paste into Multimodal.m04Expected:\n" +
         got.map { case (f, n, mnm, mxm, mn, mx, ng) =>
           s"""    ("$f", ${n}L, ${mnm}L, ${mxm}L, ${mn}L, ${mx}L, ${ng}L)""" }
           .mkString(",\n"))
@@ -52,10 +53,10 @@ class OracleDerivationSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .sortBy(_._1).toSeq
-    val frozen = Queries.m05Expected.sortBy(_._1)
+    val frozen = Multimodal.m05Expected.sortBy(_._1)
     assert(got === frozen,
       "\nSyntheticMedia/VideoContainer changed: RE-DERIVE the frozen m05 oracle.\n" +
-        "Paste into Queries.m05Expected:\n" +
+        "Paste into Multimodal.m05Expected:\n" +
         got.map { case (f, n, mn, mx, nf) =>
           s"""    ($f, ${n}L, ${mn}L, ${mx}L, ${nf}L)""" }.mkString(",\n"))
   }
@@ -66,10 +67,10 @@ class OracleDerivationSpec extends AnyFunSuite {
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))
       .sortBy(_._1).toSeq
-    val frozen = Queries.m06Expected.sortBy(_._1)
+    val frozen = Multimodal.m06Expected.sortBy(_._1)
     assert(got === frozen,
       "\nSyntheticMedia/WavCodec changed: RE-DERIVE the frozen m06 oracle.\n" +
-        "Paste into Queries.m06Expected:\n" +
+        "Paste into Multimodal.m06Expected:\n" +
         got.map { case (r0, n, mn, mx, pk, zc) =>
           s"""    ($r0, ${n}L, ${mn}L, ${mx}L, ${pk}L, ${zc}L)""" }.mkString(",\n"))
   }
@@ -79,11 +80,11 @@ class OracleDerivationSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getString(0), r.getLong(1)))
       .toSeq
-    val order = Queries.m03Expected.map(_._1).zipWithIndex.toMap
+    val order = Multimodal.m03Expected.map(_._1).zipWithIndex.toMap
     val gotSorted = got.sortBy(r => order.getOrElse(r._1, Int.MaxValue))
-    assert(gotSorted === Queries.m03Expected,
+    assert(gotSorted === Multimodal.m03Expected,
       "\nSyntheticCorpus/DedupConfig changed: RE-DERIVE the frozen m03 oracle.\n" +
-        "Paste into Queries.m03Expected:\n" +
+        "Paste into Multimodal.m03Expected:\n" +
         got.map { case (st, n) => s"""    ("$st", ${n}L)""" }.mkString(",\n"))
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.SparkTestSession
+import graft.queries.{Dedup, Embeddings, Multimodal, QuerySupport, Streaming, Text}
 
 /** Operator-surface checks beyond the driver's DuckDB gate (which covers
   * the oracle'd queries): structural assertions for rows-only operators. */
@@ -82,7 +83,7 @@ class QueriesSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val normed = docs.select(col("doc_id"),
       trim(regexp_replace(lower(col("text")), "\\s+", " ")).as("nt"))
-    val got = Queries.auditGrams(normed).collect()
+    val got = Dedup.auditGrams(normed).collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getString(1)).toSet).toMap
     assert(got.get(1L).contains(Set("ab")))
     assert(got.get(2L).contains(Set("abcd")))
@@ -99,10 +100,10 @@ class QueriesSpec extends AnyFunSuite {
     // longs) must equal auditGrams → xxhash64(gram) row-for-row on the
     // same hostile corpus — d15 runs auditGramHashes, the spec above
     // pins auditGrams, this equality ties the two
-    val viaStrings = Queries.auditGrams(normed)
+    val viaStrings = Dedup.auditGrams(normed)
       .select(col("doc_id"), xxhash64(col("gram")).as("gh"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaHashes = Queries.auditGramHashes(normed)
+    val viaHashes = Dedup.auditGramHashes(normed)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaHashes === viaStrings)
   }
@@ -116,7 +117,7 @@ class QueriesSpec extends AnyFunSuite {
       (-4.0, 4.0, 4.0))      // opposite: ρ = −1 → sim −1
       .toDF("dot", "n2a", "n2b")
     val got = rows.select(
-        Queries.angularSimCol(col("dot"), col("n2a"), col("n2b")).as("s"))
+        Dedup.angularSimCol(col("dot"), col("n2a"), col("n2b")).as("s"))
       .collect().map(_.getDouble(0)).toSeq
     assert(!got.exists(_.isNaN), s"NaN leaked through the clamp: $got")
     assert(got === Seq(1.0, 1.0, 0.0, -1.0))
@@ -404,8 +405,8 @@ class QueriesSpec extends AnyFunSuite {
     assert(full(1L) == 0L && full(11L) == 0L, "bridge must merge the clusters")
     // the registered rule (the same Column both d22 and d23 run) flips
     val out = Seq(1L, 11L).toDF("c")
-      .select(Queries.clusterSplitRule(col("c")).as("before"),
-        Queries.clusterSplitRule(lit(0L)).as("after")).collect()
+      .select(Dedup.clusterSplitRule(col("c")).as("before"),
+        Dedup.clusterSplitRule(lit(0L)).as("after")).collect()
     out.foreach { r =>
       assert(r.getString(0) == "test" && r.getString(1) == "val",
         "cluster 1 -> 0 must move test -> val")
@@ -420,7 +421,7 @@ class QueriesSpec extends AnyFunSuite {
     val sfDir = sf
     val labels = SparkEntry.queries("m01_corpus_dedup_clusters")(spark, sfDir)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val meta = graft.sources.SyntheticCorpus.corpus(spark, Queries.corpusRows(sfDir)).toDF()
+    val meta = graft.sources.SyntheticCorpus.corpus(spark, QuerySupport.corpusRows(sfDir)).toDF()
       .select(col("image_id"), col("fmt"), length(col("bytes")).cast("long").as("n_bytes"))
       .collect().map(r => r.getString(0) -> ((r.getString(1), r.getLong(2)))).toMap
     def fmtRank(f: String): Int = f match {
@@ -495,7 +496,7 @@ class QueriesSpec extends AnyFunSuite {
   test("m12 per-cluster caption/phash consistency matches a local recompute") {
     val labels = SparkEntry.queries("m01_corpus_dedup_clusters")(spark, sf)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val meta = graft.sources.SyntheticCorpus.corpus(spark, Queries.corpusRows(sf))
+    val meta = graft.sources.SyntheticCorpus.corpus(spark, QuerySupport.corpusRows(sf))
       .toDF().select("image_id", "caption", "phash").collect()
       .map(r => r.getString(0) -> ((r.getString(1), r.getLong(2)))).toMap
     val expected = labels.filter(_._3 >= 2).groupBy(_._2).map { case (cl, ms) =>
@@ -922,42 +923,42 @@ class QueriesSpec extends AnyFunSuite {
     val gapUs = 8L * 3600 * 1000000
     // data branch: two events fold into one open session, no emission,
     // and the timeout wall lands at (last + gap) in milliseconds
-    val open = TestGroupState.create[Queries.SessionState](
+    val open = TestGroupState.create[Streaming.SessionState](
       Optional.empty(), GroupStateTimeout.EventTimeTimeout,
       batchProcessingTimeMs = 0L, eventTimeWatermarkMs = Optional.of(0L),
       hasTimedOut = false)
-    val out1 = Queries.sessionizeEvt(7L,
+    val out1 = Streaming.sessionizeEvt(7L,
       Iterator((7L, 1000000L, null), (7L, 2000000L, null)), open).toList
     assert(out1.isEmpty)
     assert(open.exists)
-    assert(open.get === Queries.SessionState(1000000L, 2000000L, 2L))
+    assert(open.get === Streaming.SessionState(1000000L, 2000000L, 2L))
     assert(open.getTimeoutTimestampMs.get() === (2000000L + gapUs) / 1000L)
     // in-batch gap: the first session closes inline, the second stays
     // open with a fresh wall
-    val rollover = TestGroupState.create[Queries.SessionState](
-      Optional.of(Queries.SessionState(10L, 20L, 2L)),
+    val rollover = TestGroupState.create[Streaming.SessionState](
+      Optional.of(Streaming.SessionState(10L, 20L, 2L)),
       GroupStateTimeout.EventTimeTimeout, 0L, Optional.of(0L), hasTimedOut = false)
     val far = 20L + gapUs + 1L
-    val out2 = Queries.sessionizeEvt(3L, Iterator((3L, far, null)), rollover).toList
+    val out2 = Streaming.sessionizeEvt(3L, Iterator((3L, far, null)), rollover).toList
     assert(out2 === List((3L, 10L, 20L, 2L)))
-    assert(rollover.get === Queries.SessionState(far, far, 1L))
+    assert(rollover.get === Streaming.SessionState(far, far, 1L))
     // out-of-order row in a LATER batch (legal inside the watermark
     // allowance, which is far below the gap): extends the session START
     // backward — the first-seen event is not necessarily the earliest
-    val ooo = TestGroupState.create[Queries.SessionState](
-      Optional.of(Queries.SessionState(36000000000L, 36000000000L, 1L)), // 10 h
+    val ooo = TestGroupState.create[Streaming.SessionState](
+      Optional.of(Streaming.SessionState(36000000000L, 36000000000L, 1L)), // 10 h
       GroupStateTimeout.EventTimeTimeout, 0L, Optional.of(0L), hasTimedOut = false)
-    val out4 = Queries.sessionizeEvt(5L,
+    val out4 = Streaming.sessionizeEvt(5L,
       Iterator((5L, 34200000000L, null)), ooo).toList // 9.5 h, within gap
     assert(out4.isEmpty)
-    assert(ooo.get === Queries.SessionState(34200000000L, 36000000000L, 2L))
+    assert(ooo.get === Streaming.SessionState(34200000000L, 36000000000L, 2L))
     // timeout branch: the engine calls with hasTimedOut and NO rows —
     // the open session is emitted exactly once and the state cleared
-    val timedOut = TestGroupState.create[Queries.SessionState](
-      Optional.of(Queries.SessionState(5L, 9L, 3L)),
+    val timedOut = TestGroupState.create[Streaming.SessionState](
+      Optional.of(Streaming.SessionState(5L, 9L, 3L)),
       GroupStateTimeout.EventTimeTimeout, 0L, Optional.of(99999999L),
       hasTimedOut = true)
-    val out3 = Queries.sessionizeEvt(1L, Iterator.empty, timedOut).toList
+    val out3 = Streaming.sessionizeEvt(1L, Iterator.empty, timedOut).toList
     assert(out3 === List((1L, 5L, 9L, 3L)))
     assert(timedOut.isRemoved)
   }
@@ -1020,7 +1021,7 @@ class QueriesSpec extends AnyFunSuite {
     // show a plain scan here): the flop pass must NOT reappear — only
     // equi-joins against the materialized inverted file, with the
     // rerank top-k pushed below the final shuffle
-    val searchPlan = Queries.ivfTopK(spark, sf, dumpResult = false)
+    val searchPlan = Embeddings.ivfTopK(spark, sf, dumpResult = false)
       .queryExecution.executedPlan.toString
     assert(!searchPlan.contains("CartesianProduct"), searchPlan)
     assert(!searchPlan.contains("BroadcastNestedLoopJoin"), searchPlan)
@@ -1249,12 +1250,12 @@ class QueriesSpec extends AnyFunSuite {
 
   test("m07 clip near-dup: recall 1.0 + brute-force pair equality over injected trim/renoise/refps dups") {
     assertMediaDedup("m07_clip_neardup_pairs", "m07_frame_phash", 2, sf,
-      graft.sources.SyntheticMedia.videoDupLabels(spark, Queries.mediaRows(sf)).collect())
+      graft.sources.SyntheticMedia.videoDupLabels(spark, Multimodal.mediaRows(sf)).collect())
   }
 
   test("m10 audio near-dup: recall 1.0 + brute-force pair equality over injected regain/atrim/renoise dups") {
     assertMediaDedup("m10_audio_neardup_pairs", "m10_audio_fp", 5, sf,
-      graft.sources.SyntheticMedia.audioDupLabels(spark, Queries.mediaRows(sf)).collect())
+      graft.sources.SyntheticMedia.audioDupLabels(spark, Multimodal.mediaRows(sf)).collect())
   }
 
   test("m07/m10 second-scale gate: recall + brute-force equality hold at 4000 media rows (20x the driver gate)") {
@@ -1263,9 +1264,9 @@ class QueriesSpec extends AnyFunSuite {
     // joint keys fix); run the REAL query path at sf0.1's media row count
     val sfBig = "/root/testdata/sf0.1"
     assertMediaDedup("m07_clip_neardup_pairs", "m07_frame_phash", 2, sfBig,
-      graft.sources.SyntheticMedia.videoDupLabels(spark, Queries.mediaRows(sfBig)).collect())
+      graft.sources.SyntheticMedia.videoDupLabels(spark, Multimodal.mediaRows(sfBig)).collect())
     assertMediaDedup("m10_audio_neardup_pairs", "m10_audio_fp", 5, sfBig,
-      graft.sources.SyntheticMedia.audioDupLabels(spark, Queries.mediaRows(sfBig)).collect())
+      graft.sources.SyntheticMedia.audioDupLabels(spark, Multimodal.mediaRows(sfBig)).collect())
   }
 
   /** d05's joint-key guarantee re-proven on data (the m07/m10 helper's
@@ -1334,7 +1335,7 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("t13 KMV: plain-Scala recompute matches; error is 1/sqrt(k)-sized; agg is k-bounded") {
-    val k = Queries.kmvK
+    val k = Text.kmvK
     val got = SparkEntry.queries("t13_cardinality_kmv")(spark, sf)
     // the sketch side is a partial-combining object aggregate over raw
     // occurrences (k-bounded buffers before the exchange) — no window,
@@ -1497,7 +1498,7 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("t13 KMV degenerate branch: fewer distinct values than k means est == exact") {
-    val out = Queries.kmvCardinality(
+    val out = Text.kmvCardinality(
       spark.read.parquet(s"$sf/documents.parquet"), k = 1 << 20).collect()
     assert(out.length === 20)
     out.foreach { r =>

@@ -37,6 +37,11 @@ def main(sf_dir, out_dir):
         name = os.path.basename(f)[:-len(".parquet")]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{f}'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
+    if not oracles:
+        # a registry that lost its queries dumps exactly this; 0 pass and
+        # 0 fail must not read as a green gate
+        print(f"FAIL: {out_dir}/oracle_sql.json has no oracle entries")
+        return 1
     n_pass = n_fail = 0
     for name, sql in sorted(oracles.items()):
         spark_path = f"{out_dir}/{name}"
