@@ -220,43 +220,33 @@ object GraftFunctions {
    * Hamming-radius candidate keys for a 64-bit fingerprint — the
    * multi-piece scheme of Manku/Jain/Sarma (WWW'07, "Detecting
    * Near-Duplicates for Web Crawling"): split the 64 bits into 6 blocks
-   * (widths 11,11,11,11,10,10) and key on every C(6,3) = 20 combination
-   * of 3 blocks. Any pair within Hamming distance 3 differs in at most 3
-   * blocks, so at least 3 blocks are clean and at least one 3-combo key
-   * matches — candidate recall for ham ≤ 3 is GUARANTEED, like naive
-   * 1-of-4 single-block pigeonhole banding, but with ~33-bit
-   * joint keys instead of 16-bit single blocks. That selectivity is the
-   * scale story: on structured fingerprints (saturated regions, common
-   * gradients) single 16-bit blocks collide catastrophically — at 10⁵
-   * synthetic rows, 92% of all block mass sat in buckets past the heat
-   * cap, silently killing the fingerprint candidate path (caught by the
-   * second-scale e2e gate); 3-block joints stay cold except for genuine
-   * near-identical masses, which the heat cap is FOR. 20 key rows per
-   * fingerprint is the deliberate space-for-recall trade from the paper.
+   * (widths 11,11,11,11,10,10) and key on every C(6,4) = 15 combination
+   * of 4 blocks (~44-bit joints). Any pair within Hamming distance 2
+   * flips bits in at most 2 blocks, leaving ≥ 4 clean blocks and ≥ 1
+   * matching 4-combo key — candidate recall for ham ≤ 2 is GUARANTEED
+   * (ham-1 pairs share 5 tables, ham-0 all 15 — redundancy that carries
+   * recall through tight heat caps). Joint keys instead of single 16-bit
+   * pigeonhole blocks are the scale story: on structured fingerprints
+   * (saturated regions, common gradients) single blocks collide
+   * catastrophically — at 10⁵ synthetic rows, 92% of all block mass sat
+   * in buckets past the heat cap, silently killing the fingerprint
+   * candidate path (caught by the second-scale e2e gate).
    *
-   * Key layout: comboTag (0-19) in the high bits, then the 3 block
-   * values in 11-bit slots — max ≈ 2^37.4, exact in a long. Codegen'd
-   * built-ins only (shifts/masks), no UDF.
-   */
-  def fingerprintBandsHamming(fp: Column): Column =
-    Bridge.column(expressions.FingerprintJointKeys(Bridge.expression(fp), scheme = 1, pick = 3))
-
-  /**
-   * The radius-2 variant: same 6 blocks, keyed on every C(6,4) = 15
-   * combination of 4 blocks (~44-bit joints). Any pair within Hamming
-   * distance 2 flips bits in at most 2 blocks, leaving ≥ 4 clean blocks
-   * and ≥ 1 matching 4-combo key (ham-1 pairs share 5 tables, ham-0 all
-   * 15 — redundancy that carries recall through tight heat caps).
+   * Why radius 2 and not 3 (C(6,3) = 20 three-block ~33-bit joints,
+   * [[expressions.FingerprintJointKeys]] with `pick = 3`): key
+   * SELECTIVITY is the scale dial. Fingerprints of correlated content
+   * (structured image phashes) are far from uniform — measured on the
+   * 600k synthetic corpus, 33-bit 3-block joints produced 12.7M
+   * coincidence candidate pairs (buckets ≤ 16) from 596k rows, exploding
+   * the confirm stage ~50×, while the 44-bit 4-block joints cut that mass
+   * by ~2^11. True same-image transforms measure ham ≤ 2 here, so radius
+   * 2 is the guaranteed tier; ham-3 pairs still surface through the
+   * MinHash band sources and score with `ph_ham <= 3` corroboration at
+   * confirm.
    *
-   * Why radius 2 and not 3 for the pipeline: key SELECTIVITY is the
-   * scale dial. Fingerprints of correlated content (structured image
-   * phashes) are far from uniform — measured on the 600k synthetic
-   * corpus, 33-bit 3-block joints produced 12.7M coincidence candidate
-   * pairs (buckets ≤ 16) from 596k rows, exploding the confirm stage
-   * ~50×, while the 44-bit 4-block joints cut that mass by ~2^11. True
-   * same-image transforms measure ham ≤ 2 here, so radius 2 is the
-   * guaranteed tier; ham-3 pairs still surface through the MinHash band
-   * sources and score with `ph_ham <= 3` corroboration at confirm.
+   * Key layout: comboTag in the high bits, then the block values in
+   * 11-bit slots, exact in a long. Codegen'd built-ins only
+   * (shifts/masks), no UDF.
    */
   def fingerprintBandsHamming2(fp: Column): Column =
     Bridge.column(expressions.FingerprintJointKeys(Bridge.expression(fp), scheme = 1, pick = 4))

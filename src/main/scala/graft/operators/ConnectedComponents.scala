@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /**
  * Connected components over an edge DataFrame via alternating
@@ -62,7 +63,7 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
     // count rides on the SAME job as an observed metric (no separate
     // count action).
     val obs0 = org.apache.spark.sql.Observation()
-    var e = edges.select($"src", $"dst").where($"src" =!= $"dst")
+    val start = edges.select($"src", $"dst").where($"src" =!= $"dst")
       .select(least($"src", $"dst").as("src"), greatest($"src", $"dst").as("dst"))
       .distinct()
       .observe(obs0, count(lit(1)).as("edges"))
@@ -72,22 +73,19 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
     // smaller than the corpus, but each round is a chain of tiny shuffles:
     // under AQE every query stage materializes as its own job, so a round
     // costs 4-6 driver scheduling barriers — a pure serial term that
-    // dominates the pipeline's scaling efficiency. Run the loop with AQE
-    // off and an explicit width from chooseLoopWidth (one pipelined job
-    // per round locally; edge-count-proportional on a big graph); restore
-    // the session confs after. Session conf values are parsed defensively
-    // BEFORE anything is mutated (a non-numeric value, e.g. a managed
-    // platform's "auto", must not leave AQE disabled for the session).
-    val conf = spark.conf
-    val aqeBefore = conf.get("spark.sql.adaptive.enabled", "true")
-    val partsBefore = conf.get("spark.sql.shuffle.partitions", "200")
-    val sessionParts = scala.util.Try(partsBefore.trim.toInt).getOrElse(200)
+    // dominates the pipeline's scaling efficiency. The loop therefore runs
+    // in a child session (Bridge.scoped) with AQE off and an explicit
+    // width from chooseLoopWidth (one pipelined job per round locally;
+    // edge-count-proportional on a big graph); the caller's session conf
+    // is never touched. A non-numeric session width (e.g. a managed
+    // platform's "auto") falls back to the 200 default.
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
     val loopWidth = chooseLoopWidth(obs0.get("edges").asInstanceOf[Long],
-      sessionParts, edgesPerPartition)
-    logWarning(s"[cc] loop shuffle width=$loopWidth (session=$partsBefore)")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", loopWidth.toString)
-    try {
+      scala.util.Try(sessionParts.trim.toInt).getOrElse(200), edgesPerPartition)
+    logWarning(s"[cc] loop shuffle width=$loopWidth (session=$sessionParts)")
+    val loop = Bridge.scoped(spark, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> loopWidth.toString)
+    var e = Bridge.rebind(loop, start)
 
     var iter = 0
     var converged = false
@@ -138,19 +136,15 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
     require(converged, s"connected components did not converge in $maxIter rounds")
 
     // After convergence the edge set is a star stored canonically as
-    // (src = component min, dst = member). Returned LAZY: the agg reads
-    // the checkpointed star edges, so consumers run it under the restored
-    // session confs (AQE on) — and the loop pays no extra barrier for it
-    // (round-3's eager checkpoint here was one more driver action buying
-    // nothing: the plan below is two narrow scans of cached blocks).
-    e.select($"dst".as("id"), $"src".as("component"))
+    // (src = component min, dst = member). Returned LAZY and rebound onto
+    // the caller's session: the agg reads the checkpointed star edges, so
+    // consumers run it under the caller's conf (AQE on) — and the loop
+    // pays no extra barrier for it (an eager checkpoint here was one more
+    // driver action buying nothing: the plan below is two narrow scans of
+    // cached blocks).
+    Bridge.rebind(spark, e.select($"dst".as("id"), $"src".as("component"))
       .union(e.select($"src".as("id"), $"src".as("component")))
-      .groupBy($"id").agg(min($"component").as("component"))
-
-    } finally {
-      conf.set("spark.sql.adaptive.enabled", aqeBefore)
-      conf.set("spark.sql.shuffle.partitions", partsBefore)
-    }
+      .groupBy($"id").agg(min($"component").as("component")))
   }
 
   /**

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions._
 import graft.core.SketchConfig
 import graft.functions.GraftFunctions._
@@ -34,9 +35,9 @@ final case class DedupConfig(
     // it just does not glue image clusters on its own.
     tauCap: Double = 0.92,
     tauCapCorroborated: Double = 0.8,
-    // fingerprint candidate keys: Manku multi-piece (6 blocks, 3-block
-    // joints) — guarantees candidate recall exactly to this radius, see
-    // GraftFunctions.fingerprintBandsHamming
+    // confirm-side fingerprint radii; the candidate keys (Manku
+    // multi-piece, 6 blocks, 4-block joints) guarantee recall to radius
+    // 2, see GraftFunctions.fingerprintBandsHamming2
     phashMaxHamming: Int = 3,
     simhashMaxHamming: Int = 3,
     maxBucket: Int = 64,
@@ -265,8 +266,9 @@ object DedupPipeline {
    * shuffles for a pair no rule could confirm).
    *
    * Join strategy is left to AQE's RUNTIME statistics, not hinted:
-   * sessions disable the STATIC broadcast planner (UDF-derived size
-   * estimates are garbage), so at validation scale AQE broadcasts the
+   * [[edges]] runs the pipeline in a child session with the STATIC
+   * broadcast planner off (UDF-derived size estimates are garbage; see
+   * [[pipelineSession]]), so at validation scale AQE broadcasts the
    * small candidate side from true stage sizes, and at scale it keeps
    * the spill-safe sort-merge join. A merge hint would PIN sort-merge
    * (AQE honors hints) even when the candidate side is a few MB.
@@ -354,8 +356,8 @@ object DedupPipeline {
    * img_minhash implies img_sim ≥ τ > 0; cap_minhash, simhash_corrob and
    * suffix_lcs's splice branch carry the disjunction explicitly;
    * phash_corrob and suffix_lcs's containment branch each require one
-   * side of it). A pair failing it is provably not an edge, so both
-   * [[scores]] and [[prefilter]] drop it from `(img_mins, phash)` alone.
+   * side of it). A pair failing it is provably not an edge, so
+   * [[scores]] drops it from `(img_mins, phash)` alone.
    * Edit together with [[edgeRules]].
    */
   private def corroborated(imgSim: Column, phHam: Column, cfg: DedupConfig): Column =
@@ -370,57 +372,26 @@ object DedupPipeline {
     (col("ph_ham") <= cfg.phashMaxHamming && col("img_sim") > 0.0)
 
   /**
-   * Disable the STATIC broadcast planner for this session — enforced by
-   * the operator itself, not left to entrypoint session factories: the
-   * confirm joins' sketch side is UDF-derived, and Catalyst's static size
-   * estimate of a UDF-derived plan is garbage (it once planned a GB-scale
-   * broadcast → driver maxResultSize crash). AQE's RUNTIME threshold —
-   * true stage sizes — is left available (set to 32 MB when the session
-   * did not configure it), so the genuinely small candidate side still
-   * broadcasts at validation scale while the wide sketch side never can.
-   * The setting is a session-level runtime conf; a library consumer who
-   * deliberately wants static broadcasts back can reset it after the call.
+   * The session the pipeline runs in: a child of `s` (Bridge.scoped) with
+   * the STATIC broadcast planner off — enforced by the operator itself,
+   * not left to entrypoint session factories: the confirm joins' sketch
+   * side is UDF-derived, and Catalyst's static size estimate of a
+   * UDF-derived plan is garbage (it once planned a GB-scale broadcast →
+   * driver maxResultSize crash). AQE's RUNTIME threshold — true stage
+   * sizes — keeps the budget `s` resolves to, so the genuinely small
+   * candidate side still broadcasts at validation scale while the wide
+   * sketch side never can. `s` itself is left untouched.
    */
-  private def guardStaticBroadcast(s: org.apache.spark.sql.SparkSession): Unit = {
-    if (s.conf.get("spark.sql.autoBroadcastJoinThreshold") != "-1") {
-      val adaptiveKey = "spark.sql.adaptive.autoBroadcastJoinThreshold"
-      // the unset adaptive threshold falls back to the static one, so
-      // read its RESOLVED value BEFORE mutating the static key and pin
-      // that value back explicitly afterwards: the session's effective
-      // AQE broadcast budget is preserved exactly (a consumer who set
-      // adaptive=-1 keeps runtime broadcasts off; a default session
-      // keeps its 10 MB budget; our entrypoints set 32 MB themselves) —
-      // only the garbage-size-estimate STATIC planner is disabled.
-      val resolvedBudget = s.conf.getOption(adaptiveKey)
-        .filter(v => v != null && v.nonEmpty)
-        .getOrElse(s.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s.conf.set(adaptiveKey, resolvedBudget)
-    }
-  }
-
-  /**
-   * The slim candidate reject pass on its own: the candidates that pass
-   * [[corroborated]], judged from just `(img_mins, phash)`. [[scores]]
-   * applies the same predicate inside its first join; this standalone
-   * form lets a caller count what the reject drops.
-   *
-   * Why the reject matters at scale: fingerprint joint keys admit
-   * pairwise-coincidence candidates in bulk (measured at 600k rows:
-   * 1.53M of 1.56M candidates are junk with zero shared pixel shingles
-   * and a far phash). Rejecting them on ~40% of the payload bytes keeps
-   * the caption sketches and the normalized caption STRING from ever
-   * shuffling for a pair no rule could confirm.
-   */
-  def prefilter(cands: DataFrame, sk: DataFrame, cfg: DedupConfig): DataFrame = {
-    val a = sk.select(col("vid").as("a"),
-      col("img_mins").as("pimg_a"), col("phash").as("pph_a"))
-    val b = sk.select(col("vid").as("b"),
-      col("img_mins").as("pimg_b"), col("phash").as("pph_b"))
-    cands.join(a, "a").join(b, "b")
-      .where(corroborated(jaccard(col("pimg_a"), col("pimg_b"), cfg.imgSketch),
-        hamming64(col("pph_a"), col("pph_b")), cfg))
-      .select(col("a"), col("b"))
+  private def pipelineSession(s: SparkSession): SparkSession = {
+    val adaptiveKey = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    // the unset adaptive threshold falls back to the static one, so the
+    // child pins the RESOLVED value explicitly: a consumer who set
+    // adaptive=-1 keeps runtime broadcasts off, a default session keeps
+    // its 10 MB budget, our entrypoints keep the 32 MB they set
+    val budget = s.conf.getOption(adaptiveKey)
+      .filter(v => v != null && v.nonEmpty)
+      .getOrElse(s.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    Bridge.scoped(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1", adaptiveKey -> budget)
   }
 
   /** Confirm candidates with the staged [[scores]]; emit edges. */
@@ -450,12 +421,13 @@ object DedupPipeline {
    * Returns (idmap, edges): `idmap` = (image_id, vid) for every corpus row,
    * `edges` = (src, dst) dup edges in vid space (exact + confirmed near).
    * Exposed so callers can persist/inspect the edge set (e.g. for an
-   * independent connected-components oracle) before clustering.
+   * independent connected-components oracle) before clustering. Both
+   * frames (and [[clusters]]' result) belong to a child session of the
+   * corpus' (see [[pipelineSession]]), so they execute under its conf.
    */
   def edges(corpus: DataFrame, cfg: DedupConfig = DedupConfig(),
       cache: CacheHandle = new CacheHandle()): (DataFrame, DataFrame) = {
-    guardStaticBroadcast(corpus.sparkSession)
-    val sk = sketches(corpus, cfg)
+    val sk = sketches(Bridge.rebind(pipelineSession(corpus.sparkSession), corpus), cfg)
     // one window shuffle tags each row with its exact-group rep; persisted
     // because all four band sources and both confirm sides read it.
     // Tracked in `cache` — callers release() after materialization.

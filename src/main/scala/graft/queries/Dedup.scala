@@ -4,6 +4,7 @@ package queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Bridge
 import graft.core.{MinHash, SketchConfig, Shingles}
 import graft.functions.GraftFunctions
 import graft.operators.{ConnectedComponents, Lsh}
@@ -92,9 +93,9 @@ object Dedup {
     // in-bucket pair generation read ~1 MB of banded shuffle but carry
     // the pair-expansion compute, so the default byte floor ran them in
     // ONE task (measured 0.8 s single-task at sf0.1); inert at scale.
-    withConf(s, "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k") {
-      dumpDerived(s, d, "doc_candidates") {
-        Lsh.candidatePairs(docBanded(s, d), maxBucket = 64)
+    dumpDerived(s, d, "doc_candidates") {
+      withConf(s, "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k") { c =>
+        Lsh.candidatePairs(docBanded(c, d), maxBucket = 64)
       }
     }
 
@@ -320,19 +321,18 @@ object Dedup {
       // window stage reads ~7 MB of shuffle but carries the df-count
       // compute, and the default 1m floor coalesced it to 6 tasks
       // (measured 10 task-seconds → ~1.7 s wall at sf0.1).
-      val grams = withConf(s,
-          "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k") {
-        dumpDerived(s, d, "d02_grams", files = 1) {
-          allGrams.withColumn("df", count(lit(1)).over(wdf))
+      val grams = dumpDerived(s, d, "d02_grams", files = 1) {
+        withConf(s, "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k") { c =>
+          Bridge.rebind(c, allGrams).withColumn("df", count(lit(1)).over(wdf))
             .where(col("df") <= dfMax)
             .select(col("doc_id"), col("source"), col("gh"))
         }
       }
       val sizes = grams.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      // The self-join runs OUTSIDE the scoped conf (it executes at sink
-      // time), so its width is pinned with explicit join-key repartitions
-      // instead: the dump is tens of KB, and byte-based AQE coalescing
-      // ran the pair-expansion join in ONE task (measured 1.2 s
+      // The self-join runs OUTSIDE the scoped conf (it reads the dump
+      // back through `s`), so its width is pinned with explicit join-key
+      // repartitions instead: the dump is tens of KB, and byte-based AQE
+      // coalescing ran the pair-expansion join in ONE task (measured 1.2 s
       // task-time) while its CPU amplification is ~10³ per shuffle byte.
       // A user repartition is never coalesced; it IS the exchange the
       // join would insert (same key, so ENSURE_REQUIREMENTS adds

@@ -130,12 +130,12 @@ object Embeddings {
     * max(totalBytes/parallelism, minPartitionSize), so it only bites
     * when a shuffle is smaller than cores × 1 MB. */
   private def embPairs(s: SparkSession, d: String): DataFrame =
-    withConf(s, "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k") {
-      dumpDerived(s, d, "emb_pairs", files = 1) {
+    dumpDerived(s, d, "emb_pairs", files = 1) {
+      withConf(s, "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k") { c =>
         // spread: the hyperplane-key kernel + band explode would otherwise
         // run inside the single scan task
-        Similarity.lshPairs(spread(s, t(s, d, "embeddings")), "vec_id", "embedding",
-          minCos = 0.45, dim = 64, nRows = tableRows(s, d, "embeddings"))
+        Similarity.lshPairs(spread(c, t(c, d, "embeddings")), "vec_id", "embedding",
+          minCos = 0.45, dim = 64, nRows = tableRows(c, d, "embeddings"))
       }
     }
 

@@ -2,6 +2,8 @@ package graft
 package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Helpers every query family shares: table reads, scan widening, the
   * derived-table dump cache and its oracle-side paths, and scoped session
@@ -57,9 +59,15 @@ object QuerySupport {
   private[queries] def derivedDir(d: String): String =
     s"$derivedRoot/${new java.io.File(d).getName}"
 
-  private[queries] val dumpedPaths = scala.collection.concurrent.TrieMap.empty[String, Unit]
+  /** Dumped path → the `files` bound it was written with (0 = none). */
+  private[queries] val dumpedPaths = scala.collection.concurrent.TrieMap.empty[String, Int]
 
-  /** Write `df` once per (sfDir, name) per JVM; read the parquet back.
+  /** Write `df` once per (sfDir, name) per JVM; read the parquet back
+    * through `s`. `df` executes under its own session's conf, so a body
+    * built on a [[withConf]] child writes under the scoped value while
+    * the read-back (and everything downstream of it) runs under `s`'s.
+    * Every call for one path must pass the same `files`: the cache is
+    * keyed by path, and a second bound would be silently ignored.
     * `files > 0` bounds the dump's part-file count via a write-side
     * repartition AFTER the (possibly spread-widened) kernel computes:
     * a small dump with many re-reading consumers (the sketch/band index
@@ -72,11 +80,14 @@ object QuerySupport {
   private[queries] def dumpDerived(s: SparkSession, d: String, name: String,
       files: Int = 0)(df: => DataFrame): DataFrame = {
     val path = s"${derivedDir(d)}/$name.parquet"
-    dumpedPaths.getOrElseUpdate(path, {
+    val written = dumpedPaths.getOrElseUpdate(path, {
       val out = df
       (if (files > 0) out.repartition(files) else out)
         .write.mode("overwrite").parquet(path)
+      files
     })
+    require(written == files,
+      s"dump $path was written with files = $written, requested again with files = $files")
     s.read.parquet(path)
   }
 
@@ -85,22 +96,16 @@ object QuerySupport {
   private[queries] def oraclePath(name: String): String =
     s"'$derivedRoot/sf0.01/$name.parquet/*.parquet'"
 
-  /** Run `body` with a session conf key temporarily overridden, restored
-    * defensively after (the CC loop's conf-restore pattern). Only sound
-    * around work that EXECUTES inside `body` (dump materializations,
-    * stream runs) — a returned lazy plan executes after the restore. */
-  private[queries] def withConf[T](s: SparkSession, key: String, value: String)(body: => T): T = {
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  /** `body` built on a child of `s` with `key` set to `value`
+    * (Bridge.scoped): a plan built on the child runs under `value`
+    * whenever it executes, and `s`'s conf never changes. */
+  private[queries] def withConf[T](s: SparkSession, key: String, value: String)(
+      body: SparkSession => T): T =
+    body(Bridge.scoped(s, key -> value))
 
-  /** Run a streaming query's `body` with stream-scoped conf, restored
-    * after (both values are pinned into the stream's checkpoint at start,
-    * so they only affect the scoped query):
+  /** Start a streaming query from a child of `s` carrying stream-scoped
+    * conf, run it over all available input and stop it. The stream pins
+    * both values into its checkpoint at start; `s` never changes:
     *
     *  - `spark.sql.shuffle.partitions` lowered — the state stores
     *    allocate one instance per shuffle partition PER MICRO-BATCH, a
@@ -122,12 +127,12 @@ object QuerySupport {
     *    st05-st07 are stateless foreachBatch probes with no watermark at
     *    all. At production scale re-enabling them is a latency knob
     *    (sub-batch emission), not a correctness one. */
-  private[queries] def withStreamConf[T](s: SparkSession, n: Int)(body: => T): T =
-    withConf(s, "spark.sql.shuffle.partitions", n.toString) {
-      withConf(s, "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
-        body
-      }
-    }
+  private[queries] def withStreamConf(s: SparkSession, n: Int)(
+      start: SparkSession => StreamingQuery): Unit = {
+    val q = start(Bridge.scoped(s, "spark.sql.shuffle.partitions" -> n.toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))
+    try q.processAllAvailable() finally q.stop()
+  }
 
   /** Corpus size for multimodal queries, scaled off the sf dir name. */
   def corpusRows(dir: String): Long =

@@ -18,7 +18,7 @@ object Relational {
     * planning time. */
   private[graft] def partitionedEvents(s: SparkSession, d: String): DataFrame = {
     val path = s"${derivedDir(d)}/events_by_date.parquet"
-    dumpedPaths.getOrElseUpdate(path,
+    dumpedPaths.getOrElseUpdate(path, {
       t(s, d, "events")
         .withColumn("event_date", date_format(col("ts"), "yyyy-MM-dd"))
         // cluster by the partition column before the partitioned write:
@@ -26,7 +26,9 @@ object Relational {
         // date directories serially (distribution-mode=hash —
         // same rows, same one-file-per-dir layout, ~30-way parallel)
         .repartition(col("event_date"))
-        .write.mode("overwrite").partitionBy("event_date").parquet(path))
+        .write.mode("overwrite").partitionBy("event_date").parquet(path)
+      0 // no part-file bound
+    })
     s.read.parquet(path)
   }
 

@@ -135,6 +135,7 @@ object Streaming {
           pool.submit(new Runnable { def run(): Unit = stage(df, name) })
         }.foreach(_.get()) // propagate the first failure, if any
       } finally pool.shutdown()
+      0 // no part-file bound
     })
     dir
   }
@@ -257,8 +258,8 @@ object Streaming {
       copyBatch(staged.resolve("b2.parquet"), inDir, "b2.parquet", 30000L)
       copyBatch(staged.resolve("st01_s3.parquet"), inDir, "b3.parquet", 60000L)
       copyBatch(staged.resolve("st01_s4.parquet"), inDir, "b4.parquet", 120000L)
-      withStreamConf(s, 8) {
-        val q = s.readStream.schema(schema)
+      withStreamConf(s, 8) { c =>
+        c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(inDir.toString)
           .withColumn("ts", col("ts").cast("timestamp"))
@@ -270,8 +271,6 @@ object Streaming {
           .writeStream.outputMode("append").format("parquet")
           .option("path", outDir).option("checkpointLocation", ckpt)
           .start()
-        q.processAllAvailable()
-        q.stop()
       }
       s.read.parquet(outDir).where(col("event_type") =!= "__sentinel")
     },
@@ -298,14 +297,14 @@ object Streaming {
       val ckpt = Files.createTempDirectory("st08_ckpt").toString
       copyBatch(staged.resolve("b1.parquet"), inDir, "b1.parquet", 0L)
       copyBatch(staged.resolve("b2.parquet"), inDir, "b2.parquet", 30000L)
-      withStreamConf(s, 8) {
+      withStreamConf(s, 8) { c =>
         // two independent sources over the same staged files, each
         // filtered to its event type (each readStream call is its own
         // source with its own offsets; the global watermark is the MIN
         // across both, so neither side can evict state the other still
         // needs)
         def src(tpe: String, idAs: String, tsAs: String) =
-          s.readStream.schema(schema)
+          c.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
             .where(col("event_type") === tpe)
             .select(col("user_id"), col("event_id").as(idAs),
@@ -313,7 +312,7 @@ object Streaming {
             .withWatermark(tsAs, "1 hour")
         val views = src("view", "view_id", "vts")
         val purchases = src("purchase", "purchase_id", "pts")
-        val q = views.join(purchases,
+        views.join(purchases,
             views("user_id") === purchases("user_id") &&
               col("pts") >= col("vts") &&
               col("pts") <= col("vts") + expr("INTERVAL 2 HOURS"))
@@ -321,8 +320,6 @@ object Streaming {
           .writeStream.outputMode("append").format("parquet")
           .option("path", outDir).option("checkpointLocation", ckpt)
           .start()
-        q.processAllAvailable()
-        q.stop()
       }
       s.read.parquet(outDir)
     },
@@ -350,8 +347,8 @@ object Streaming {
       val schema = events.schema
       val outDir = Files.createTempDirectory("st02_out").toString
       val ckpt = Files.createTempDirectory("st02_ckpt").toString
-      withStreamConf(s, 8) {
-        val q = s.readStream.schema(schema)
+      withStreamConf(s, 8) { c =>
+        c.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet")
           .parquet(d)
           .withColumn("ts", col("ts").cast("timestamp"))
@@ -361,8 +358,6 @@ object Streaming {
           .writeStream.outputMode("append").format("parquet")
           .option("path", outDir).option("checkpointLocation", ckpt)
           .start()
-        q.processAllAvailable()
-        q.stop()
       }
       s.read.parquet(outDir)
     },
@@ -386,8 +381,8 @@ object Streaming {
       copyBatch(staged.resolve("b1.parquet"), inDir, "b1.parquet", 0L)
       copyBatch(staged.resolve("b2.parquet"), inDir, "b2.parquet", 60000L)
       copyBatch(staged.resolve("st03_sent.parquet"), inDir, "b3.parquet", 120000L)
-      withStreamConf(s, 8) {
-        val q = s.readStream.schema(schema)
+      withStreamConf(s, 8) { c =>
+        c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(inDir.toString)
           .select(col("user_id"),
@@ -406,8 +401,6 @@ object Streaming {
           .writeStream.outputMode("append").format("parquet")
           .option("path", outDir).option("checkpointLocation", ckpt)
           .start()
-        q.processAllAvailable()
-        q.stop()
       }
       s.read.parquet(outDir)
     },
@@ -462,8 +455,8 @@ object Streaming {
       // for
       copyBatch(staged.resolve("st04_s24.parquet"), inDir, "b3.parquet", 120000L)
       copyBatch(staged.resolve("st04_s25.parquet"), inDir, "b4.parquet", 180000L)
-      withStreamConf(s, 8) {
-      val q = s.readStream.schema(schema)
+      withStreamConf(s, 8) { c =>
+      c.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(inDir.toString)
         .withColumn("ts", col("ts").cast("timestamp"))
@@ -486,8 +479,6 @@ object Streaming {
         .writeStream.outputMode("append").format("parquet")
         .option("path", outDir).option("checkpointLocation", ckpt)
         .start()
-      q.processAllAvailable()
-      q.stop()
       }
       s.read.parquet(outDir).where(col("user_id") =!= sentinelUid)
     },
@@ -540,8 +531,8 @@ object Streaming {
       val ckpt = Files.createTempDirectory("st05_ckpt").toString
       copyBatch(staged.resolve("st05_b1.parquet"), inDir, "b1.parquet", 0L)
       copyBatch(staged.resolve("st05_b2.parquet"), inDir, "b2.parquet", 60000L)
-      withStreamConf(s, 8) {
-        val q = s.readStream.schema(docs.schema)
+      withStreamConf(s, 8) { c =>
+        c.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(inDir.toString)
           .writeStream
@@ -575,8 +566,6 @@ object Streaming {
           }
           .option("checkpointLocation", ckpt)
           .start()
-        q.processAllAvailable()
-        q.stop()
       }
       // partition discovery surfaces batch_id; it is sink bookkeeping,
       // not part of the decision schema
@@ -606,8 +595,8 @@ object Streaming {
       val ckpt = Files.createTempDirectory("st06_ckpt").toString
       copyBatch(staged.resolve("st06_b1.parquet"), inDir, "b1.parquet", 0L)
       copyBatch(staged.resolve("st06_b2.parquet"), inDir, "b2.parquet", 60000L)
-      withStreamConf(s, 8) {
-        val q = s.readStream.schema(docs.schema)
+      withStreamConf(s, 8) { c =>
+        c.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(inDir.toString)
           .writeStream
@@ -620,8 +609,6 @@ object Streaming {
           }
           .option("checkpointLocation", ckpt)
           .start()
-        q.processAllAvailable()
-        q.stop()
       }
       s.read.parquet(outDir)
         .select("doc_id", "n_grams", "n_hit", "overlap", "contaminated")
@@ -647,8 +634,8 @@ object Streaming {
       val ckpt = Files.createTempDirectory("st07_ckpt").toString
       copyBatch(staged.resolve("st07_b1.parquet"), inDir, "b1.parquet", 0L)
       copyBatch(staged.resolve("st07_b2.parquet"), inDir, "b2.parquet", 60000L)
-      withStreamConf(s, 8) {
-        val q = s.readStream.schema(schema)
+      withStreamConf(s, 8) { c =>
+        c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(inDir.toString)
           .writeStream
@@ -659,8 +646,6 @@ object Streaming {
           }
           .option("checkpointLocation", ckpt)
           .start()
-        q.processAllAvailable()
-        q.stop()
       }
       s.read.parquet(outDir)
         .select("image_id", "n_matches", "min_ham", "first_dup_id")

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{MinHash, SketchConfig, U64}
 import graft.functions.GraftFunctions._
@@ -187,8 +188,9 @@ class ExpressionsSpec extends AnyFunSuite {
         s"scheme 0 pick=$pick mismatch"))
     }
     for (pick <- Seq(3, 4)) { // scheme 1: Manku 11/11/11/11/10/10
-      val kernel = if (pick == 3) GraftFunctions.fingerprintBandsHamming($"fp")
-                   else GraftFunctions.fingerprintBandsHamming2($"fp")
+      val kernel = if (pick == 3)
+        Bridge.column(expressions.FingerprintJointKeys(Bridge.expression($"fp"), 1, 3))
+      else GraftFunctions.fingerprintBandsHamming2($"fp")
       val out = df.select(kernel.as("k"),
         GraftFunctions.fingerprintCombosFoldForm($"fp", pick).as("o")).collect()
       out.foreach(row => assert(row.getSeq[Long](0) === row.getSeq[Long](1),

@@ -251,8 +251,8 @@ class PipelineSpec extends AnyFunSuite {
     val unfiltered = DedupPipeline.scoresAllRules(cands, skReps, cfg)
       .where(DedupPipeline.edgeRule(cfg))
       .select($"a", $"b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val kept = DedupPipeline.prefilter(cands, skReps, cfg)
-    val nKept = kept.count()
+    // scores emits one row per candidate that passes the slim reject
+    val nKept = DedupPipeline.scores(cands, skReps, cfg).count()
     val confirmed = DedupPipeline.confirm(cands, skReps, cfg)
       .select($"a", $"b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(unfiltered.nonEmpty)
