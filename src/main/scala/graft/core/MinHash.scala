@@ -354,27 +354,45 @@ object MinHash {
    * plain union. Returns (|A ∩ B ∩ combined|, |combined|). In scaled mode
    * this degenerates to (|A∩B|, |A∪B|).
    */
-  def intersectionSize(a: Array[Long], b: Array[Long], cfg: SketchConfig): (Long, Long) = {
-    val combined = merge(a, b, cfg)
-    // A∩B is a subset of A∪B; in bottom-k mode `combined` may be truncated,
-    // so re-intersect against it (linear merges over sorted arrays).
-    val ab = new Array[Long](math.min(a.length, b.length))
-    var i = 0; var j = 0; var n = 0
-    while (i < a.length && j < b.length) {
+  def intersectionSize(a: Array[Long], b: Array[Long], cfg: SketchConfig): (Long, Long) =
+    intersectionSize(a, b, cfg.num)
+
+  /**
+   * [[intersectionSize]] for a bottom-k size `num` (0 = no truncation) —
+   * the one loop behind every Jaccard in the engine, codegen'd
+   * expressions included. One merge pass, no copies: walk the union of
+   * the two unsigned-sorted arrays in ascending order, stopping after
+   * `num` elements (the [[merge]] re-truncation); `common` counts the
+   * elements of A∩B inside that prefix. Once one side is exhausted no
+   * common element remains, so the rest of the union is counted, not
+   * walked.
+   */
+  private def intersectionSize(a: Array[Long], b: Array[Long], num: Int): (Long, Long) = {
+    val limit = if (num > 0) num.toLong else Long.MaxValue
+    var i = 0
+    var j = 0
+    var union = 0L
+    var common = 0L
+    while (i < a.length && j < b.length && union < limit) {
       val c = java.lang.Long.compareUnsigned(a(i), b(j))
-      if (c == 0) { ab(n) = a(i); n += 1; i += 1; j += 1 }
+      if (c == 0) { common += 1; i += 1; j += 1 }
       else if (c < 0) i += 1
       else j += 1
+      union += 1
     }
-    val common = U64.intersectSize(java.util.Arrays.copyOf(ab, n), combined)
-    (common.toLong, combined.length.toLong)
+    (common, math.min(limit, union + (a.length - i) + (b.length - j)))
   }
 
   /** Jaccard similarity estimate — `compare`
     * (`/root/reference/src/lib.rs:501-508`): `common / max(1, denom)`. */
-  def compare(a: Array[Long], b: Array[Long], cfg: SketchConfig): Double = {
-    val (common, denom) = intersectionSize(a, b, cfg)
-    common.toDouble / math.max(1L, denom).toDouble
+  def compare(a: Array[Long], b: Array[Long], cfg: SketchConfig): Double =
+    compare(a, b, cfg.num)
+
+  /** [[compare]] for a bottom-k size `num` (0 = no truncation) — the
+    * form the codegen'd `JaccardMinhash` calls. */
+  def compare(a: Array[Long], b: Array[Long], num: Int): Double = {
+    val cd = intersectionSize(a, b, num)
+    cd._1.toDouble / math.max(1L, cd._2).toDouble
   }
 
   /** Asymmetric containment — `Comparable::containment`

@@ -13,10 +13,6 @@ object U64 {
   @inline def lt(a: Long, b: Long): Boolean = java.lang.Long.compareUnsigned(a, b) < 0
   @inline def le(a: Long, b: Long): Boolean = java.lang.Long.compareUnsigned(a, b) <= 0
   @inline def gt(a: Long, b: Long): Boolean = java.lang.Long.compareUnsigned(a, b) > 0
-  @inline def cmp(a: Long, b: Long): Int = java.lang.Long.compareUnsigned(a, b)
-
-  /** Scala Ordering over unsigned interpretation. */
-  val ordering: Ordering[Long] = (a: Long, b: Long) => java.lang.Long.compareUnsigned(a, b)
 
   /** Unsigned decimal rendering (what the reference's serde/md5 path emits
     * for u64 values, `/root/reference/src/lib.rs:72-77`). */
@@ -44,22 +40,6 @@ object U64 {
       i += 1
     }
     if (n == a.length) a else Arrays.copyOf(a, n)
-  }
-
-  /** Binary search in an unsigned-ascending sorted array.
-    * Returns index if found, else `-(insertionPoint) - 1` (à la JDK). */
-  def binarySearch(a: Array[Long], key: Long): Int = {
-    var lo = 0
-    var hi = a.length - 1
-    val k = key ^ Long.MinValue
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val v = a(mid) ^ Long.MinValue
-      if (v < k) lo = mid + 1
-      else if (v > k) hi = mid - 1
-      else return mid
-    }
-    -(lo + 1)
   }
 
   /** Size of the intersection of two unsigned-sorted arrays (linear merge —

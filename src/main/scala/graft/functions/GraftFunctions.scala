@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import graft.core._
-import graft.sources.ImageCodec
 
 /**
  * Column-level functions of the engine — the Spark surface of the
@@ -13,30 +12,20 @@ import graft.sources.ImageCodec
  *
  * Scalar kernels are native codegen'd Catalyst expressions
  * ([[graft.functions.expressions]]) calling tight `while`-loop kernels
- * from `graft.core` — no UDF encoder round-trips in any hot path; every
- * expression keeps a `*Udf` twin here as its differential-test oracle
- * (ExpressionsSpec asserts bit-equality). Pure-relational pieces (Hamming
- * distance, fingerprint blocks) use built-in codegen'd `functions._` only.
+ * from `graft.core` — no UDF encoder round-trips in any hot path. Their
+ * UDF formulations live in the test tree (`graft.functions.Oracles`),
+ * where ExpressionsSpec asserts bit-equality. Pure-relational pieces
+ * (Hamming distance) use built-in codegen'd `functions._` only.
  */
 object GraftFunctions {
 
   private val emptyMins: Column = typedlit(Array.emptyLongArray)
 
   /** Caption MinHash sketch: normalized char-k-shingles → bottom-num mins.
-    * Native codegen'd expression (null caption → empty sketch, matching
-    * the UDF twin's contract). */
+    * Native codegen'd expression (null caption → empty sketch). */
   def captionMinhash(caption: Column, cfg: SketchConfig): Column =
     coalesce(Bridge.column(expressions.CaptionMinhash(
       Bridge.expression(caption), cfg.ksize, cfg.num, cfg.maxHash, cfg.seed)), emptyMins)
-
-  /** UDF formulation of [[captionMinhash]] — differential-test oracle. */
-  def captionMinhashUdf(caption: Column, cfg: SketchConfig): Column = {
-    val k = cfg.ksize; val seed = cfg.seed; val localCfg = cfg
-    val f = udf((s: String) =>
-      if (s == null) Array.emptyLongArray
-      else MinHash.sketchHashes(Shingles.charShingleHashes(s, k, seed), localCfg))
-    f(caption)
-  }
 
   /** Abundance-TRACKING caption sketch: the same shingle stream as
     * [[captionMinhash]] fed through the reference's `add_hash` with
@@ -65,25 +54,11 @@ object GraftFunctions {
   def downsampleMins(mins: Column, newMaxHash: Long): Column =
     Bridge.column(expressions.DownsampleMinhash(Bridge.expression(mins), newMaxHash))
 
-  /** UDF formulation of [[downsampleMins]] — differential-test oracle. */
-  def downsampleMinsUdf(mins: Column, newMaxHash: Long): Column = {
-    val f = udf((m: Seq[Long]) =>
-      if (m == null) null else MinHash.downsample(m.toArray, null, newMaxHash)._1)
-    f(mins)
-  }
-
   /** Caption SimHash64 fingerprint over the same shingle stream — native
-    * codegen'd expression (null caption → 0L, matching the UDF twin). */
+    * codegen'd expression (null caption → 0L). */
   def captionSimhash(caption: Column, ksize: Int, seed: Long = 42L): Column =
     coalesce(Bridge.column(expressions.CaptionSimhash(
       Bridge.expression(caption), ksize, seed)), lit(0L))
-
-  /** UDF formulation of [[captionSimhash]] — differential-test oracle. */
-  def captionSimhashUdf(caption: Column, ksize: Int, seed: Long = 42L): Column = {
-    val f = udf((s: String) =>
-      if (s == null) 0L else Shingles.simhash64(Shingles.charShingleHashes(s, ksize, seed)))
-    f(caption)
-  }
 
   /** Longest-common-substring length of two strings via a generalized
     * suffix array — the north rule's exact-substring caption pass
@@ -91,14 +66,6 @@ object GraftFunctions {
     * codegen'd expression; null on null input. */
   def captionLcs(a: Column, b: Column): Column =
     Bridge.column(expressions.CaptionLcs(Bridge.expression(a), Bridge.expression(b)))
-
-  /** UDF formulation of [[captionLcs]] — differential-test oracle. */
-  def captionLcsUdf(a: Column, b: Column): Column = {
-    val f = udf((x: String, y: String) =>
-      if (x == null || y == null) null
-      else java.lang.Integer.valueOf(SuffixArrays.lcsLen(x, y)))
-    f(a, b)
-  }
 
   /**
    * Image MinHash sketch: decode → coarse-normalize pixels → byte-shingle
@@ -110,26 +77,11 @@ object GraftFunctions {
   def imageMinhash(bytes: Column, fmt: Column, cfg: SketchConfig, stride: Int = 4): Column =
     // fmt null-coalesced BEFORE the expression: BinaryExpression
     // null-short-circuits on EITHER input, which would turn (bytes,
-    // null fmt) into an empty sketch — the kernel (and the UDF twin)
-    // treat an unknown/missing fmt as the raw-byte fallback instead
+    // null fmt) into an empty sketch — the kernel treats an
+    // unknown/missing fmt as the raw-byte fallback instead
     coalesce(Bridge.column(expressions.ImageMinhash(
       Bridge.expression(bytes), Bridge.expression(coalesce(fmt, lit(""))),
       cfg.ksize, cfg.num, cfg.maxHash, cfg.seed, stride)), emptyMins)
-
-  /** UDF formulation of [[imageMinhash]] — differential-test oracle. */
-  def imageMinhashUdf(bytes: Column, fmt: Column, cfg: SketchConfig, stride: Int = 4): Column = {
-    val k = cfg.ksize; val seed = cfg.seed; val localCfg = cfg; val s = stride
-    val f = udf((b: Array[Byte], f0: String) =>
-      if (b == null) Array.emptyLongArray
-      else {
-        val payload = ImageCodec.decode(b, f0) match {
-          case Some(d) => ImageCodec.normalizeForSketch(d.rgb)
-          case None => b
-        }
-        MinHash.sketchHashes(Shingles.byteShingleHashes(payload, k, s, seed), localCfg)
-      })
-    f(bytes, fmt)
-  }
 
   /** Reference-semantics Jaccard estimate (combined-denominator,
     * `/root/reference/src/lib.rs:501-508`) — native codegen'd Catalyst
@@ -137,18 +89,6 @@ object GraftFunctions {
   def jaccard(a: Column, b: Column, cfg: SketchConfig): Column =
     Bridge.column(expressions.JaccardMinhash(
       Bridge.expression(a), Bridge.expression(b), cfg.num))
-
-  /** UDF formulation of [[jaccard]] — differential-test oracle. */
-  def jaccardUdf(a: Column, b: Column, cfg: SketchConfig): Column = {
-    val localCfg = cfg
-    // null-FAITHFUL (null in -> null out), matching the native
-    // expression's null semantics — the twins must be bit-equal even on
-    // outer-join nulls
-    val f = udf((x: Array[Long], y: Array[Long]) =>
-      if (x == null || y == null) null.asInstanceOf[java.lang.Double]
-      else java.lang.Double.valueOf(MinHash.compare(x, y, localCfg)))
-    f(a, b)
-  }
 
   /** Abundance-weighted (angular/cosine) similarity over two sketches'
     * (mins, abunds) pairs — native codegen'd expression
@@ -166,15 +106,6 @@ object GraftFunctions {
     Bridge.column(expressions.ContainmentMinhash(
       Bridge.expression(a), Bridge.expression(b)))
 
-  /** UDF formulation of [[containment]] — differential-test oracle. */
-  def containmentUdf(a: Column, b: Column): Column = {
-    // null-faithful like jaccardUdf — see there
-    val f = udf((x: Array[Long], y: Array[Long]) =>
-      if (x == null || y == null) null.asInstanceOf[java.lang.Double]
-      else java.lang.Double.valueOf(MinHash.containment(x, y)))
-    f(a, b)
-  }
-
   /** Hamming distance between two 64-bit fingerprints — pure built-ins
     * (whole-stage codegen, no UDF). */
   def hamming64(a: Column, b: Column): Column =
@@ -189,32 +120,6 @@ object GraftFunctions {
   def minhashBands(mins: Column, bands: Int, rowsPerBand: Int, seed: Long = 42L): Column =
     Bridge.column(expressions.MinhashBandKeys(
       Bridge.expression(mins), bands, rowsPerBand, seed))
-
-  /** UDF formulation of [[minhashBands]] — differential-test oracle. */
-  def minhashBandsUdf(mins: Column, bands: Int, rowsPerBand: Int, seed: Long = 42L): Column = {
-    val nb = bands; val r = rowsPerBand; val s = seed
-    val f = udf((m: Array[Long]) => {
-      if (m == null || m.isEmpty) Array.emptyLongArray
-      else {
-        val n = math.min(nb, (m.length + r - 1) / r)
-        val out = new Array[Long](n)
-        var i = 0
-        while (i < n) {
-          val from = i * r
-          val until = math.min(from + r, m.length)
-          val bb = java.nio.ByteBuffer.allocate((until - from) * 8)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          var j = from
-          while (j < until) { bb.putLong(m(j)); j += 1 }
-          // mix the band index into the key so band i and band j never share buckets
-          out(i) = Murmur3.hash64(bb.array(), s + i)
-          i += 1
-        }
-        out
-      }
-    })
-    f(mins)
-  }
 
   /**
    * Hamming-radius candidate keys for a 64-bit fingerprint — the
@@ -245,32 +150,11 @@ object GraftFunctions {
    * confirm.
    *
    * Key layout: comboTag in the high bits, then the block values in
-   * 11-bit slots, exact in a long. Codegen'd built-ins only
-   * (shifts/masks), no UDF.
+   * 11-bit slots, exact in a long. One codegen'd kernel call
+   * ([[expressions.FingerprintJointKeys]] scheme 1), no UDF.
    */
   def fingerprintBandsHamming2(fp: Column): Column =
     Bridge.column(expressions.FingerprintJointKeys(Bridge.expression(fp), scheme = 1, pick = 4))
-
-  /** The fold-of-Columns form of the Manku combos — kept as the
-    * differential-test oracle for [[expressions.FingerprintJointKeys]]
-    * scheme 1 (ExpressionsSpec asserts bit-equality; the kernel exists
-    * because inlining C(n,pick) fold trees into the bands stage blew
-    * Janino's 64 KB method limit and dropped the stage out of
-    * whole-stage codegen). */
-  private[graft] def fingerprintCombosFoldForm(fp: Column, pick: Int): Column =
-    fingerprintCombos(fp, pick)
-
-  private def fingerprintCombos(fp: Column, pick: Int): Column = {
-    val widths = Seq(11, 11, 11, 11, 10, 10)
-    val offsets = widths.scanLeft(0)(_ + _).init // 0,11,22,33,44,54
-    def block(i: Int): Column =
-      shiftrightunsigned(fp, offsets(i)).bitwiseAND(lit((1L << widths(i)) - 1L))
-    val combos = (0 until 6).combinations(pick).toSeq
-    // tag + `pick` 11-bit value slots: pick=4 → 5 + 44 bits, exact in a long
-    array(combos.zipWithIndex.map { case (c, tag) =>
-      c.foldLeft(lit(tag.toLong): Column)((acc, i) => acc * lit(2048L) + block(i))
-    }: _*)
-  }
 
   /**
    * Joint `pick`-of-8 band keys for a 64-bit fingerprint: all C(8,pick)
@@ -287,23 +171,12 @@ object GraftFunctions {
    * true dup pairs their candidacy. pick=3 keys carry 24 value bits
    * (16.7M values; 0 hot buckets, max 4, and 26× fewer coincidence
    * candidates than pick=2 at the same scale). Tag (< 2⁶) + 8·pick
-   * value bits — exact in a long for pick ≤ 7; pure built-ins
-   * (codegen).
+   * value bits — exact in a long for pick ≤ 7; one codegen'd kernel
+   * call ([[expressions.FingerprintJointKeys]] scheme 0).
    */
   def fingerprintJointBands(fp: Column, pick: Int): Column = {
     require(pick >= 1 && pick <= 7, "pick must be in [1, 7]")
     Bridge.column(expressions.FingerprintJointKeys(Bridge.expression(fp), scheme = 0, pick = pick))
-  }
-
-  /** Fold-of-Columns differential oracle for scheme 0 (see
-    * [[fingerprintCombosFoldForm]]). */
-  private[graft] def fingerprintJointBandsFoldForm(fp: Column, pick: Int): Column = {
-    def block(i: Int): Column =
-      shiftrightunsigned(fp, i * 8).bitwiseAND(lit(0xffL))
-    val combos = (0 until 8).combinations(pick).toSeq
-    array(combos.zipWithIndex.map { case (c, tag) =>
-      c.foldLeft(lit(tag.toLong): Column)((acc, i) => acc * lit(256L) + block(i))
-    }: _*)
   }
 
 }

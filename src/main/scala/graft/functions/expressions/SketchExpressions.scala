@@ -8,79 +8,33 @@ import org.apache.spark.sql.types._
 
 /**
  * Native Catalyst kernels for the sketch-comparison hot path (SURVEY.md §7
- * stage 5). They read `ArrayData` in place — no per-row array copies, no
- * UDF encoder round-trip — and codegen as a single static call, so the
- * surrounding plan stays inside whole-stage codegen.
+ * stage 5). Each codegens as a single static call, so the surrounding plan
+ * stays inside whole-stage codegen, with no UDF encoder round-trip.
  *
- * The UDF formulations in [[graft.functions.GraftFunctions]] are kept as
- * differential-test oracles (ExpressionsSpec asserts bit-equality).
+ * A sketch verb has exactly one loop, in `graft.core.MinHash`: the
+ * jaccard, containment, downsample and angular kernels copy their
+ * `ArrayData` inputs out with `toLongArray()` (a bulk copy for
+ * `UnsafeArrayData`) and call it, so the expressions and the kernel-layer
+ * benchmark run the same code. The UDF formulations they replaced live in
+ * the test tree (`graft.functions.Oracles`), where ExpressionsSpec asserts
+ * bit-equality; KernelSourceSpec keeps unsigned walks out of this file.
  */
 object SketchKernels {
 
-  /**
-   * Combined-denominator Jaccard (`intersection_size` + `compare`,
-   * `/root/reference/src/lib.rs:464-508`) in ONE merge pass over two
-   * unsigned-sorted mins arrays: walk the merged union in ascending
-   * unsigned order; `denom` counts union elements up to `num` (bottom-k
-   * re-truncation of the combined sketch); `common` counts elements of
-   * A∩B that fall inside that truncated prefix.
-   */
-  def jaccard(a: ArrayData, b: ArrayData, num: Int): Double = {
-    val na = a.numElements()
-    val nb = b.numElements()
-    var i = 0
-    var j = 0
-    var union = 0
-    var common = 0
-    val limit = if (num > 0) num else Int.MaxValue
-    while ((i < na || j < nb) && union < limit) {
-      if (i < na && j < nb) {
-        val c = java.lang.Long.compareUnsigned(a.getLong(i), b.getLong(j))
-        if (c == 0) { common += 1; i += 1; j += 1 }
-        else if (c < 0) i += 1
-        else j += 1
-      } else if (i < na) i += 1
-      else j += 1
-      union += 1
-    }
-    if (union == 0) 0.0 else common.toDouble / math.max(1, union).toDouble
-  }
+  /** Combined-denominator Jaccard (`intersection_size` + `compare`,
+    * `/root/reference/src/lib.rs:464-508`) — [[graft.core.MinHash.compare]]. */
+  def jaccard(a: ArrayData, b: ArrayData, num: Int): Double =
+    graft.core.MinHash.compare(a.toLongArray(), b.toLongArray(), num)
 
-  /** `count_common / |a|` (`/root/reference/src/index.rs:146-160`). */
-  def containment(a: ArrayData, b: ArrayData): Double = {
-    val na = a.numElements()
-    val nb = b.numElements()
-    if (na == 0) return 0.0
-    var i = 0
-    var j = 0
-    var common = 0
-    while (i < na && j < nb) {
-      val c = java.lang.Long.compareUnsigned(a.getLong(i), b.getLong(j))
-      if (c == 0) { common += 1; i += 1; j += 1 }
-      else if (c < 0) i += 1
-      else j += 1
-    }
-    common.toDouble / na.toDouble
-  }
+  /** `count_common / |a|` (`/root/reference/src/index.rs:146-160`) —
+    * [[graft.core.MinHash.containment]]. */
+  def containment(a: ArrayData, b: ArrayData): Double =
+    graft.core.MinHash.containment(a.toLongArray(), b.toLongArray())
 
-  /** Downsample prefix cut: keep mins <= maxHash (UNSIGNED; the sorted-
-    * ascending invariant makes this a binary-searched prefix copy) —
-    * the kernel twin of [[graft.core.MinHash.downsample]], mins only. */
-  def downsample(m: ArrayData, maxHash: Long): ArrayData = {
-    val n = m.numElements()
-    if (maxHash == 0L || n == 0) return m // 0 = "not scaled"
-    var lo = 0
-    var hi = n
-    val k = maxHash ^ java.lang.Long.MIN_VALUE
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if ((m.getLong(mid) ^ java.lang.Long.MIN_VALUE) <= k) lo = mid + 1 else hi = mid
-    }
-    val out = new Array[Long](lo)
-    var i = 0
-    while (i < lo) { out(i) = m.getLong(i); i += 1 }
-    new GenericArrayData(out)
-  }
+  /** Downsample prefix cut: keep mins <= maxHash (unsigned) —
+    * [[graft.core.MinHash.downsample]], mins only. */
+  def downsample(m: ArrayData, maxHash: Long): ArrayData =
+    new GenericArrayData(graft.core.MinHash.downsample(m.toLongArray(), null, maxHash)._1)
 
   /** Dot product of two ARRAY<DOUBLE> columns, left-to-right accumulation. */
   def dot(a: ArrayData, b: ArrayData): Double = {
@@ -271,9 +225,10 @@ object SketchKernels {
     total
   }
 
-  /** Sign-bit hyperplane LSH keys over an ARRAY<FLOAT> embedding —
-    * codegen'd twin of the UDF in `Similarity.hyperplaneKeysUdf` (same
-    * plane derivation, same accumulation order, same probe-key layout). */
+  /** Sign-bit hyperplane LSH keys over an ARRAY<FLOAT> embedding — the
+    * kernel of [[graft.operators.Similarity.hyperplaneKeys]] (ExpressionsSpec
+    * checks it against the test tree's UDF formulation: same plane
+    * derivation, accumulation order and probe-key layout). */
   def hyperplaneKeys(v: ArrayData, dim: Int, nPlanes: Int, nTables: Int,
       seed: Long, probe: Boolean): ArrayData = {
     val planes = planesFor(dim, nPlanes, nTables, seed)
@@ -316,7 +271,7 @@ object SketchKernels {
   /** combos(scheme)(pick) = all C(nBlocks, pick) index combinations, in
     * `Seq.combinations` order (the order is part of the key tag, so it is
     * pinned here and differentially tested against the fold-built
-    * Column form in GraftFunctions). */
+    * Column form in the test tree's `graft.functions.Oracles`). */
   private final val jointCombos: Array[Array[Array[Array[Int]]]] =
     jointSchemes.map { case (offs, _, _) =>
       (0 to offs.length).map { pick =>
@@ -327,11 +282,11 @@ object SketchKernels {
   /**
    * All C(nBlocks, pick) joint band keys of a 64-bit fingerprint in one
    * static call: key = comboTag folded with the selected block values
-   * (`acc * base + block`), identical to the fold-of-Columns form in
-   * [[graft.functions.GraftFunctions]] — which built C(8,5) = 56 inlined
-   * expression trees, DUPLICATED into the bands stage's filter and
-   * project, overflowing Janino's 64 KB method limit and dropping the
-   * whole stage out of codegen (observed on d05/m07/m10's sketch stage).
+   * (`acc * base + block`), identical to the fold-of-Columns form (a
+   * test oracle now) — which built C(8,5) = 56 inlined expression trees,
+   * DUPLICATED into the bands stage's filter and project, overflowing
+   * Janino's 64 KB method limit and dropping the whole stage out of
+   * codegen (observed on d05/m07/m10's sketch stage).
    * This kernel codegens as one call site.
    */
   def jointBandKeys(fp: Long, scheme: Int, pick: Int): ArrayData = {
@@ -433,7 +388,8 @@ case class MinhashBandKeys(child: Expression, bands: Int, rowsPerBand: Int, seed
 }
 
 /** `caption_minhash(text)` — string sketcher, codegen'd (the flagship
-  * hot path; the UDF twin in GraftFunctions is the differential oracle). */
+  * hot path; ExpressionsSpec checks it against the test tree's UDF
+  * formulation). */
 case class CaptionMinhash(child: Expression, ksize: Int, num: Int, maxHash: Long, seed: Long)
     extends UnaryExpression with ImplicitCastInputTypes {
   override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] = Seq(StringType)
@@ -499,8 +455,6 @@ case class HyperplaneKeys(child: Expression, dim: Int, nPlanes: Int,
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** `caption_lcs(a, b)` — longest-common-substring length via a
-  * generalized suffix array (codegen'd; confirm-stage substring pass). */
 /** `graft_angular(minsA, abundsA, minsB, abundsB)` — abundance-weighted
   * angular similarity (published sourmash: 1 − 2·acos(ρ)/π over sparse
   * hash→abundance vectors); the
@@ -583,6 +537,8 @@ case class FingerprintJointKeys(child: Expression, scheme: Int, pick: Int)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** `caption_lcs(a, b)` — longest-common-substring length via a
+  * generalized suffix array (codegen'd; confirm-stage substring pass). */
 case class CaptionLcs(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
   override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] = Seq(StringType, StringType)

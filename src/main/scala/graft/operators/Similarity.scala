@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Murmur3
 
 /**
  * Similarity search over an embedding column (`ARRAY<FLOAT>`).
@@ -93,55 +92,16 @@ object Similarity {
    * table whenever their sign patterns differ in ≤ 2 planes — the recall
    * booster that makes near-threshold pairs (where each plane agrees with
    * only moderate probability) reachable without exploding the table
-   * count. Keys per row = nTables × (1 + nPlanes·probe).
+   * count. Keys per row = nTables × (1 + nPlanes·probe). One codegen'd
+   * kernel call ([[graft.functions.expressions.HyperplaneKeys]]);
+   * ExpressionsSpec checks it against a UDF formulation kept in the test
+   * tree (`graft.functions.Oracles.hyperplaneKeysUdf`).
    */
   def hyperplaneKeys(vec: Column, dim: Int, nPlanes: Int, nTables: Int,
       seed: Long = 42L, probe: Boolean = false): Column =
     coalesce(Bridge.column(graft.functions.expressions.HyperplaneKeys(
         Bridge.expression(vec), dim, nPlanes, nTables, seed, probe)),
       typedlit(Array.emptyLongArray))
-
-  /** UDF formulation of [[hyperplaneKeys]] — differential-test oracle
-    * (same plane derivation, accumulation order, and probe layout). */
-  def hyperplaneKeysUdf(vec: Column, dim: Int, nPlanes: Int, nTables: Int,
-      seed: Long = 42L, probe: Boolean = false): Column = {
-    // plane components precomputed once (driver) and closed over — a tiny
-    // deterministic broadcast; ±1 components from murmur low bits
-    val planes: Array[Array[Array[Double]]] =
-      Array.tabulate(nTables, nPlanes, dim) { (t, p, i) =>
-        if ((Murmur3.hash64(s"$t:$p:$i", seed) & 1L) == 0L) 1.0 else -1.0
-      }
-    val perTable = if (probe) nPlanes + 1 else 1
-    val f = udf((v: Seq[Float]) => {
-      if (v == null) Array.emptyLongArray
-      else {
-        val out = new Array[Long](nTables * perTable)
-        var t = 0
-        while (t < nTables) {
-          var key = 0L
-          var p = 0
-          while (p < nPlanes) {
-            val comp = planes(t)(p)
-            var dot = 0.0
-            var i = 0
-            val n = math.min(v.length, comp.length)
-            while (i < n) { dot += comp(i) * v(i); i += 1 }
-            if (dot > 0) key |= (1L << p)
-            p += 1
-          }
-          out(t * perTable) = key * nTables + t // tag table index into the key
-          var q = 1
-          while (q < perTable) { // 1-bit probe keys
-            out(t * perTable + q) = (key ^ (1L << (q - 1))) * nTables + t
-            q += 1
-          }
-          t += 1
-        }
-        out
-      }
-    })
-    f(vec)
-  }
 
   /**
    * LSH-bucketed near-dup pairs: bucket equi-grouping + exact cosine
@@ -611,7 +571,9 @@ object Similarity {
     typedlit(flat.toSeq.map(_.toSeq))
   }
 
-  /** Codegen'd PQ encode column: ARRAY<DOUBLE> vector → ARRAY<INT> codes. */
+  /** Codegen'd PQ encode column: ARRAY<DOUBLE> vector → ARRAY<INT> codes.
+    * QueriesSpec checks it against a local re-derivation and a UDF
+    * formulation kept in the test tree (`graft.functions.Oracles.pqEncodeUdf`). */
   def pqEncodeCol(vec: Column, codebookLit: Column, m: Int, ks: Int, subDim: Int): Column =
     Bridge.column(graft.functions.expressions.PqEncode(
       Bridge.expression(vec), Bridge.expression(codebookLit), m, ks, subDim))
@@ -622,30 +584,6 @@ object Similarity {
     Bridge.column(graft.functions.expressions.PqAdc(
       Bridge.expression(vec), Bridge.expression(codes),
       Bridge.expression(codebookLit), m, ks, subDim))
-
-  /** UDF twin of [[pqEncodeCol]] — differential-test oracle (same argmin
-    * tie rule, same accumulation order). */
-  def pqEncodeUdf(vec: Column, codebook: Array[Array[Double]],
-      m: Int, ks: Int, subDim: Int): Column = {
-    val f = udf((v: Seq[Double]) => {
-      if (v == null) null
-      else Array.tabulate(m) { j =>
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < ks) {
-          val cent = codebook(j * ks + c)
-          var s = 0.0
-          var i = 0
-          while (i < subDim) { val x = v(j * subDim + i) - cent(i); s += x * x; i += 1 }
-          if (s < bestD) { bestD = s; best = c }
-          c += 1
-        }
-        best
-      }
-    })
-    f(vec)
-  }
 
   /**
    * IVF-PQ top-k (ADC): per-query search restricted to the probed IVF

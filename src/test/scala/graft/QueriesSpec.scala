@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.Oracles
 import graft.operators.SparkTestSession
 import graft.queries.{Dedup, Embeddings, Multimodal, QuerySupport, Streaming, Text}
 
@@ -1053,7 +1054,7 @@ class QueriesSpec extends AnyFunSuite {
         Similarity.pqEncodeCol(col("embedding"), cbLit, m, ks, subDim).as("codes"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
     val viaUdf = emb.select(col("vec_id"),
-        Similarity.pqEncodeUdf(expr("transform(embedding, x -> cast(x as double))"),
+        Oracles.pqEncodeUdf(expr("transform(embedding, x -> cast(x as double))"),
           cbFlat, m, ks, subDim).as("codes"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
     assert(viaExpr.keySet === vecs.keySet)

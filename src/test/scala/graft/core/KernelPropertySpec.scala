@@ -14,7 +14,9 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
  *    (`MinHashAgg`'s recombination property);
  *  - downsample composition (m1 then m2 == min(m1, m2) once) is why
  *    sm08 may downsample incrementally at any stage of a plan;
- *  - comparison bounds/symmetry guard the confirm thresholds.
+ *  - comparison bounds/symmetry guard the confirm thresholds;
+ *  - the single-pass `intersectionSize` every Jaccard runs equals the
+ *    merge-based definition it replaced.
  */
 class KernelPropertySpec extends AnyFunSuite {
 
@@ -87,6 +89,62 @@ class KernelPropertySpec extends AnyFunSuite {
       ab == ba && ab >= 0.0 && ab <= 1.0 &&
         (a.isEmpty || MinHash.compare(a, a, cfgK) == 1.0)
     })
+  }
+
+  /** The merge-based `intersection_size` the single truncated-union
+    * pass replaced: merge-union re-truncated to `num`, intersect A with
+    * B, then re-intersect that with the combined sketch. */
+  private def intersectionSizeByMerge(a: Array[Long], b: Array[Long],
+      cfg: SketchConfig): (Long, Long) = {
+    val combined = MinHash.merge(a, b, cfg)
+    val ab = new Array[Long](math.min(a.length, b.length))
+    var i = 0; var j = 0; var n = 0
+    while (i < a.length && j < b.length) {
+      val c = java.lang.Long.compareUnsigned(a(i), b(j))
+      if (c == 0) { ab(n) = a(i); n += 1; i += 1; j += 1 }
+      else if (c < 0) i += 1
+      else j += 1
+    }
+    val common = U64.intersectSize(java.util.Arrays.copyOf(ab, n), combined)
+    (common.toLong, combined.length.toLong)
+  }
+
+  /** Overlapping pairs up to `maxLen` long: both sides are random subsets
+    * of one pool drawn over the full u64 range (high bit set on about
+    * half the values), so A∩B is large and a bottom-k cut falls inside
+    * it; empty sides come up whenever a subset or the pool is empty. */
+  private def pairGen(maxLen: Int): Gen[(Array[Long], Array[Long])] = for {
+    n <- Gen.choose(0, maxLen)
+    pool <- Gen.listOfN(n, Gen.choose(Long.MinValue, Long.MaxValue))
+    inA <- Gen.listOfN(n, Gen.prob(0.6))
+    inB <- Gen.listOfN(n, Gen.prob(0.6))
+  } yield {
+    val sorted = pool.distinct.sortWith(java.lang.Long.compareUnsigned(_, _) < 0)
+    def pick(in: List[Boolean]) = sorted.zip(in).collect { case (x, true) => x }.toArray
+    (pick(inA), pick(inB))
+  }
+
+  test("single-pass intersectionSize/compare == the merge-based oracle") {
+    val configs = Seq(
+      SketchConfig(num = 1, ksize = 4),
+      SketchConfig(num = 8, ksize = 4),
+      SketchConfig(num = 500, ksize = 4),
+      cfgScaled,
+      // non-normalized: num AND maxHash set, so merge still truncates
+      SketchConfig(num = 8, ksize = 4, maxHash = Long.MinValue))
+    val edges = Seq(Array.emptyLongArray, Array(Long.MinValue, -1L),
+      Array(0L, 1L, Long.MaxValue, Long.MinValue, -2L, -1L))
+    for (cfg <- configs) {
+      def agrees(a: Array[Long], b: Array[Long]): Boolean = {
+        val (common, denom) = intersectionSizeByMerge(a, b, cfg)
+        MinHash.intersectionSize(a, b, cfg) == ((common, denom)) &&
+          MinHash.compare(a, b, cfg) == common.toDouble / math.max(1L, denom).toDouble
+      }
+      for (a <- edges; b <- edges)
+        assert(agrees(a, b), s"$cfg a=${a.toSeq} b=${b.toSeq}")
+      check(s"oracle num=${cfg.num} maxHash=${cfg.maxHash}",
+        Prop.forAll(pairGen(if (cfg.num == 500) 1200 else 40)) { case (a, b) => agrees(a, b) })
+    }
   }
 
   test("containment is bounded and 1.0 on self; countCommon matches the set model") {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{MinHash, SketchConfig, U64}
 import graft.functions.GraftFunctions._
+import graft.functions.Oracles._
 import graft.operators.SparkTestSession
 import scala.util.Random
 
@@ -70,6 +71,41 @@ class ExpressionsSpec extends AnyFunSuite {
     }
   }
 
+  test("native jaccard/containment/downsample == core kernels with a typedlit side") {
+    import spark.implicits._
+    // the SignatureSearch query shape: one side is a typedlit literal
+    // (GenericArrayData), the other a parquet column (UnsafeArrayData)
+    val pairs = randomSketchPairs(40, 64)
+    val queries = pairs.take(4).map(_._2) :+ Array.emptyLongArray
+    val tmp = java.nio.file.Files.createTempDirectory("exprlit").toString
+    pairs.map(_._1).toDF("a").write.mode("overwrite").parquet(tmp)
+    for (cfg <- Seq(SketchConfig(num = 64), SketchConfig(num = 8)); q <- queries) {
+      val lq = typedlit(q)
+      val df = spark.read.parquet(tmp).select($"a",
+        jaccard($"a", lq, cfg), jaccard(lq, $"a", cfg),
+        containment($"a", lq), containment(lq, $"a"))
+      val literals = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case l: org.apache.spark.sql.catalyst.expressions.Literal => l.value
+      }))
+      assert(literals.length === 4 && literals.forall(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.util.GenericArrayData]), literals)
+      val out = df.collect()
+      assert(out.length === pairs.length)
+      out.foreach { r =>
+        val a = r.getSeq[Long](0).toArray
+        val ctx = s"num=${cfg.num} a=${a.length} q=${q.length}"
+        assert(r.getDouble(1) === MinHash.compare(a, q, cfg), s"jaccard(col, lit) $ctx")
+        assert(r.getDouble(2) === MinHash.compare(q, a, cfg), s"jaccard(lit, col) $ctx")
+        assert(r.getDouble(3) === MinHash.containment(a, q), s"containment(col, lit) $ctx")
+        assert(r.getDouble(4) === MinHash.containment(q, a), s"containment(lit, col) $ctx")
+      }
+    }
+    for (mh <- Seq(0L, 1L << 40, Long.MinValue, -2L); q <- queries) {
+      val got = spark.range(1).select(downsampleMins(typedlit(q), mh)).head().getSeq[Long](0)
+      assert(got === MinHash.downsample(q, null, mh)._1.toSeq, s"downsample maxHash=$mh")
+    }
+  }
+
   test("native sketchers == UDF oracles over corpus rows (incl. all dup kinds)") {
     import spark.implicits._
     val cfg = SketchConfig(num = 128, ksize = 4)
@@ -129,7 +165,7 @@ class ExpressionsSpec extends AnyFunSuite {
     for (probe <- Seq(true, false)) {
       val out = emb.select(
         Similarity.hyperplaneKeys($"embedding", 64, 9, 8, probe = probe).as("n"),
-        Similarity.hyperplaneKeysUdf($"embedding", 64, 9, 8, probe = probe).as("u"))
+        Oracles.hyperplaneKeysUdf($"embedding", 64, 9, 8, probe = probe).as("u"))
         .collect()
       assert(out.nonEmpty)
       out.foreach(r => assert(r.getSeq[Long](0) === r.getSeq[Long](1), s"probe=$probe"))
@@ -183,7 +219,7 @@ class ExpressionsSpec extends AnyFunSuite {
     for (pick <- 1 to 7) { // scheme 0: eight 8-bit blocks
       val out = df.select(
         GraftFunctions.fingerprintJointBands($"fp", pick).as("k"),
-        GraftFunctions.fingerprintJointBandsFoldForm($"fp", pick).as("o")).collect()
+        Oracles.fingerprintJointBandsFoldForm($"fp", pick).as("o")).collect()
       out.foreach(row => assert(row.getSeq[Long](0) === row.getSeq[Long](1),
         s"scheme 0 pick=$pick mismatch"))
     }
@@ -192,7 +228,7 @@ class ExpressionsSpec extends AnyFunSuite {
         Bridge.column(expressions.FingerprintJointKeys(Bridge.expression($"fp"), 1, 3))
       else GraftFunctions.fingerprintBandsHamming2($"fp")
       val out = df.select(kernel.as("k"),
-        GraftFunctions.fingerprintCombosFoldForm($"fp", pick).as("o")).collect()
+        Oracles.fingerprintCombosFoldForm($"fp", pick).as("o")).collect()
       out.foreach(row => assert(row.getSeq[Long](0) === row.getSeq[Long](1),
         s"scheme 1 pick=$pick mismatch"))
     }
