@@ -389,7 +389,7 @@ object MinHash {
     compare(a, b, cfg.num)
 
   /** [[compare]] for a bottom-k size `num` (0 = no truncation) — the
-    * form the codegen'd `JaccardMinhash` calls. */
+    * form the codegen'd `SketchKernels.jaccard` calls. */
   def compare(a: Array[Long], b: Array[Long], num: Int): Double = {
     val cd = intersectionSize(a, b, num)
     cd._1.toDouble / math.max(1L, cd._2).toDouble

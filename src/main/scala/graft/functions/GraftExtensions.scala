@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import graft.functions.expressions._
+import graft.functions.expressions.{SketchExpressions, SketchKernels}
 
 /**
  * SQL surface of the engine's custom kernels, mirroring the reference's
@@ -17,8 +17,9 @@ import graft.functions.expressions._
  *   graft_angular(mA, aA, mB, aB)       — abundance-weighted (angular)
  *   graft_downsample(mins, scaled)      — re-truncate to a coarser scaled
  *
- * Register either per-session (`GraftExtensions.register(spark)`) or
- * cluster-wide via
+ * Each builds the same expression as its Column twin in `GraftFunctions`
+ * ([[SketchExpressions]]), argument checks included. Register either
+ * per-session (`GraftExtensions.register(spark)`) or cluster-wide via
  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -37,29 +38,31 @@ object GraftExtensions {
       s"$what must be an integer literal, got $other")
   }
 
+  private def kernelInfo(name: String) = new ExpressionInfo(SketchKernels.getClass.getName, name)
+
   private[functions] val descriptors: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     ("graft_jaccard",
-      new ExpressionInfo(classOf[JaccardMinhash].getName, "graft_jaccard"),
+      kernelInfo("graft_jaccard"),
       (args: Seq[Expression]) => args match {
-        case Seq(a, b) => JaccardMinhash(a, b, 0)
-        case Seq(a, b, n) => JaccardMinhash(a, b, intLit(n, "num"))
+        case Seq(a, b) => SketchExpressions.jaccard(a, b, 0)
+        case Seq(a, b, n) => SketchExpressions.jaccard(a, b, intLit(n, "num"))
         case _ => throw new IllegalArgumentException("graft_jaccard(a, b[, num])")
       }),
     ("graft_containment",
-      new ExpressionInfo(classOf[ContainmentMinhash].getName, "graft_containment"),
+      kernelInfo("graft_containment"),
       (args: Seq[Expression]) => args match {
-        case Seq(a, b) => ContainmentMinhash(a, b)
+        case Seq(a, b) => SketchExpressions.containment(a, b)
         case _ => throw new IllegalArgumentException("graft_containment(a, b)")
       }),
     ("graft_band_keys",
-      new ExpressionInfo(classOf[MinhashBandKeys].getName, "graft_band_keys"),
+      kernelInfo("graft_band_keys"),
       (args: Seq[Expression]) => args match {
         case Seq(m, bands, rows) =>
-          MinhashBandKeys(m, intLit(bands, "bands"), intLit(rows, "rowsPerBand"), 42L)
+          SketchExpressions.bandKeys(m, intLit(bands, "bands"), intLit(rows, "rowsPerBand"), 42L)
         case _ => throw new IllegalArgumentException("graft_band_keys(mins, bands, rows)")
       }),
     ("graft_downsample",
-      new ExpressionInfo(classOf[DownsampleMinhash].getName, "graft_downsample"),
+      kernelInfo("graft_downsample"),
       (args: Seq[Expression]) => args match {
         case Seq(m, scaled) =>
           val s = scaled match {
@@ -68,13 +71,13 @@ object GraftExtensions {
             case other => throw new IllegalArgumentException(
               s"scaled must be an integer literal, got $other")
           }
-          DownsampleMinhash(m, graft.core.SketchConfig.scaledToMaxHash(s))
+          SketchExpressions.downsample(m, graft.core.SketchConfig.scaledToMaxHash(s))
         case _ => throw new IllegalArgumentException("graft_downsample(mins, scaled)")
       }),
     ("graft_angular",
-      new ExpressionInfo(classOf[AngularMinhash].getName, "graft_angular"),
+      kernelInfo("graft_angular"),
       (args: Seq[Expression]) => args match {
-        case Seq(ma, aa, mb, ab) => AngularMinhash(ma, aa, mb, ab)
+        case Seq(ma, aa, mb, ab) => SketchExpressions.angular(ma, aa, mb, ab)
         case _ => throw new IllegalArgumentException(
           "graft_angular(minsA, abundsA, minsB, abundsB)")
       }),

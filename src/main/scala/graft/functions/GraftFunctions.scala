@@ -4,16 +4,19 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import graft.core._
+import graft.functions.expressions.SketchExpressions
 
 /**
  * Column-level functions of the engine — the Spark surface of the
  * reference's FFI verbs (`/root/reference/src/ffi.rs`: add_sequence /
  * compare / containment / merge re-expressed as columns).
  *
- * Scalar kernels are native codegen'd Catalyst expressions
- * ([[graft.functions.expressions]]) calling tight `while`-loop kernels
- * from `graft.core` — no UDF encoder round-trips in any hot path. Their
- * UDF formulations live in the test tree (`graft.functions.Oracles`),
+ * Scalar kernels are static calls into `SketchKernels`, built as
+ * Catalyst expressions by [[graft.functions.expressions.SketchExpressions]]
+ * (the SQL functions build through the same place) and calling tight
+ * `while`-loop kernels from `graft.core` — no UDF encoder round-trips in
+ * any hot path. Their UDF formulations live in the test tree
+ * (`graft.functions.Oracles`),
  * where ExpressionsSpec asserts bit-equality. Pure-relational pieces
  * (Hamming distance) use built-in codegen'd `functions._` only.
  */
@@ -24,7 +27,7 @@ object GraftFunctions {
   /** Caption MinHash sketch: normalized char-k-shingles → bottom-num mins.
     * Native codegen'd expression (null caption → empty sketch). */
   def captionMinhash(caption: Column, cfg: SketchConfig): Column =
-    coalesce(Bridge.column(expressions.CaptionMinhash(
+    coalesce(Bridge.column(SketchExpressions.captionMinhash(
       Bridge.expression(caption), cfg.ksize, cfg.num, cfg.maxHash, cfg.seed)), emptyMins)
 
   /** Abundance-TRACKING caption sketch: the same shingle stream as
@@ -52,12 +55,12 @@ object GraftFunctions {
     * Native codegen'd prefix cut; mins-only column form (abundance-
     * carrying callers use the kernel). */
   def downsampleMins(mins: Column, newMaxHash: Long): Column =
-    Bridge.column(expressions.DownsampleMinhash(Bridge.expression(mins), newMaxHash))
+    Bridge.column(SketchExpressions.downsample(Bridge.expression(mins), newMaxHash))
 
   /** Caption SimHash64 fingerprint over the same shingle stream — native
     * codegen'd expression (null caption → 0L). */
   def captionSimhash(caption: Column, ksize: Int, seed: Long = 42L): Column =
-    coalesce(Bridge.column(expressions.CaptionSimhash(
+    coalesce(Bridge.column(SketchExpressions.captionSimhash(
       Bridge.expression(caption), ksize, seed)), lit(0L))
 
   /** Longest-common-substring length of two strings via a generalized
@@ -65,7 +68,7 @@ object GraftFunctions {
     * (containment is the special case `lcs == min(length)`). Native
     * codegen'd expression; null on null input. */
   def captionLcs(a: Column, b: Column): Column =
-    Bridge.column(expressions.CaptionLcs(Bridge.expression(a), Bridge.expression(b)))
+    Bridge.column(SketchExpressions.captionLcs(Bridge.expression(a), Bridge.expression(b)))
 
   /**
    * Image MinHash sketch: decode → coarse-normalize pixels → byte-shingle
@@ -75,35 +78,35 @@ object GraftFunctions {
    * treated as an unknown format (raw-byte fallback sketch), not empty.
    */
   def imageMinhash(bytes: Column, fmt: Column, cfg: SketchConfig, stride: Int = 4): Column =
-    // fmt null-coalesced BEFORE the expression: BinaryExpression
-    // null-short-circuits on EITHER input, which would turn (bytes,
+    // fmt null-coalesced BEFORE the expression: the kernel call
+    // null-short-circuits on ANY input, which would turn (bytes,
     // null fmt) into an empty sketch — the kernel treats an
     // unknown/missing fmt as the raw-byte fallback instead
-    coalesce(Bridge.column(expressions.ImageMinhash(
+    coalesce(Bridge.column(SketchExpressions.imageMinhash(
       Bridge.expression(bytes), Bridge.expression(coalesce(fmt, lit(""))),
       cfg.ksize, cfg.num, cfg.maxHash, cfg.seed, stride)), emptyMins)
 
   /** Reference-semantics Jaccard estimate (combined-denominator,
     * `/root/reference/src/lib.rs:501-508`) — native codegen'd Catalyst
-    * expression ([[graft.functions.expressions.JaccardMinhash]]). */
+    * expression ([[SketchExpressions.jaccard]]). */
   def jaccard(a: Column, b: Column, cfg: SketchConfig): Column =
-    Bridge.column(expressions.JaccardMinhash(
+    Bridge.column(SketchExpressions.jaccard(
       Bridge.expression(a), Bridge.expression(b), cfg.num))
 
   /** Abundance-weighted (angular/cosine) similarity over two sketches'
-    * (mins, abunds) pairs — native codegen'd expression
-    * ([[graft.functions.expressions.AngularMinhash]]); Column twin of
+    * (mins, abunds) pairs — native codegen'd kernel call
+    * ([[SketchExpressions.angular]]); Column twin of
     * `MinHash.angularSimilarity` (sm07, the "abundance" search mode). */
   def angularSimilarity(minsA: Column, abundsA: Column,
       minsB: Column, abundsB: Column): Column =
-    Bridge.column(expressions.AngularMinhash(
+    Bridge.column(SketchExpressions.angular(
       Bridge.expression(minsA), Bridge.expression(abundsA),
       Bridge.expression(minsB), Bridge.expression(abundsB)))
 
   /** Asymmetric containment (`/root/reference/src/index.rs:146-160`) —
     * native codegen'd expression. */
   def containment(a: Column, b: Column): Column =
-    Bridge.column(expressions.ContainmentMinhash(
+    Bridge.column(SketchExpressions.containment(
       Bridge.expression(a), Bridge.expression(b)))
 
   /** Hamming distance between two 64-bit fingerprints — pure built-ins
@@ -118,7 +121,7 @@ object GraftFunctions {
    * partial band matches only an identical partial band — no skew blowup).
    */
   def minhashBands(mins: Column, bands: Int, rowsPerBand: Int, seed: Long = 42L): Column =
-    Bridge.column(expressions.MinhashBandKeys(
+    Bridge.column(SketchExpressions.bandKeys(
       Bridge.expression(mins), bands, rowsPerBand, seed))
 
   /**
@@ -138,7 +141,7 @@ object GraftFunctions {
    * candidate path (caught by the second-scale e2e gate).
    *
    * Why radius 2 and not 3 (C(6,3) = 20 three-block ~33-bit joints,
-   * [[expressions.FingerprintJointKeys]] with `pick = 3`): key
+   * [[SketchExpressions.jointBandKeys]] with `pick = 3`): key
    * SELECTIVITY is the scale dial. Fingerprints of correlated content
    * (structured image phashes) are far from uniform — measured on the
    * 600k synthetic corpus, 33-bit 3-block joints produced 12.7M
@@ -151,10 +154,10 @@ object GraftFunctions {
    *
    * Key layout: comboTag in the high bits, then the block values in
    * 11-bit slots, exact in a long. One codegen'd kernel call
-   * ([[expressions.FingerprintJointKeys]] scheme 1), no UDF.
+   * ([[SketchExpressions.jointBandKeys]] scheme 1), no UDF.
    */
   def fingerprintBandsHamming2(fp: Column): Column =
-    Bridge.column(expressions.FingerprintJointKeys(Bridge.expression(fp), scheme = 1, pick = 4))
+    Bridge.column(SketchExpressions.jointBandKeys(Bridge.expression(fp), scheme = 1, pick = 4))
 
   /**
    * Joint `pick`-of-8 band keys for a 64-bit fingerprint: all C(8,pick)
@@ -172,11 +175,9 @@ object GraftFunctions {
    * (16.7M values; 0 hot buckets, max 4, and 26× fewer coincidence
    * candidates than pick=2 at the same scale). Tag (< 2⁶) + 8·pick
    * value bits — exact in a long for pick ≤ 7; one codegen'd kernel
-   * call ([[expressions.FingerprintJointKeys]] scheme 0).
+   * call ([[SketchExpressions.jointBandKeys]] scheme 0).
    */
-  def fingerprintJointBands(fp: Column, pick: Int): Column = {
-    require(pick >= 1 && pick <= 7, "pick must be in [1, 7]")
-    Bridge.column(expressions.FingerprintJointKeys(Bridge.expression(fp), scheme = 0, pick = pick))
-  }
+  def fingerprintJointBands(fp: Column, pick: Int): Column =
+    Bridge.column(SketchExpressions.jointBandKeys(Bridge.expression(fp), scheme = 0, pick = pick))
 
 }

@@ -1,15 +1,15 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /**
- * Native Catalyst kernels for the sketch-comparison hot path (SURVEY.md §7
- * stage 5). Each codegens as a single static call, so the surrounding plan
- * stays inside whole-stage codegen, with no UDF encoder round-trip.
+ * Static kernels for the sketch-comparison hot path (SURVEY.md §7
+ * stage 5). [[SketchExpressions]] turns each into a Catalyst expression
+ * that codegens as a single static call, so the surrounding plan stays
+ * inside whole-stage codegen, with no UDF encoder round-trip.
  *
  * A sketch verb has exactly one loop, in `graft.core.MinHash`: the
  * jaccard, containment, downsample and angular kernels copy their
@@ -133,8 +133,7 @@ object SketchKernels {
   }
 
   /** Abundance-weighted angular similarity (1 - 2*acos(cos)/pi) over two sketches'
-    * (mins, abunds) pairs — static kernel for the codegen'd
-    * [[AngularMinhash]]. */
+    * (mins, abunds) pairs — [[graft.core.MinHash.angularSimilarity]]. */
   def angular(ma: ArrayData, aa: ArrayData, mb: ArrayData, ab: ArrayData): Double =
     graft.core.MinHash.angularSimilarity(
       ma.toLongArray(), aa.toLongArray(), mb.toLongArray(), ab.toLongArray())
@@ -310,246 +309,130 @@ object SketchKernels {
   }
 }
 
-/** `dot_product(a, b)` over ARRAY<DOUBLE> — no intermediate array (the
-  * `aggregate(zip_with(...))` formulation allocates one per row). */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SketchKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.expressions.SketchKernels.dot($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
 
-/** `jaccard_minhash(a, b)` — reference-semantics similarity estimate. */
-case class JaccardMinhash(left: Expression, right: Expression, num: Int)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SketchKernels.jaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], num)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.expressions.SketchKernels.jaccard($a, $b, $num)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
+/**
+ * The Catalyst form of each [[SketchKernels]] method: a Spark
+ * `StaticInvoke` of the method of the same name, which codegens as the
+ * single call `graft.functions.expressions.SketchKernels.<name>(…)` and
+ * evaluates it reflectively off the codegen path. The Column API
+ * (`GraftFunctions`, `Similarity`) and the SQL functions
+ * (`GraftExtensions`) both build through here, so each kernel's input
+ * types and argument check exist once. Scalar parameters are `Literal`
+ * arguments (constants in the generated code). A null input gives a
+ * null result; the kernels themselves never return null.
+ */
+object SketchExpressions {
 
-/** `containment_minhash(a, b)` — asymmetric containment. */
-case class ContainmentMinhash(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SketchKernels.containment(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.expressions.SketchKernels.containment($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
+  /** `inputTypes` declares the column arguments (analysis-time implicit
+    * casts instead of a runtime ClassCastException or misread array
+    * slots); the trailing scalar literals carry their own types. */
+  private def kernel(name: String, dataType: DataType, inputTypes: Seq[DataType],
+      args: Expression*): Expression =
+    StaticInvoke(SketchKernels.getClass, dataType, name, args,
+      inputTypes ++ args.drop(inputTypes.length).map(_.dataType),
+      propagateNull = true, returnNullable = false)
 
-/** `graft_downsample(mins, scaled)` — sketch re-truncation to a coarser
-  * scaled cutoff (the `search --scaled` operation the reference promises
-  * and drops, sourmash.yml:71-76); codegen'd prefix cut. `maxHash` is
-  * pre-converted from the scaled literal at registration. */
-case class DownsampleMinhash(child: Expression, maxHash: Long)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(m: Any): Any =
-    SketchKernels.downsample(m.asInstanceOf[ArrayData], maxHash)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, m =>
-      s"graft.functions.expressions.SketchKernels.downsample($m, ${maxHash}L)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
+  private val longs = ArrayType(LongType)
+  private val doubles = ArrayType(DoubleType)
+  private val keys = ArrayType(LongType, containsNull = false)
 
-/** `minhash_band_keys(mins)` — LSH band keys, codegen'd. */
-case class MinhashBandKeys(child: Expression, bands: Int, rowsPerBand: Int, seed: Long)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(bands > 0 && rowsPerBand > 0,
-    s"minhash_band_keys: bands=$bands rowsPerBand=$rowsPerBand must be positive")
-  override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(m: Any): Any =
-    SketchKernels.bandKeys(m.asInstanceOf[ArrayData], bands, rowsPerBand, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, m =>
-      s"graft.functions.expressions.SketchKernels.bandKeys($m, $bands, $rowsPerBand, ${seed}L)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
+  /** Dot product over ARRAY<DOUBLE> — no intermediate array (the
+    * `aggregate(zip_with(...))` formulation allocates one per row). */
+  def dot(a: Expression, b: Expression): Expression =
+    kernel("dot", DoubleType, Seq(doubles, doubles), a, b)
 
-/** `caption_minhash(text)` — string sketcher, codegen'd (the flagship
-  * hot path; ExpressionsSpec checks it against the test tree's UDF
-  * formulation). */
-case class CaptionMinhash(child: Expression, ksize: Int, num: Int, maxHash: Long, seed: Long)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(s: Any): Any =
-    SketchKernels.captionMinhash(
-      s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], ksize, num, maxHash, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s =>
-      s"graft.functions.expressions.SketchKernels.captionMinhash($s, $ksize, $num, ${maxHash}L, ${seed}L)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
+  /** Reference-semantics Jaccard estimate. */
+  def jaccard(a: Expression, b: Expression, num: Int): Expression =
+    kernel("jaccard", DoubleType, Seq(longs, longs), a, b, Literal(num))
 
-/** `caption_simhash(text)` — 64-bit SimHash fingerprint, codegen'd. */
-case class CaptionSimhash(child: Expression, ksize: Int, seed: Long)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def nullSafeEval(s: Any): Any =
-    SketchKernels.captionSimhash(
-      s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], ksize, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s =>
-      s"graft.functions.expressions.SketchKernels.captionSimhash($s, $ksize, ${seed}L)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
+  /** Asymmetric containment. */
+  def containment(a: Expression, b: Expression): Expression =
+    kernel("containment", DoubleType, Seq(longs, longs), a, b)
 
-/** `image_minhash(bytes, fmt)` — decode → normalize → sketch, codegen'd. */
-case class ImageMinhash(left: Expression, right: Expression,
-    ksize: Int, num: Int, maxHash: Long, seed: Long, stride: Int)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] = Seq(BinaryType, StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(b: Any, f: Any): Any =
-    SketchKernels.imageMinhash(b.asInstanceOf[Array[Byte]],
-      f.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      ksize, num, maxHash, seed, stride)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, f) =>
-      s"graft.functions.expressions.SketchKernels.imageMinhash($b, $f, $ksize, $num, ${maxHash}L, ${seed}L, $stride)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
+  /** Sketch re-truncation to a coarser scaled cutoff (the `search
+    * --scaled` operation the reference promises and drops,
+    * sourmash.yml:71-76); `maxHash` is already converted from `scaled`. */
+  def downsample(mins: Expression, maxHash: Long): Expression =
+    kernel("downsample", keys, Seq(longs), mins, Literal(maxHash))
 
-/** `hyperplane_keys(vec)` — sign-bit LSH keys for the embedding ANN
-  * path, codegen'd (the e03 banding hot path). */
-case class HyperplaneKeys(child: Expression, dim: Int, nPlanes: Int,
-    nTables: Int, seed: Long, probe: Boolean)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(dim > 0 && nPlanes > 0 && nPlanes <= 62 && nTables > 0,
-    s"hyperplane_keys: dim=$dim nPlanes=$nPlanes nTables=$nTables out of range")
-  // ARRAY<FLOAT> declared: an ARRAY<DOUBLE> embedding column gets an
-  // analysis-time cast — without the declaration, getFloat() read 4-byte
-  // strides of 8-byte slots and produced silently-garbage LSH keys
-  override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] = Seq(ArrayType(FloatType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    SketchKernels.hyperplaneKeys(v.asInstanceOf[ArrayData], dim, nPlanes,
-      nTables, seed, probe)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v =>
-      s"graft.functions.expressions.SketchKernels.hyperplaneKeys($v, $dim, $nPlanes, $nTables, ${seed}L, $probe)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
+  /** LSH band keys over a mins array. */
+  def bandKeys(mins: Expression, bands: Int, rowsPerBand: Int, seed: Long): Expression = {
+    require(bands > 0 && rowsPerBand > 0,
+      s"minhash_band_keys: bands=$bands rowsPerBand=$rowsPerBand must be positive")
+    kernel("bandKeys", keys, Seq(longs), mins, Literal(bands), Literal(rowsPerBand), Literal(seed))
+  }
 
-/** `graft_angular(minsA, abundsA, minsB, abundsB)` — abundance-weighted
-  * angular similarity (published sourmash: 1 − 2·acos(ρ)/π over sparse
-  * hash→abundance vectors); the
-  * SQL-surface twin of `MinHash.angularSimilarity` (sm07, the
-  * `"abundance"` search mode). Strict nulls: a sketch without stored
-  * abundances passes `array_repeat(1L, size(mins))` explicitly. */
-case class AngularMinhash(first: Expression, second: Expression,
-    third: Expression, fourth: Expression)
-    extends QuaternaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] =
-    Seq(ArrayType(LongType), ArrayType(LongType), ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    SketchKernels.angular(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      c.asInstanceOf[ArrayData], d.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d) =>
-      s"graft.functions.expressions.SketchKernels.angular($a, $b, $c, $d)")
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression, newFourth: Expression): Expression =
-    copy(newFirst, newSecond, newThird, newFourth)
-}
+  /** Caption string sketcher — the flagship hot path. */
+  def captionMinhash(caption: Expression, ksize: Int, num: Int, maxHash: Long,
+      seed: Long): Expression =
+    kernel("captionMinhash", keys, Seq(StringType), caption,
+      Literal(ksize), Literal(num), Literal(maxHash), Literal(seed))
 
-/** `pq_encode(vec, codebook)` — product-quantization codes (ARRAY<INT>,
-  * one per subspace). The codebook rides the plan as a nested-array
-  * LITERAL (flat `j·ks + c` layout, m·ks·subDim doubles ≈ KBs — model
-  * output, exactly like the broadcast IVF codebook), so executors need no
-  * side channel and the expression codegens as one static call. */
-case class PqEncode(left: Expression, right: Expression,
-    m: Int, ks: Int, subDim: Int)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  require(m > 0 && ks > 0 && subDim > 0, s"pq_encode: m=$m ks=$ks subDim=$subDim")
-  override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] =
-    Seq(ArrayType(DoubleType), ArrayType(ArrayType(DoubleType)))
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(v: Any, cb: Any): Any =
-    SketchKernels.pqEncode(v.asInstanceOf[ArrayData], cb.asInstanceOf[ArrayData], m, ks, subDim)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (v, cb) =>
-      s"graft.functions.expressions.SketchKernels.pqEncode($v, $cb, $m, $ks, $subDim)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
+  /** 64-bit SimHash fingerprint of a caption. */
+  def captionSimhash(caption: Expression, ksize: Int, seed: Long): Expression =
+    kernel("captionSimhash", LongType, Seq(StringType), caption, Literal(ksize), Literal(seed))
 
-/** `pq_adc(queryVec, codes, codebook)` — asymmetric PQ distance, codegen'd
-  * (the e08 rerank hot path: exact query side, m-byte candidate side). */
-case class PqAdc(first: Expression, second: Expression, third: Expression,
-    m: Int, ks: Int, subDim: Int)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  require(m > 0 && ks > 0 && subDim > 0, s"pq_adc: m=$m ks=$ks subDim=$subDim")
-  override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] =
-    Seq(ArrayType(DoubleType), ArrayType(IntegerType), ArrayType(ArrayType(DoubleType)))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any, codes: Any, cb: Any): Any =
-    SketchKernels.pqAdc(v.asInstanceOf[ArrayData], codes.asInstanceOf[ArrayData],
-      cb.asInstanceOf[ArrayData], m, ks, subDim)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (v, codes, cb) =>
-      s"graft.functions.expressions.SketchKernels.pqAdc($v, $codes, $cb, $m, $ks, $subDim)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): Expression = copy(first = f, second = s, third = t)
-}
+  /** Image sketcher: decode → normalize → sketch. */
+  def imageMinhash(bytes: Expression, fmt: Expression, ksize: Int, num: Int,
+      maxHash: Long, seed: Long, stride: Int): Expression =
+    kernel("imageMinhash", keys, Seq(BinaryType, StringType), bytes, fmt,
+      Literal(ksize), Literal(num), Literal(maxHash), Literal(seed), Literal(stride))
 
-/** `joint_band_keys(fp)` — all C(nBlocks, pick) joint Hamming band keys,
-  * codegen'd as one static call (see [[SketchKernels.jointBandKeys]] for
-  * why the fold-of-Columns form broke whole-stage codegen). `scheme`:
-  * 0 = eight 8-bit blocks, 1 = Manku 11/11/11/11/10/10. */
-case class FingerprintJointKeys(child: Expression, scheme: Int, pick: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(scheme == 0 || scheme == 1, s"joint_band_keys: unknown scheme $scheme")
-  require(pick >= 1 && pick <= (if (scheme == 0) 8 else 6),
-    s"joint_band_keys: pick=$pick out of range for scheme $scheme")
-  override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] = Seq(LongType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(fp: Any): Any =
-    SketchKernels.jointBandKeys(fp.asInstanceOf[Long], scheme, pick)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, fp =>
-      s"graft.functions.expressions.SketchKernels.jointBandKeys($fp, $scheme, $pick)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
+  /** Sign-bit LSH keys for the embedding ANN path (the e03 banding hot
+    * path). ARRAY<FLOAT> is declared so an ARRAY<DOUBLE> embedding gets
+    * an analysis-time cast: without it, `getFloat()` read 4-byte strides
+    * of 8-byte slots and produced silently-garbage keys. */
+  def hyperplaneKeys(vec: Expression, dim: Int, nPlanes: Int, nTables: Int,
+      seed: Long, probe: Boolean): Expression = {
+    require(dim > 0 && nPlanes > 0 && nPlanes <= 62 && nTables > 0,
+      s"hyperplane_keys: dim=$dim nPlanes=$nPlanes nTables=$nTables out of range")
+    kernel("hyperplaneKeys", keys, Seq(ArrayType(FloatType)), vec,
+      Literal(dim), Literal(nPlanes), Literal(nTables), Literal(seed), Literal(probe))
+  }
 
-/** `caption_lcs(a, b)` — longest-common-substring length via a
-  * generalized suffix array (codegen'd; confirm-stage substring pass). */
-case class CaptionLcs(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graft.Bridge.AbstractType] = Seq(StringType, StringType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SketchKernels.captionLcs(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.expressions.SketchKernels.captionLcs($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
+  /** Abundance-weighted angular similarity (published sourmash:
+    * 1 − 2·acos(ρ)/π over sparse hash→abundance vectors; sm07, the
+    * `"abundance"` search mode). Strict nulls: a sketch without stored
+    * abundances passes `array_repeat(1L, size(mins))` explicitly. */
+  def angular(minsA: Expression, abundsA: Expression, minsB: Expression,
+      abundsB: Expression): Expression =
+    kernel("angular", DoubleType, Seq(longs, longs, longs, longs), minsA, abundsA, minsB, abundsB)
+
+  private def requirePq(what: String, m: Int, ks: Int, subDim: Int): Unit =
+    require(m > 0 && ks > 0 && subDim > 0, s"$what: m=$m ks=$ks subDim=$subDim")
+
+  /** Product-quantization codes (ARRAY<INT>, one per subspace). The
+    * codebook is a nested-array LITERAL (flat `j·ks + c` layout,
+    * m·ks·subDim doubles ≈ KBs — model output, like the broadcast IVF
+    * codebook), so executors need no side channel and the call stays one
+    * static call. */
+  def pqEncode(vec: Expression, codebook: Expression, m: Int, ks: Int, subDim: Int): Expression = {
+    requirePq("pq_encode", m, ks, subDim)
+    kernel("pqEncode", ArrayType(IntegerType, containsNull = false),
+      Seq(doubles, ArrayType(doubles)), vec, codebook, Literal(m), Literal(ks), Literal(subDim))
+  }
+
+  /** Asymmetric PQ distance (the e08 rerank hot path: exact query side,
+    * m-byte candidate side); the codebook literal as in [[pqEncode]]. */
+  def pqAdc(vec: Expression, codes: Expression, codebook: Expression,
+      m: Int, ks: Int, subDim: Int): Expression = {
+    requirePq("pq_adc", m, ks, subDim)
+    kernel("pqAdc", DoubleType, Seq(doubles, ArrayType(IntegerType), ArrayType(doubles)),
+      vec, codes, codebook, Literal(m), Literal(ks), Literal(subDim))
+  }
+
+  /** All C(nBlocks, pick) joint Hamming band keys of a fingerprint (see
+    * [[SketchKernels.jointBandKeys]] for why this is one kernel call).
+    * `scheme` 0 = eight 8-bit blocks, `pick` ≤ 7 so the tag and 8·pick
+    * value bits fit a long; 1 = Manku 11/11/11/11/10/10, `pick` ≤ 6. */
+  def jointBandKeys(fp: Expression, scheme: Int, pick: Int): Expression = {
+    require(scheme == 0 || scheme == 1, s"joint_band_keys: unknown scheme $scheme")
+    require(pick >= 1 && pick <= (if (scheme == 0) 7 else 6),
+      s"joint_band_keys: pick=$pick out of range for scheme $scheme")
+    kernel("jointBandKeys", keys, Seq(LongType), fp, Literal(scheme), Literal(pick))
+  }
+
+  /** Longest-common-substring length (the confirm-stage substring pass). */
+  def captionLcs(a: Expression, b: Expression): Expression =
+    kernel("captionLcs", IntegerType, Seq(StringType, StringType), a, b)
 }

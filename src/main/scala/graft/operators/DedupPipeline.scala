@@ -382,7 +382,7 @@ object DedupPipeline {
    * candidate side still broadcasts at validation scale while the wide
    * sketch side never can. `s` itself is left untouched.
    */
-  private def pipelineSession(s: SparkSession): SparkSession = {
+  private[operators] def pipelineSession(s: SparkSession): SparkSession = {
     val adaptiveKey = "spark.sql.adaptive.autoBroadcastJoinThreshold"
     // the unset adaptive threshold falls back to the static one, so the
     // child pins the RESOLVED value explicitly: a consumer who set

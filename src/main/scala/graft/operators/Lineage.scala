@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /**
  * Checkpoint + lineage table (north_rule: "every stage writes
@@ -100,15 +101,19 @@ object Lineage {
   /**
    * The flagship pipeline with checkpointed stages: sketch → candidates →
    * edges → clusters, each resumable. A killed run re-invoked with the
-   * same corpus fingerprint reuses every completed stage.
+   * same corpus fingerprint reuses every completed stage. Runs in
+   * [[DedupPipeline]]'s session (static broadcast off) and clusters with
+   * its [[DedupPipeline.clustersFromEdges]], like the uncheckpointed
+   * pipeline; `spark` itself is left untouched.
    */
   def checkpointedClusters(spark: SparkSession, corpus: DataFrame,
       cfg: DedupConfig, root: String, corpusFingerprint: String): DataFrame = {
-    val lin = new Lineage(spark, root)
+    val ps = DedupPipeline.pipelineSession(spark)
+    val lin = new Lineage(ps, root)
     val cfgFp = fingerprint(cfg.toString)
 
     val sk = lin.stage("sketches", fingerprint(corpusFingerprint, cfgFp)) {
-      DedupPipeline.sketches(corpus, cfg)
+      DedupPipeline.sketches(Bridge.rebind(ps, corpus), cfg)
     }
     val skFp = fingerprint(corpusFingerprint, cfgFp, "sketches")
 
@@ -129,15 +134,8 @@ object Lineage {
         .select(col("a").as("src"), col("b").as("dst"))
     }
     lin.stage("clusters", fingerprint(skFp, "clusters")) {
-      val edges = exactEdges.union(nearEdges)
-      val nodes = tagged.select(col("vid").as("id"))
-      val labels = ConnectedComponents.labelAll(nodes, edges, cfg.ccMaxIter)
-      val idmap = tagged.select(col("image_id"), col("vid").as("id"))
-      val membered = idmap.join(labels, "id").select(col("image_id"), col("component"))
-      val repNames = membered.groupBy(col("component"))
-        .agg(min(col("image_id")).as("cluster"), count(lit(1)).as("cluster_size"))
-      membered.join(repNames, "component")
-        .select(col("image_id"), col("cluster"), col("cluster_size"))
+      DedupPipeline.clustersFromEdges(tagged.select(col("image_id"), col("vid")),
+        exactEdges.union(nearEdges), cfg.ccMaxIter)
     }
   }
 }

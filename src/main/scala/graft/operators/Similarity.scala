@@ -22,11 +22,11 @@ import org.apache.spark.sql.expressions.Window
 object Similarity {
 
   import org.apache.spark.sql.graft.Bridge
-  import graft.functions.expressions.DotProduct
+  import graft.functions.expressions.SketchExpressions
 
   /** Native codegen'd dot product (no per-row intermediate arrays). */
   def dot(a: Column, b: Column): Column =
-    Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
+    Bridge.column(SketchExpressions.dot(Bridge.expression(a), Bridge.expression(b)))
 
   /** Cosine similarity column between two ARRAY<DOUBLE> columns. */
   def cosine(a: Column, b: Column): Column =
@@ -93,13 +93,13 @@ object Similarity {
    * booster that makes near-threshold pairs (where each plane agrees with
    * only moderate probability) reachable without exploding the table
    * count. Keys per row = nTables × (1 + nPlanes·probe). One codegen'd
-   * kernel call ([[graft.functions.expressions.HyperplaneKeys]]);
+   * kernel call ([[SketchExpressions.hyperplaneKeys]]);
    * ExpressionsSpec checks it against a UDF formulation kept in the test
    * tree (`graft.functions.Oracles.hyperplaneKeysUdf`).
    */
   def hyperplaneKeys(vec: Column, dim: Int, nPlanes: Int, nTables: Int,
       seed: Long = 42L, probe: Boolean = false): Column =
-    coalesce(Bridge.column(graft.functions.expressions.HyperplaneKeys(
+    coalesce(Bridge.column(SketchExpressions.hyperplaneKeys(
         Bridge.expression(vec), dim, nPlanes, nTables, seed, probe)),
       typedlit(Array.emptyLongArray))
 
@@ -551,7 +551,7 @@ object Similarity {
   }
 
   /** The trained codebook as a nested-array literal column (flat
-    * `j·ks + c` layout — [[graft.functions.expressions.PqEncode]]'s
+    * `j·ks + c` layout — [[SketchExpressions.pqEncode]]'s
     * indexing). One model-size collect (m·ks·subDim doubles, KBs); the
     * literal then rides the serialized plan to every executor. Missing
     * (m, code) entries — possible only when the training set had fewer
@@ -575,13 +575,13 @@ object Similarity {
     * QueriesSpec checks it against a local re-derivation and a UDF
     * formulation kept in the test tree (`graft.functions.Oracles.pqEncodeUdf`). */
   def pqEncodeCol(vec: Column, codebookLit: Column, m: Int, ks: Int, subDim: Int): Column =
-    Bridge.column(graft.functions.expressions.PqEncode(
+    Bridge.column(SketchExpressions.pqEncode(
       Bridge.expression(vec), Bridge.expression(codebookLit), m, ks, subDim))
 
   /** Codegen'd ADC column: exact query vector × candidate codes. */
   def pqAdcCol(vec: Column, codes: Column, codebookLit: Column,
       m: Int, ks: Int, subDim: Int): Column =
-    Bridge.column(graft.functions.expressions.PqAdc(
+    Bridge.column(SketchExpressions.pqAdc(
       Bridge.expression(vec), Bridge.expression(codes),
       Bridge.expression(codebookLit), m, ks, subDim))
 

@@ -6,18 +6,13 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Spark 4 made `Column` implementation-agnostic (ColumnNode); the
   * classic Expression bridge is package-private. This shim exposes the
-  * two conversions our custom Catalyst expressions need, and the one way
-  * the library scopes session conf ([[scoped]] + [[rebind]]). */
+  * two conversions the kernel expressions
+  * (`graft.functions.expressions.SketchExpressions`) need to become
+  * Columns, and the one way the library scopes session conf
+  * ([[scoped]] + [[rebind]]). */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** `AbstractDataType` is `private[sql]` at the Scala level; our custom
-    * expressions need it to declare `inputTypes` (ImplicitCastInputTypes
-    * — analysis-time type checking instead of runtime ClassCastException
-    * or silently-misread array slots). Public alias through this
-    * in-package shim. */
-  type AbstractType = org.apache.spark.sql.types.AbstractDataType
 
   /** Block until the listener bus has delivered all posted events (it is
     * asynchronous; `private[spark]`) — the bench's per-sample task

@@ -5,9 +5,11 @@ import scala.jdk.CollectionConverters._
 
 /** Guards the one-kernel-per-verb layout: the UDF and fold-of-Columns
   * formulations of the codegen'd expressions are test oracles and live in
-  * `src/test` (`graft.functions.Oracles`), and the expression kernels in
+  * `src/test` (`graft.functions.Oracles`), the expression kernels in
   * `SketchExpressions.scala` call the `graft.core` loops instead of
-  * walking unsigned order themselves. */
+  * walking unsigned order themselves, and every kernel enters Catalyst as
+  * a `StaticInvoke` built in that one file, never as a hand-written
+  * expression class. */
 class KernelSourceSpec extends AnyFunSuite {
 
   private val root = java.nio.file.Paths.get("src/main/scala")
@@ -40,5 +42,14 @@ class KernelSourceSpec extends AnyFunSuite {
     val found = matches("""compareUnsigned|\^\s*(java\.lang\.Long\.MIN_VALUE|Long\.MinValue)""".r,
       _.getFileName.toString == "SketchExpressions.scala")
     assert(found.isEmpty, s"unsigned walk outside graft.core: ${found.mkString(", ")}")
+  }
+
+  test("kernels enter Catalyst only through the one StaticInvoke builder") {
+    val handWritten = matches(
+      """doGenCode|extends\s+(Unary|Binary|Ternary|Quaternary)Expression""".r)
+    assert(handWritten.isEmpty, s"hand-written expressions: ${handWritten.mkString(", ")}")
+    val builds = matches("""StaticInvoke\(""".r)
+    assert(builds.length === 1 &&
+      builds.head.startsWith("graft/functions/expressions/SketchExpressions.scala:"), builds)
   }
 }

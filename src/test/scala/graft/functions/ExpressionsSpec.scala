@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{MinHash, SketchConfig, U64}
 import graft.functions.GraftFunctions._
 import graft.functions.Oracles._
-import graft.operators.SparkTestSession
+import graft.operators.{Similarity, SparkTestSession}
 import scala.util.Random
 
 /** Differential tests: native Catalyst expressions vs the UDF oracles
@@ -85,7 +85,8 @@ class ExpressionsSpec extends AnyFunSuite {
         jaccard($"a", lq, cfg), jaccard(lq, $"a", cfg),
         containment($"a", lq), containment(lq, $"a"))
       val literals = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
-        case l: org.apache.spark.sql.catalyst.expressions.Literal => l.value
+        case l: org.apache.spark.sql.catalyst.expressions.Literal
+            if l.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] => l.value
       }))
       assert(literals.length === 4 && literals.forall(
         _.isInstanceOf[org.apache.spark.sql.catalyst.util.GenericArrayData]), literals)
@@ -170,6 +171,15 @@ class ExpressionsSpec extends AnyFunSuite {
       assert(out.nonEmpty)
       out.foreach(r => assert(r.getSeq[Long](0) === r.getSeq[Long](1), s"probe=$probe"))
     }
+    // an ARRAY<DOUBLE> embedding is cast to the declared ARRAY<FLOAT> at
+    // analysis (float → double → float is exact), so its keys are the
+    // float column's keys, not a misread of 8-byte slots
+    val viaDouble = emb.select(
+      Similarity.hyperplaneKeys($"embedding", 64, 9, 8).as("f"),
+      Similarity.hyperplaneKeys(transform($"embedding", _.cast("double")), 64, 9, 8).as("d"))
+      .collect()
+    assert(viaDouble.nonEmpty)
+    viaDouble.foreach(r => assert(r.getSeq[Long](0) === r.getSeq[Long](1), "ARRAY<DOUBLE> input"))
     // null contract matches the UDF twin: empty key array
     val nulls = Seq((1, null: Array[Float])).toDF("id", "embedding")
       .select(Similarity.hyperplaneKeys($"embedding", 64, 9, 8)).head()
@@ -225,7 +235,7 @@ class ExpressionsSpec extends AnyFunSuite {
     }
     for (pick <- Seq(3, 4)) { // scheme 1: Manku 11/11/11/11/10/10
       val kernel = if (pick == 3)
-        Bridge.column(expressions.FingerprintJointKeys(Bridge.expression($"fp"), 1, 3))
+        Bridge.column(expressions.SketchExpressions.jointBandKeys(Bridge.expression($"fp"), 1, 3))
       else GraftFunctions.fingerprintBandsHamming2($"fp")
       val out = df.select(kernel.as("k"),
         Oracles.fingerprintCombosFoldForm($"fp", pick).as("o")).collect()
@@ -263,16 +273,87 @@ class ExpressionsSpec extends AnyFunSuite {
     // materialize to parquet first: a purely-local relation would be
     // constant-folded by ConvertToLocalRelation and never reach codegen
     val tmp = java.nio.file.Files.createTempDirectory("exprspec").toString
-    randomSketchPairs(10, 64).toDF("a", "b").write.mode("overwrite").parquet(tmp)
+    val r = new Random(3)
+    randomSketchPairs(10, 64).zipWithIndex.map { case ((a, b), i) =>
+      (a, b, s"caption number $i", s"the caption no $i", Array.fill(64)(r.nextInt().toByte),
+        Array.fill(4)(r.nextFloat()), Array.fill(4)(r.nextDouble()), Array(i % 2, 1), r.nextLong())
+    }.toDF("a", "b", "cap", "cap2", "bytes", "emb", "v", "codes", "fp")
+      .write.mode("overwrite").parquet(tmp)
     val cfg = SketchConfig(num = 64)
-    val df = spark.read.parquet(tmp)
-      .select(jaccard($"a", $"b", cfg).as("j"), minhashBands($"a", 16, 8).as("bk"),
-        angularSimilarity($"a", expr("array_repeat(1L, size(a))"),
-          $"b", expr("array_repeat(1L, size(b))")).as("ang"),
-        downsampleMins($"a", 1L << 40).as("ds"))
-    val hasWsc = df.queryExecution.executedPlan.exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
-    assert(hasWsc, df.queryExecution.executedPlan.toString)
-    df.collect() // and it actually executes through the generated code
+    val codebook = typedlit(Seq(Seq(0.0, 0.0), Seq(1.0, 1.0), Seq(0.5, 0.0), Seq(0.0, 0.5)))
+    def select(s: org.apache.spark.sql.SparkSession) = s.read.parquet(tmp).select(
+      Similarity.dot($"v", $"v"),
+      jaccard($"a", $"b", cfg),
+      containment($"a", $"b"),
+      downsampleMins($"a", 1L << 40),
+      minhashBands($"a", 16, 8),
+      captionMinhash($"cap", SketchConfig(num = 16, ksize = 4)),
+      captionSimhash($"cap", 4),
+      imageMinhash($"bytes", lit("raw"), SketchConfig(num = 16, ksize = 8)),
+      Similarity.hyperplaneKeys($"emb", 4, 3, 2, probe = true),
+      angularSimilarity($"a", expr("array_repeat(1L, size(a))"),
+        $"b", expr("array_repeat(1L, size(b))")),
+      Similarity.pqEncodeCol($"v", codebook, 2, 2, 2),
+      Similarity.pqAdcCol($"v", $"codes", codebook, 2, 2, 2),
+      fingerprintJointBands($"fp", 3),
+      captionLcs($"cap", $"cap2"))
+    // plan-level WholeStageCodegenExec presence is not enough on its own:
+    // with spark.sql.codegen.fallback (default true) a stage whose code
+    // fails to compile silently runs interpreted, so the strict sibling
+    // session makes that throw, and the generated code must carry each
+    // kernel's static call
+    val strict = spark.newSession()
+    strict.conf.set("spark.sql.codegen.fallback", "false")
+    val df = select(strict)
+    val plan = df.queryExecution.executedPlan
+    assert(plan.exists(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]),
+      plan.toString)
+    val code = org.apache.spark.sql.execution.debug.codegenStringSeq(plan).map(_._2).mkString
+    for (k <- Seq("dot", "jaccard", "containment", "downsample", "bandKeys", "captionMinhash",
+        "captionSimhash", "imageMinhash", "hyperplaneKeys", "angular", "pqEncode", "pqAdc",
+        "jointBandKeys", "captionLcs"))
+      assert(code.contains(s"graft.functions.expressions.SketchKernels.$k("), k)
+    val generated = df.collect()
+    // the same select evaluated without any generated code: each kernel's
+    // reflective call resolves and returns what the generated call did
+    val interp = spark.newSession()
+    interp.conf.set("spark.sql.codegen.wholeStage", "false")
+    interp.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val interpreted = select(interp).collect()
+    assert(generated.length === 10)
+    assert(generated.toSeq === interpreted.toSeq)
+  }
+
+  test("each kernel's argument check throws when the column is built (Column API and SQL)") {
+    import spark.implicits._
+    val cb = typedlit(Seq(Seq(0.0)))
+    val bad: Seq[(String, () => Any)] = Seq(
+      "bands = 0" -> (() => minhashBands($"m", 0, 4)),
+      "rowsPerBand = 0" -> (() => minhashBands($"m", 4, 0)),
+      "dim = 0" -> (() => Similarity.hyperplaneKeys($"v", 0, 9, 8)),
+      "nPlanes = 0" -> (() => Similarity.hyperplaneKeys($"v", 64, 0, 8)),
+      "nPlanes = 63" -> (() => Similarity.hyperplaneKeys($"v", 64, 63, 8)),
+      "nTables = 0" -> (() => Similarity.hyperplaneKeys($"v", 64, 9, 0)),
+      "pq_encode m = 0" -> (() => Similarity.pqEncodeCol($"v", cb, 0, 1, 1)),
+      "pq_encode ks = 0" -> (() => Similarity.pqEncodeCol($"v", cb, 1, 0, 1)),
+      "pq_encode subDim = 0" -> (() => Similarity.pqEncodeCol($"v", cb, 1, 1, 0)),
+      "pq_adc m = 0" -> (() => Similarity.pqAdcCol($"v", $"c", cb, 0, 1, 1)),
+      "pq_adc ks = 0" -> (() => Similarity.pqAdcCol($"v", $"c", cb, 1, 0, 1)),
+      "pq_adc subDim = 0" -> (() => Similarity.pqAdcCol($"v", $"c", cb, 1, 1, 0)),
+      "joint pick = 0" -> (() => fingerprintJointBands($"fp", 0)),
+      "joint pick = 8" -> (() => fingerprintJointBands($"fp", 8)),
+      "joint scheme = 2" ->
+        (() => expressions.SketchExpressions.jointBandKeys(Bridge.expression($"fp"), 2, 1)),
+      "joint scheme 1 pick = 7" ->
+        (() => expressions.SketchExpressions.jointBandKeys(Bridge.expression($"fp"), 1, 7)))
+    bad.foreach { case (what, build) =>
+      withClue(what)(intercept[IllegalArgumentException](build()))
+    }
+    val s = spark.newSession()
+    GraftExtensions.register(s)
+    s.sql("select * from values (array(1L, 2L), array(2L, 3L), 4) as t(a, b, x)")
+      .createOrReplaceTempView("t")
+    for (q <- Seq("select graft_band_keys(a, 0, 4) from t", "select graft_jaccard(a, b, x) from t"))
+      withClue(q)(intercept[IllegalArgumentException](s.sql(q)))
   }
 }

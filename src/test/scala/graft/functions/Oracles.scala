@@ -177,7 +177,7 @@ object Oracles {
   }
 
   /** The fold-of-Columns form of the Manku combos (scheme 1 of
-    * [[expressions.FingerprintJointKeys]]; the kernel exists because
+    * [[expressions.SketchExpressions.jointBandKeys]]; the kernel exists because
     * inlining C(n,pick) fold trees into the bands stage blew Janino's
     * 64 KB method limit and dropped the stage out of whole-stage
     * codegen). */

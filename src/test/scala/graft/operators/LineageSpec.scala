@@ -1,5 +1,8 @@
 package graft.operators
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.SyntheticCorpus
 
@@ -55,5 +58,30 @@ class LineageSpec extends AnyFunSuite {
     val ckpt = Lineage.checkpointedClusters(spark, corpus, DedupConfig(), root, "fp400")
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
     assert(ckpt === direct)
+  }
+
+  test("the checkpointed pipeline plans every query with static broadcast off") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val root = java.nio.file.Files.createTempDirectory("lineage3").toString
+    val corpus = SyntheticCorpus.corpus(spark, 300L).toDF()
+    val before = spark.conf.getOption(key)
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerSQLExecutionStart]()
+    val listener = new SparkListener {
+      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+        case e: SparkListenerSQLExecutionStart => starts.add(e)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val rows = try {
+      val n = Lineage.checkpointedClusters(spark, corpus, DedupConfig(), root, "fp300").count()
+      Bridge.drainListeners(spark.sparkContext, 10000L)
+      n
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(rows === 300L)
+    val execs = starts.toArray(Array.empty[SparkListenerSQLExecutionStart]).toSeq
+    assert(execs.nonEmpty)
+    execs.foreach(e => assert(e.modifiedConfigs.get(key).contains("-1"), e.description))
+    assert(spark.conf.getOption(key) === before)
   }
 }
