@@ -1,25 +1,31 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
 /**
- * Connected components over an edge DataFrame via alternating
- * large-star / small-star (Kiveris et al., "Connected Components in
- * MapReduce and Beyond") — the Spark-native replacement for the
- * reference's O(N²)-greedy `scaffold` clustering
+ * Connected components over an edge DataFrame — the Spark-native
+ * replacement for the reference's O(N²)-greedy `scaffold` clustering
  * (`/root/reference/src/index/sbt.rs:344-455`). We match cluster
  * assignments, not tree shape (SURVEY.md §2.4 Q7).
  *
- * Scale design:
- *  - provably convergent in O(log n) rounds on any graph (vs min-label
+ * A hybrid, picked by the canonical edge count the first job observes
+ * (see [[finishOnDriver]]):
+ *  - at or below [[DriverEdgeGate]] edges, one collect and a union-find
+ *    on the driver label the graph ([[driverLabels]]): a few hundred
+ *    edges cost one job instead of several multi-stage rounds;
+ *  - above it, alternating large-star / small-star (Kiveris et al.,
+ *    "Connected Components in MapReduce and Beyond", [[loopLabels]]):
+ *    provably convergent in O(log n) rounds on any graph (vs min-label
  *    propagation's O(diameter) — adversarial dup chains are real at web
- *    scale);
- *  - every round is two shuffles (groupBy min + join), partitioned by
- *    node id; AQE coalesces as components collapse;
- *  - `localCheckpoint` per round cuts the lineage chain (on a cluster this
- *    becomes a checkpoint-table write, giving partition-exact resume).
+ *    scale); every round is two shuffles (groupBy min + join),
+ *    partitioned by node id; `localCheckpoint` per round cuts the
+ *    lineage chain (on a cluster this becomes a checkpoint-table write,
+ *    giving partition-exact resume).
+ * Both paths label every node with the minimum id (signed `Long` order)
+ * reachable from it, so their labels are identical.
  */
 object ConnectedComponents extends org.apache.spark.internal.Logging {
 
@@ -46,14 +52,43 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
   }
 
   /**
+   * Canonical edge sets at or below this count finish on the driver.
+   * The collect moves 16 B per edge (two longs), ≤ 16 MB at the gate;
+   * the labels are at most 2 × gate = 2M rows, 32 MB at the local
+   * relation's 16 B/row (≈ 48 MB as the 24-byte rows the broadcast
+   * ships). Rows on the driver cost ~100 B each while the relation is
+   * built and scanned: 1M disjoint edges (2M labels) through
+   * [[DedupPipeline.clustersFromEdges]] finish in a 1 GB driver heap,
+   * ~570 MB live at its full collections. Near the gate the driver path
+   * still beats the loop (900k chain edges, local[4]: 7.7 s vs 20.5 s).
+   */
+  private[operators] val DriverEdgeGate: Long = 1000000L
+
+  /** The path choice of [[run]]: union-find on the driver at or below
+    * [[DriverEdgeGate]] canonical edges, the distributed loop above it.
+    * Pure function — unit-tested in ConnectedComponentsSpec. */
+  private[operators] def finishOnDriver(edgeCount: Long): Boolean =
+    edgeCount <= DriverEdgeGate
+
+  /**
    * @param edges two Long columns `src`, `dst` (undirected, dups ok).
    * @param edgesPerPartition target edges per reducer when sizing the
    *        in-loop shuffle width via [[chooseLoopWidth]].
    * @return DataFrame (id: Long, component: Long) — component = min node
-   *         id reachable; covers only nodes appearing in `edges`.
+   *         id reachable; covers only nodes appearing in `edges` (other
+   *         than through self-loops). Below the gate it is a broadcast
+   *         local relation, above it a lazy aggregate.
    */
   def run(edges: DataFrame, maxIter: Int = 25,
       edgesPerPartition: Long = 2000000L): DataFrame = {
+    val (start, edgeCount) = canonical(edges)
+    if (finishOnDriver(edgeCount)) driverLabels(start)
+    else loopLabels(start, edgeCount, maxIter, edgesPerPartition)
+  }
+
+  /** The canonical edge set (`src < dst`, distinct, self-loops dropped),
+    * checkpointed, and its size. */
+  private[operators] def canonical(edges: DataFrame): (DataFrame, Long) = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -68,6 +103,56 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
       .distinct()
       .observe(obs0, count(lit(1)).as("edges"))
       .localCheckpoint(true)
+    (start, obs0.get("edges").asInstanceOf[Long])
+  }
+
+  /**
+   * Driver path: one job collects the canonical edges `start` (one packed
+   * `src, dst, src, dst, …` array per partition), then union-find with
+   * path halving labels them. Nodes are indexed in sorted signed `Long`
+   * order and every link points the larger root at the smaller, so each
+   * root is its component's minimum id — the loop's `least`/`min` order
+   * (xxhash64 vids are negative about half the time). The labels come
+   * back as a local relation on `start`'s session, hinted for broadcast:
+   * its size is exact on the driver, so the label joins downstream
+   * ([[labelAll]], [[DedupPipeline.clustersFromEdges]]) never shuffle it.
+   */
+  private[operators] def driverLabels(start: DataFrame): DataFrame = {
+    val parts = start.queryExecution.toRdd.mapPartitions { rows =>
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+      Iterator.single(b.result())
+    }.collect()
+    val ends = Array.concat(parts.toSeq: _*)
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var k = 0
+    for (v <- ids) if (k == 0 || ids(k - 1) != v) { ids(k) = v; k += 1 }
+    val parent = Array.range(0, k)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var i = 0
+    while (i < ends.length) {
+      val a = find(java.util.Arrays.binarySearch(ids, 0, k, ends(i)))
+      val b = find(java.util.Arrays.binarySearch(ids, 0, k, ends(i + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      i += 2
+    }
+    logWarning(s"[cc] ${ends.length / 2} edges on the driver: $k labels")
+    broadcast(Bridge.localLongs(start.sparkSession, Seq("id", "component"),
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        Array.tabulate[InternalRow](k)(j => InternalRow(ids(j), ids(find(j)))))))
+  }
+
+  /** Distributed path: large-star / small-star rounds over the canonical
+    * edges `start` (`edgeCount` of them) until the edge set repeats. */
+  private[operators] def loopLabels(start: DataFrame, edgeCount: Long, maxIter: Int,
+      edgesPerPartition: Long): DataFrame = {
+    val spark = start.sparkSession
+    import spark.implicits._
 
     // From here on, per-round data (the edge set) is orders of magnitude
     // smaller than the corpus, but each round is a chain of tiny shuffles:
@@ -80,7 +165,7 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
     // is never touched. A non-numeric session width (e.g. a managed
     // platform's "auto") falls back to the 200 default.
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    val loopWidth = chooseLoopWidth(obs0.get("edges").asInstanceOf[Long],
+    val loopWidth = chooseLoopWidth(edgeCount,
       scala.util.Try(sessionParts.trim.toInt).getOrElse(200), edgesPerPartition)
     logWarning(s"[cc] loop shuffle width=$loopWidth (session=$sessionParts)")
     val loop = Bridge.scoped(spark, "spark.sql.adaptive.enabled" -> "false",
@@ -150,10 +235,13 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
   /**
    * Label every node in `nodes` (single Long column `id`, caller
    * guarantees distinct): nodes absent from any edge become singleton
-   * components (component = own id). The label side is a materialized
-   * edge-endpoint set — much smaller than `nodes` — so the join is left
-   * to AQE, which broadcasts it from runtime statistics (static
-   * auto-broadcast stays off: sizes derived from UDF plans are garbage).
+   * components (component = own id). The label side covers edge
+   * endpoints only — much smaller than `nodes`. Below the driver gate it
+   * is [[run]]'s broadcast-hinted local relation, so the join broadcasts
+   * it without a shuffle; above the gate it is a materialized star and
+   * the join is left to AQE, which broadcasts it from runtime statistics
+   * (static auto-broadcast stays off: sizes derived from UDF plans are
+   * garbage).
    */
   def labelAll(nodes: DataFrame, edges: DataFrame, maxIter: Int = 25): DataFrame = {
     val spark = nodes.sparkSession

@@ -92,7 +92,9 @@ final class CacheHandle {
  *        ⇄ staged confirm join (slim image/fingerprint side, the
  *          corroboration reject, then the caption side for survivors)
  *        → edge filter (narrow)
- *        ⇄ connected components (large-star/small-star, O(log n) rounds)
+ *        ⇄ connected components (one collect + union-find on the driver
+ *          up to ConnectedComponents.DriverEdgeGate edges; above it
+ *          large-star/small-star, O(log n) rounds)
  *        ⇄ representative relabel
  *
  * Five candidate sources are unioned, mirroring the reference's
@@ -444,17 +446,21 @@ object DedupPipeline {
   /** Clustering tail: CC over the edge set + representative relabel.
     * The relabel is ONE window pass over `component` (min image_id +
     * count in the same partitioning) instead of groupBy + join-back —
-    * one shuffle instead of two plus a join. The label join itself is
-    * runtime-broadcast by AQE (labels cover edge endpoints only). */
+    * one shuffle instead of two plus a join. The label join broadcasts
+    * the labels (they cover edge endpoints only): below the CC driver
+    * gate they are a broadcast-hinted local relation of exact size,
+    * above it AQE broadcasts the loop's star from runtime statistics. */
   def clustersFromEdges(idmap: DataFrame, edges: DataFrame, ccMaxIter: Int = 25): DataFrame = {
     // raw CC labels cover edge endpoints only (≪ corpus); rows without a
     // label are singleton clusters — ONE broadcastable left join labels
     // the whole corpus (labelAll would join the full node set twice)
+    // (the rename happens on the idmap side, so the label side stays a
+    // bare relation and the optimizer copies no driver-built rows)
     val labels = ConnectedComponents.run(edges, ccMaxIter)
-      .select(col("id").as("vid"), col("component"))
-    val membered = idmap.join(labels, Seq("vid"), "left")
+    val membered = idmap.select(col("image_id"), col("vid").as("id"))
+      .join(labels, Seq("id"), "left")
       .select(col("image_id"),
-        coalesce(col("component"), col("vid")).as("component"))
+        coalesce(col("component"), col("id")).as("component"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("component"))
     membered
       .withColumn("cluster", min(col("image_id")).over(w))

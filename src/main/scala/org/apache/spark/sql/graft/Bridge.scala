@@ -1,15 +1,19 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Spark 4 made `Column` implementation-agnostic (ColumnNode); the
   * classic Expression bridge is package-private. This shim exposes the
   * two conversions the kernel expressions
   * (`graft.functions.expressions.SketchExpressions`) need to become
-  * Columns, and the one way the library scopes session conf
-  * ([[scoped]] + [[rebind]]). */
+  * Columns, the one way the library scopes session conf
+  * ([[scoped]] + [[rebind]]), and driver-built relations
+  * ([[localLongs]]). */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -40,4 +44,11 @@ object Bridge {
   def rebind(s: SparkSession, df: DataFrame): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[_]].logicalPlan)
+
+  /** A local relation of non-null `LongType` columns named `names` over
+    * driver-built `rows` — no external `Row` per record, and the planner
+    * sees its exact size (16 B per row for two columns). */
+  def localLongs(s: SparkSession, names: Seq[String], rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession],
+      LocalRelation(names.map(AttributeReference(_, LongType, nullable = false)()), rows))
 }

@@ -138,8 +138,7 @@ class PipelineSpec extends AnyFunSuite {
       val edges = Seq.fill(n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       // edgesPerPartition=4 makes the auto width data-bound (~150),
       // clamped to the raised session ceiling 64 — strictly > 8
-      val wide = ConnectedComponents.run(edges.toDF("src", "dst"),
-        edgesPerPartition = 4L)
+      val wide = CcLoop(edges.toDF("src", "dst"), edgesPerPartition = 4L)
       // the label agg itself is lazy (runs under session confs, AQE
       // coalesces it), so probe the LOOP's materialized width where it is
       // preserved: the checkpointed star-edge RDD feeding the plan
@@ -149,7 +148,7 @@ class PipelineSpec extends AnyFunSuite {
       assert(loopParts.nonEmpty && loopParts.exists(_ > 8),
         s"loop materialized at $loopParts partitions — width still clamped?")
       // labels are identical to the default-width run
-      val narrow = ConnectedComponents.run(edges.toDF("src", "dst"))
+      val narrow = CcLoop(edges.toDF("src", "dst"))
       val a = wide.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val b = narrow.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(a === b)
@@ -161,7 +160,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("connected components: adversarial chain converges (log-round guarantee)") {
     val chain = (0L until 200L).map(i => (i, i + 1)).toDF("src", "dst")
-    val labels = ConnectedComponents.run(chain, maxIter = 25)
+    val labels = CcLoop(chain, maxIter = 25)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.values.toSet === Set(0L))
     assert(labels.size === 201)

@@ -31,7 +31,7 @@ class SessionConfSpec extends AnyFunSuite {
         Thread.sleep(1)
       })
     sampler.start()
-    val labels = try ConnectedComponents.run(chain, maxIter = 25).collect()
+    val labels = try CcLoop(chain, maxIter = 25).collect()
       finally { done = true; sampler.join() }
     assert(labels.length === 201)
     assert(labels.forall(_.getLong(1) == 0L))
