@@ -72,18 +72,15 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
 
   /**
    * @param edges two Long columns `src`, `dst` (undirected, dups ok).
-   * @param edgesPerPartition target edges per reducer when sizing the
-   *        in-loop shuffle width via [[chooseLoopWidth]].
    * @return DataFrame (id: Long, component: Long) — component = min node
    *         id reachable; covers only nodes appearing in `edges` (other
    *         than through self-loops). Below the gate it is a broadcast
    *         local relation, above it a lazy aggregate.
    */
-  def run(edges: DataFrame, maxIter: Int = 25,
-      edgesPerPartition: Long = 2000000L): DataFrame = {
+  def run(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     val (start, edgeCount) = canonical(edges)
     if (finishOnDriver(edgeCount)) driverLabels(start)
-    else loopLabels(start, edgeCount, maxIter, edgesPerPartition)
+    else loopLabels(start, edgeCount, maxIter, edgesPerPartition = 2000000L)
   }
 
   /** The canonical edge set (`src < dst`, distinct, self-loops dropped),
@@ -148,7 +145,10 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
   }
 
   /** Distributed path: large-star / small-star rounds over the canonical
-    * edges `start` (`edgeCount` of them) until the edge set repeats. */
+    * edges `start` (`edgeCount` of them) until the edge set repeats.
+    * `edgesPerPartition` is the target edges per reducer when sizing the
+    * in-loop shuffle width via [[chooseLoopWidth]]: [[run]] passes 2M,
+    * specs pass a small value to force a wide loop. */
   private[operators] def loopLabels(start: DataFrame, edgeCount: Long, maxIter: Int,
       edgesPerPartition: Long): DataFrame = {
     val spark = start.sparkSession

@@ -85,21 +85,20 @@ object SignatureSearch {
    * predicates are positive only when the sketches share ≥ 1 hash, so
    * the posting-list pre-filter is EXACT — no false negatives, the
    * deterministic counterpart of the Bloom overestimate's no-false-prune
-   * guarantee (`sbt.rs:249-251`). The query's hash list (≤ num entries)
-   * broadcasts; only candidate signatures are scored with the exact
-   * kernel. Results are identical to [[linear]] for any threshold > 0.
+   * guarantee (`sbt.rs:249-251`). The postings are filtered by the
+   * query's hash list (≤ num entries, an `isin` literal), and their
+   * filenames broadcast into one semi-join, so only candidate signatures
+   * are scored with the exact kernel. Results are identical to [[linear]]
+   * for any threshold > 0.
    */
   def indexed(db: DataFrame, indexPath: String, queryMins: Array[Long],
       cfg: SketchConfig, threshold: Double, mode: String,
       queryAbunds: Array[Long] = null): DataFrame = {
-    val spark = db.sparkSession
-    import spark.implicits._
     require(threshold > 0.0,
       "indexed search requires a positive threshold (zero-overlap rows score 0)")
-    val qdf = queryMins.toSeq.toDF("h")
-    val cands = spark.read.parquet(indexPath)
-      .join(broadcast(qdf), "h") // postings pruned by the tiny query hash set
-      .select(col("filename")).distinct()
+    val cands = db.sparkSession.read.parquet(indexPath)
+      .where(col("h").isin(queryMins.toSeq: _*))
+      .select(col("filename"))
     linear(db.join(broadcast(cands), Seq("filename"), "left_semi"),
       queryMins, cfg, threshold, mode, queryAbunds)
   }

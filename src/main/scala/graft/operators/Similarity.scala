@@ -155,151 +155,56 @@ object Similarity {
       .select(col("a"), col("b"), col("cos"))
   }
 
-  /**
-   * IVF coarse-quantizer training: spherical Lloyd iterations seeded by a
-   * deterministic pseudo-random sample (the `nCells` ids with the
-   * smallest `xxhash64(id)` — order- and partitioning-independent).
-   *
-   * Broadcast-model iteration, the classic distributed k-means shape
-   * (MLlib's KMeans does the same internally): each round broadcasts the
-   * nCells×dim model, assigns every vector to its max-cosine centroid in
-   * one narrow pass, and re-averages per (cell, component). Only the
-   * MODEL (nCells×dim doubles) ever reaches the driver — never data rows.
-   * Train on a sample at 10⁹-row scale; assignment quality degrades
-   * gracefully.
-   *
-   * Returns (cell: Long, cv: Array[Double]) — the trained codebook.
-   * Callers persist it (the e04 oracle re-derives the whole search from
-   * this dump); centroids are model output, bit-stable only within the
-   * run that trained them, which is exactly what a dump-based oracle
-   * needs.
-   */
-  def ivfTrain(df: DataFrame, idCol: String, vecCol: String, nCells: Int,
-      dim: Int, iters: Int = 5, trainSampleMod: Int = 1,
-      collectTrain: Boolean = false): DataFrame = {
+  /** The training set of [[ivfTrain]] and [[pqTrain]], collected in ONE
+    * job behind the `trainSampleMod` hash slice (`trainSampleMod > 1`
+    * keeps the rows with `pmod(xxhash64(id), mod) = 0`, a deterministic
+    * 1/mod sample independent of order and partitioning). Returns the
+    * vectors as doubles in collect order and the row indices in init
+    * order: smallest `(xxhash64(id), id)` first. */
+  private def trainingSet(df: DataFrame, idCol: String, vecCol: String,
+      trainSampleMod: Int): (Array[Array[Double]], IndexedSeq[Int]) = {
     val spark = df.sparkSession
     import spark.implicits._
-    // trainSampleMod > 1 trains on a DETERMINISTIC 1/mod hash-sample of
-    // the table (order- and partitioning-independent) — the 10⁹-row
-    // posture, where caching the full table for Lloyd rounds is wasteful
-    // and a sample trains an equally good codebook.
     val base = if (trainSampleMod <= 1) df
       else df.where(pmod(xxhash64(col(idCol)), lit(trainSampleMod)) === 0)
-    // Bounded-sample in-memory training (the FAISS posture: k-means always
-    // trains on a sample that fits memory — at 10⁹ rows the caller sizes
-    // trainSampleMod so `base` IS that sample). One Spark job collects
-    // (hash, vector); the Lloyd rounds are then a driver-local loop —
-    // no per-round job latency, and the fixpoint check is exact because a
-    // serial loop has no aggregation-order float noise. The CALLER asserts
-    // boundedness (e.g. row count from table statistics); this path must
-    // never see an unbounded `base`.
-    if (collectTrain) return ivfTrainCollected(spark, base, idCol, vecCol, nCells, iters)
-    // one materialization feeds every Lloyd round (each round would
-    // otherwise re-run the scan + element casts + norms); released before
-    // returning.
-    val v = base.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", dot(col("v"), col("v")))
-      .persist()
-    try {
-      var cents: Array[(Long, Seq[Double])] =
-        v.orderBy(xxhash64(col("id")), col("id")).limit(nCells)
-          .select(col("id"), col("v")).as[(Long, Seq[Double])].collect()
-          .zipWithIndex.map { case ((_, cv), i) => (i.toLong, cv) }
-      var it = 0
-      var converged = false
-      while (it < iters && !converged) {
-        val cdf = cents.toSeq.toDF("cell", "cv")
-          .withColumn("cn", dot(col("cv"), col("cv")))
-        val wc = Window.partitionBy(col("id")).orderBy(col("csim").desc, col("cell"))
-        val assigned = v
-          .crossJoin(broadcast(cdf))
-          .withColumn("csim", cosineWithNorms(dot(col("v"), col("cv")), col("nrm"), col("cn")))
-          .withColumn("crk", row_number().over(wc))
-          .where(col("crk") === 1)
-        val means = assigned.groupBy(col("cell"))
-          .agg(array((0 until dim).map(i => avg(col("v").getItem(i))): _*).as("cv"))
-          .as[(Long, Seq[Double])].collect().toMap
-        // empty cells keep their previous centroid
-        val next = cents.map { case (c, old) => (c, means.getOrElse(c, old)) }
-        // fixpoint early stop: once the assignment stabilizes the means
-        // reproduce the centroids (up to aggregation-order float noise —
-        // partition scheduling reorders the sums between jobs, so exact
-        // equality may never fire), and every further round recomputes a
-        // codebook that differs only in trailing ulps. The 1e-12 band is
-        // orders of magnitude below anything the cosine ranking or the
-        // dumped-codebook oracle can observe.
-        converged = next.length == cents.length && next.zip(cents).forall {
-          case ((_, a), (_, b)) =>
-            a.length == b.length && a.zip(b).forall {
-              case (x, y) => math.abs(x - y) <= 1e-12
-            }
-        }
-        cents = next
-        it += 1
-      }
-      cents.toSeq.toDF("cell", "cv")
-    } finally v.unpersist(false)
-  }
-
-  /** Driver-local Lloyd over a collected bounded training set — the
-    * `collectTrain` branch of [[ivfTrain]]. Assignment semantics mirror
-    * the distributed path: cosine rounded to 6 digits from hoisted
-    * norms (HALF_UP, like Spark's `round`), ties to the lowest cell,
-    * empty cells keep their previous centroid, 1e-12 fixpoint stop —
-    * which a serial loop actually REACHES (no between-job summation-
-    * order noise), so small tables converge in the minimum rounds. */
-  private def ivfTrainCollected(spark: org.apache.spark.sql.SparkSession,
-      base: DataFrame, idCol: String, vecCol: String,
-      nCells: Int, iters: Int): DataFrame = {
-    import spark.implicits._
-    // ONE job: (init-order hash, id, vector) — same deterministic init
-    // ordering as the distributed path (xxhash64 of the id, then id)
     val rows: Array[(Long, Long, Seq[Double])] = base
       .select(xxhash64(col(idCol)).as("h"), col(idCol).cast("long").as("id"),
         asDouble(col(vecCol)).as("v"))
       .as[(Long, Long, Seq[Double])].collect()
-    val data: Array[Array[Double]] = rows.map(_._3.toArray)
-    def dotLocal(a: Array[Double], b: Array[Double]): Double = {
-      val n = math.min(a.length, b.length)
-      var s = 0.0; var i = 0
-      while (i < n) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    def round6(x: Double): Double =
-      if (x.isNaN || x.isInfinite) x
-      else BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val nrm: Array[Double] = data.map(v => dotLocal(v, v))
-    var cents: Array[Array[Double]] = rows.indices
-      .sortBy(i => (rows(i)._1, rows(i)._2)).take(nCells)
-      .map(i => data(i).clone).toArray
-    val k = cents.length
+    (rows.map(_._3.toArray), rows.indices.sortBy(i => (rows(i)._1, rows(i)._2)))
+  }
+
+  /** Lloyd's k-means on the driver, the one loop both trainers run.
+    * `nearest(cents)` returns, for this round's centroids, the index of
+    * the centroid a vector is assigned to. Each round sums every vector
+    * into its centroid in row order and divides by the count; an empty
+    * centroid keeps its previous value. The loop stops after `iters`
+    * rounds or at the fixpoint, when no component moved by more than
+    * 1e-12 (a serial loop has no summation-order noise, so small tables
+    * reach it in the minimum rounds). */
+  private def lloyd(data: Array[Array[Double]], init: Array[Array[Double]],
+      iters: Int)(nearest: Array[Array[Double]] => Array[Double] => Int)
+      : Array[Array[Double]] = {
+    val k = init.length
+    val width = if (data.isEmpty) 0 else data(0).length
+    var cents = init
     var it = 0
     var converged = false
     while (it < iters && !converged && k > 0) {
-      val cn = cents.map(c => dotLocal(c, c))
-      val sums = Array.fill(k)(new Array[Double](if (data.isEmpty) 0 else data(0).length))
+      val near = nearest(cents)
+      val sums = Array.fill(k)(new Array[Double](width))
       val counts = new Array[Long](k)
       var r = 0
       while (r < data.length) {
-        // strict > with ascending c = ties to the lowest cell (the
-        // distributed path's orderBy(csim desc, cell))
-        var best = 0
-        var bestSim = Double.NegativeInfinity
-        var c = 0
-        while (c < k) {
-          val sim = round6(dotLocal(data(r), cents(c)) / math.sqrt(nrm(r) * cn(c)))
-          if (sim > bestSim) { bestSim = sim; best = c }
-          c += 1
-        }
-        counts(best) += 1
         val v = data(r)
+        val best = near(v)
+        counts(best) += 1
         var j = 0
         while (j < v.length) { sums(best)(j) += v(j); j += 1 }
         r += 1
       }
       val next = Array.tabulate(k) { c =>
-        if (counts(c) == 0) cents(c) // empty cells keep their centroid
-        else sums(c).map(_ / counts(c))
+        if (counts(c) == 0) cents(c) else sums(c).map(_ / counts(c))
       }
       converged = next.zip(cents).forall { case (a, b) =>
         a.length == b.length && a.zip(b).forall {
@@ -309,37 +214,73 @@ object Similarity {
       cents = next
       it += 1
     }
+    cents
+  }
+
+  /**
+   * IVF coarse-quantizer training: spherical Lloyd rounds (`lloyd`)
+   * over a training set collected to the driver in one job. Init takes
+   * the `nCells` vectors with the smallest `(xxhash64(id), id)`; a vector
+   * joins the centroid of highest cosine, rounded to 6 digits from the
+   * two norms (HALF_UP, like Spark's `round`), ties to the lowest cell.
+   *
+   * k-means trains on a sample that fits memory (the FAISS posture): the
+   * caller bounds the set with `trainSampleMod` (see `trainingSet`),
+   * which `Embeddings` derives from the table's row count.
+   *
+   * Returns (cell: Long, cv: Array[Double]) — the trained codebook.
+   * Callers persist it (the e04 oracle re-derives the whole search from
+   * this dump).
+   */
+  def ivfTrain(df: DataFrame, idCol: String, vecCol: String, nCells: Int,
+      iters: Int = 5, trainSampleMod: Int = 1): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val (data, initOrder) = trainingSet(df, idCol, vecCol, trainSampleMod)
+    def dotLocal(a: Array[Double], b: Array[Double]): Double = {
+      val n = math.min(a.length, b.length)
+      var s = 0.0; var i = 0
+      while (i < n) { s += a(i) * b(i); i += 1 }
+      s
+    }
+    def round6(x: Double): Double =
+      if (x.isNaN || x.isInfinite) x
+      else BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val cents = lloyd(data, initOrder.take(nCells).map(data).toArray, iters) { cs =>
+      val cn = cs.map(c => dotLocal(c, c))
+      v => {
+        val nrm = dotLocal(v, v)
+        var best = 0
+        var bestSim = Double.NegativeInfinity
+        var c = 0
+        while (c < cs.length) { // strict > = ties to the lowest cell
+          val sim = round6(dotLocal(v, cs(c)) / math.sqrt(nrm * cn(c)))
+          if (sim > bestSim) { bestSim = sim; best = c }
+          c += 1
+        }
+        best
+      }
+    }
     cents.zipWithIndex
       .map { case (cv, i) => (i.toLong, cv.toSeq) }.toSeq.toDF("cell", "cv")
   }
 
   /**
-   * IVF (inverted-file) top-k — the cell-partitioned ANN variant
-   * alongside [[lshPairs]]: assignment of every vector to its
-   * nearest-centroid "home cell" under the trained codebook, and
-   * per-query search restricted to the `nProbe` nearest cells with exact
-   * rerank inside.
+   * IVF (inverted-file) index build, the cell-partitioned ANN variant
+   * alongside [[lshPairs]]: rank the codebook cells per vector and keep
+   * the `nProbe` nearest — `crk = 1` is the home cell (the inverted-file
+   * posting assignment), `crk ≤ nProbe` the probe list that
+   * [[ivfSearch]] restricts each query to.
    *
    * Scale shape: the codebook is a tiny explicit broadcast (provably
-   * nCells rows — safe under the no-static-broadcast posture);
+   * nCells rows — safe under the no-static-broadcast posture); the
    * assignment is the unavoidable n×nCells flop pass of any flat IVF
-   * (narrow, codegen'd dot products) feeding ONE window shuffle keyed by
-   * id; probing reuses the same ranked frame (crk=1 → home,
-   * crk≤nProbe → probed); the probe→member join is a cell-keyed
-   * equi-join (AQE splits hot cells). No crossJoin of the data with
-   * itself anywhere; per-query candidates ≈ nProbe·n/nCells — the
-   * scan-fraction dial that trades recall for work.
-   */
-  /**
-   * IVF index build: rank the codebook cells per vector and keep the
-   * `nProbe` nearest — `crk = 1` is the home cell (the inverted-file
-   * posting assignment), `crk ≤ nProbe` the probe list. ONE n×nCells
-   * flop pass (narrow, codegen'd dots against the tiny broadcast
-   * codebook); the partial WindowGroupLimit below the shuffle bounds the
-   * exchanged rows to nProbe per vector. Callers MUST materialize the
-   * result (parquet/persist) before searching — [[ivfSearch]] consumes
-   * it twice, and an unmaterialized plan would re-run the assignment
-   * flops per consumer.
+   * (narrow, codegen'd dots) feeding ONE window shuffle keyed by id, and
+   * the partial WindowGroupLimit below that shuffle bounds the exchanged
+   * rows to nProbe per vector. Callers MUST materialize the result
+   * (parquet/persist) before searching — [[ivfSearch]] consumes it twice,
+   * and an unmaterialized plan would re-run the assignment flops per
+   * consumer.
    */
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String,
       codebook: DataFrame, nProbe: Int): DataFrame = {
@@ -364,8 +305,8 @@ object Similarity {
    * exactly once into the assignment table, exactly like a persisted
    * FAISS inverted file); the probe→member join is a cell-keyed
    * equi-join (AQE splits hot cells); per-query candidates ≈
-   * nProbe·n/nCells — the scan-fraction dial. No crossJoin of the data
-   * with itself anywhere.
+   * nProbe·n/nCells — the scan-fraction dial that trades recall for
+   * work. No crossJoin of the data with itself anywhere.
    */
   def ivfSearch(df: DataFrame, idCol: String, vecCol: String,
       assignment: DataFrame, k: Int): DataFrame = {
@@ -474,14 +415,12 @@ object Similarity {
    * `m·n` bytes instead of `4·dim·n` (32× at dim 64 / m 8), which is THE
    * reason PQ is the production ANN posture at 100 TB.
    *
-   * Training is driver-local over a bounded sample, the [[ivfTrain]]
-   * `collectTrain` posture (k-means always trains on a sample that fits
-   * memory; `trainSampleMod` > 1 makes `df` that sample at scale via a
-   * deterministic hash-slice). Init per subspace: the `ks` subvectors of
-   * the rows with the smallest `(xxhash64(id), id)` — the ivf init rule,
-   * shared by all subspaces. Assignment ties go to the LOWEST code
-   * (strict `<` on left-to-right squared-L2 accumulation); empty codes
-   * keep their previous centroid; 1e-12 fixpoint stop.
+   * Training runs `lloyd` once per subspace over the training set of
+   * [[ivfTrain]] (one collect job, bounded the same way by
+   * `trainSampleMod`). Init per subspace: the `ks` subvectors of the rows
+   * with the smallest `(xxhash64(id), id)`, shared by all subspaces. A
+   * subvector joins the code of least squared L2 (accumulated left to
+   * right), ties to the LOWEST code.
    *
    * Returns the codebook `(m: INT 0-based subspace, code: INT, cv:
    * ARRAY<DOUBLE> subDim)`. Callers dump it — the e08 oracle re-derives
@@ -491,63 +430,28 @@ object Similarity {
       ks: Int, subDim: Int, iters: Int = 10, trainSampleMod: Int = 1): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val base = if (trainSampleMod <= 1) df
-      else df.where(pmod(xxhash64(col(idCol)), lit(trainSampleMod)) === 0)
-    val rows: Array[(Long, Long, Seq[Double])] = base
-      .select(xxhash64(col(idCol)).as("h"), col(idCol).cast("long").as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
-      .as[(Long, Long, Seq[Double])].collect()
-    require(rows.nonEmpty, "pqTrain: empty training set")
-    val data: Array[Array[Double]] = rows.map(_._3.toArray)
+    val (data, initOrder) = trainingSet(df, idCol, vecCol, trainSampleMod)
+    require(data.nonEmpty, "pqTrain: empty training set")
     require(data(0).length >= m * subDim,
       s"pqTrain: dim ${data(0).length} < m*subDim ${m * subDim}")
-    val initOrder = rows.indices.sortBy(i => (rows(i)._1, rows(i)._2))
-    val k = math.min(ks, data.length)
-    val out = Seq.newBuilder[(Int, Int, Seq[Double])]
-    var j = 0
-    while (j < m) {
+    val init = initOrder.take(ks)
+    (0 until m).flatMap { j =>
       val off = j * subDim
-      def sq(v: Array[Double], c: Array[Double]): Double = {
-        var s = 0.0; var i = 0
-        while (i < subDim) { val x = v(off + i) - c(i); s += x * x; i += 1 }
-        s
+      val sub = data.map(_.slice(off, off + subDim))
+      val cents = lloyd(sub, init.map(sub).toArray, iters) { cs => v =>
+        var best = 0
+        var bestD = Double.MaxValue
+        var c = 0
+        while (c < cs.length) { // strict < = ties to the lowest code
+          var d = 0.0; var i = 0
+          while (i < subDim) { val x = v(i) - cs(c)(i); d += x * x; i += 1 }
+          if (d < bestD) { bestD = d; best = c }
+          c += 1
+        }
+        best
       }
-      var cents: Array[Array[Double]] =
-        initOrder.take(k).map(i => data(i).slice(off, off + subDim)).toArray
-      var it = 0
-      var converged = false
-      while (it < iters && !converged) {
-        val sums = Array.fill(k)(new Array[Double](subDim))
-        val counts = new Array[Long](k)
-        var r = 0
-        while (r < data.length) {
-          var best = 0
-          var bestD = Double.MaxValue
-          var c = 0
-          while (c < k) { // strict < = ties to the lowest code
-            val dd = sq(data(r), cents(c))
-            if (dd < bestD) { bestD = dd; best = c }
-            c += 1
-          }
-          counts(best) += 1
-          var i = 0
-          while (i < subDim) { sums(best)(i) += data(r)(off + i); i += 1 }
-          r += 1
-        }
-        val next = Array.tabulate(k) { c =>
-          if (counts(c) == 0) cents(c) else sums(c).map(_ / counts(c))
-        }
-        converged = next.zip(cents).forall { case (a, b) =>
-          a.zip(b).forall { case (x, y) => math.abs(x - y) <= 1e-12 }
-        }
-        cents = next
-        it += 1
-      }
-      var c = 0
-      while (c < k) { out += ((j, c, cents(c).toSeq)); c += 1 }
-      j += 1
-    }
-    out.result().toDF("m", "code", "cv")
+      cents.indices.map(c => (j, c, cents(c).toSeq))
+    }.toDF("m", "code", "cv")
   }
 
   /** The trained codebook as a nested-array literal column (flat

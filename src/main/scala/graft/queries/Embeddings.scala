@@ -36,6 +36,17 @@ object Embeddings {
           .otherwise(transform(col("e0"), x => x / col("nrm"))).as("embedding"))
   }
 
+  /** About how many rows the IVF and PQ trainers collect to the driver:
+    * k-means trains on a sample that fits memory (the FAISS posture). */
+  private val maxTrainRows = 100000L
+
+  /** The `trainSampleMod` that cuts the embeddings table to about
+    * [[maxTrainRows]] training rows: `ceil(rows / maxTrainRows)`, 1 up to
+    * 10⁵ rows (every scale in the repo), so small tables train on all of
+    * them. */
+  private def trainSampleMod(s: SparkSession, d: String): Int =
+    math.max(1L, (tableRows(s, d, "embeddings") + maxTrainRows - 1) / maxTrainRows).toInt
+
   /** The trained PQ model over the NORMALIZED table: per-subspace
     * codebooks (dumped — the e08 oracle's sole model input) + the encoded
     * corpus (dumped — the persisted compressed inverted file; encode runs
@@ -43,7 +54,7 @@ object Embeddings {
   private def pqModel(s: SparkSession, d: String): (Column, DataFrame) = {
     val codebook = dumpDerived(s, d, "e08_pq_codebook")(
       Similarity.pqTrain(normalizedEmb(s, d), "vec_id", "embedding",
-        m = pqM, ks = pqKs, subDim = pqSubDim))
+        m = pqM, ks = pqKs, subDim = pqSubDim, trainSampleMod = trainSampleMod(s, d)))
     val cbLit = Similarity.pqCodebookLiteral(codebook, pqM, pqKs, pqSubDim)
     val codes = dumpDerived(s, d, "e08_codes", files = 1)(
       normalizedEmb(s, d).select(col("vec_id").as("id"),
@@ -51,26 +62,6 @@ object Embeddings {
     (cbLit, codes)
   }
 
-  /** The e04 IVF top-k pipeline, final result dumped once per (sfDir,
-    * JVM) — e04 returns it and e06 audits it against brute force.
-    *
-    * Cell count scales with the table (≈ n/16 rows per cell, like
-    * FAISS's nlist sizing); the 8-cell probe is then a fixed scan
-    * fraction (~n/4). Tiny tables degenerate toward brute force —
-    * correct: IVF only pays past ~10³ rows per cell budget. Row count
-    * comes from the memoized table-statistics stand-in. Lloyd rounds
-    * carry a fixed per-round job latency that dominates at toy scale;
-    * a sweep showed the assignment fixpoint is reached by
-    * round 3 on tables this small (the 1e-12 early stop in ivfTrain
-    * fires there), so below 10^4 rows the cap is 3. The oracle is
-    * round-count-agnostic: it replicates the search from whatever
-    * codebook was dumped. Bounded tables train DRIVER-LOCAL (one
-    * collect job, zero per-round latency — the FAISS sample-in-memory
-    * posture); the table-statistics row count is what proves
-    * boundedness. A 10⁹-row table instead sets trainSampleMod to make
-    * the sample bounded. The inverted file is MATERIALIZED (parquet)
-    * before search — the assignment flop pass runs once, not once per
-    * search-side consumer. */
   /** Brute-force cosine top-k (quadratic BY DESIGN — the exactness
     * baseline), dumped once per (sfDir, JVM): e01 returns it and the e06
     * recall audit reads it as ground truth, so the O(n²) pass runs once
@@ -85,10 +76,24 @@ object Embeddings {
       Similarity.bruteForceTopK(spread(s, t(s, d, "embeddings")),
         "vec_id", "embedding", k = 5))
 
-  /** The trained IVF (codebook, home/probe assignment), each dumped once
-    * per (sfDir, JVM) — shared by e04's search, e06's audit, and e07's
-    * semantic-dedup prune so the Lloyd rounds and the assignment flop
-    * pass run once per sweep however many consumers read them. */
+  /** The trained IVF (codebook, home/probe assignment) of the e04
+    * pipeline, each dumped once per (sfDir, JVM) — shared by e04's
+    * search, e06's audit, and e07's semantic-dedup prune so the Lloyd
+    * rounds and the assignment flop pass run once per sweep however many
+    * consumers read them.
+    *
+    * Cell count scales with the table (≈ n/16 rows per cell, like
+    * FAISS's nlist sizing); the 8-cell probe is then a fixed scan
+    * fraction (~n/4). Tiny tables degenerate toward brute force —
+    * correct: IVF only pays past ~10³ rows per cell budget. Row count
+    * comes from the memoized table-statistics stand-in. Training is
+    * driver-local over at most about [[maxTrainRows]] rows (one collect
+    * job, see [[trainSampleMod]]); a sweep showed the assignment fixpoint
+    * is reached by round 3 on tables this small, so below 10⁴ rows the
+    * cap is 3. The oracle is round-count-agnostic: it replicates the
+    * search from whatever codebook was dumped. The inverted file is
+    * MATERIALIZED (parquet) before search — the assignment flop pass runs
+    * once, not once per search-side consumer. */
   private def ivfModel(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     // spread: the n×nCells assignment flop pass inherits the scan's
     // single partition otherwise (train collects — unaffected)
@@ -98,7 +103,7 @@ object Embeddings {
     val lloydIters = if (nRows < 10000L) 3 else 5
     val codebook = dumpDerived(s, d, "e04_centroids")(
       Similarity.ivfTrain(emb, "vec_id", "embedding", nCells = nCells,
-        dim = 64, iters = lloydIters, collectTrain = nRows <= 100000L))
+        iters = lloydIters, trainSampleMod = trainSampleMod(s, d)))
     val assign = dumpDerived(s, d, "e04_assign")(
       Similarity.ivfAssign(emb, "vec_id", "embedding", codebook,
         nProbe = math.min(8, nCells)))

@@ -107,7 +107,7 @@ object QuerySupport {
     * conf, run it over all available input and stop it. The stream pins
     * both values into its checkpoint at start; `s` never changes:
     *
-    *  - `spark.sql.shuffle.partitions` lowered — the state stores
+    *  - `spark.sql.shuffle.partitions` lowered to 8 — the state stores
     *    allocate one instance per shuffle partition PER MICRO-BATCH, a
     *    fixed cost the tiny validation streams pay 3-5× per query at
     *    width 32. At production scale a stream sizes this to its state,
@@ -127,9 +127,9 @@ object QuerySupport {
     *    st05-st07 are stateless foreachBatch probes with no watermark at
     *    all. At production scale re-enabling them is a latency knob
     *    (sub-batch emission), not a correctness one. */
-  private[queries] def withStreamConf(s: SparkSession, n: Int)(
+  private[queries] def withStreamConf(s: SparkSession)(
       start: SparkSession => StreamingQuery): Unit = {
-    val q = start(Bridge.scoped(s, "spark.sql.shuffle.partitions" -> n.toString,
+    val q = start(Bridge.scoped(s, "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))
     try q.processAllAvailable() finally q.stop()
   }

@@ -157,16 +157,13 @@ object Streaming {
   /** Open-session state carried across micro-batches. */
   final case class SessionState(start: Long, last: Long, n: Long)
 
-  /** `flatMapGroupsWithState` handler: fold this batch's (sorted) event
-    * times into the open session, emitting every session that CLOSES
-    * (next event further than the gap). Batches arrive time-ordered
-    * (file source by mtime), events within a batch are sorted here; ties
-    * and duplicates extend the current session. */
-  /** The session fold BOTH handlers delegate to — the merge/close rule
-    * lives in exactly one place so st03 and st04 cannot silently diverge.
-    * Sorts this batch's event times, folds them into the open session,
-    * and returns (sessions closed by a > gap quiet period, final open
-    * state). Out-of-order rows (possible ACROSS micro-batches within the
+  /** The session fold BOTH `flatMapGroupsWithState` handlers delegate
+    * to — the merge/close rule lives in exactly one place so st03 and
+    * st04 cannot silently diverge. Sorts this batch's event times, folds
+    * them into the open session, and returns (sessions closed by a > gap
+    * quiet period, final open state). Batches arrive time-ordered (file
+    * source by mtime); ties and duplicates extend the current session.
+    * Out-of-order rows (possible ACROSS micro-batches within the
     * watermark allowance) extend BOTH ends: since the watermark delay
     * (1 h) is far below the gap (8 h), any row the engine did not drop as
     * late necessarily lands within gap of the open session, so the merge
@@ -258,7 +255,7 @@ object Streaming {
       copyBatch(staged.resolve("b2.parquet"), inDir, "b2.parquet", 30000L)
       copyBatch(staged.resolve("st01_s3.parquet"), inDir, "b3.parquet", 60000L)
       copyBatch(staged.resolve("st01_s4.parquet"), inDir, "b4.parquet", 120000L)
-      withStreamConf(s, 8) { c =>
+      withStreamConf(s) { c =>
         c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(inDir.toString)
@@ -297,7 +294,7 @@ object Streaming {
       val ckpt = Files.createTempDirectory("st08_ckpt").toString
       copyBatch(staged.resolve("b1.parquet"), inDir, "b1.parquet", 0L)
       copyBatch(staged.resolve("b2.parquet"), inDir, "b2.parquet", 30000L)
-      withStreamConf(s, 8) { c =>
+      withStreamConf(s) { c =>
         // two independent sources over the same staged files, each
         // filtered to its event type (each readStream call is its own
         // source with its own offsets; the global watermark is the MIN
@@ -347,7 +344,7 @@ object Streaming {
       val schema = events.schema
       val outDir = Files.createTempDirectory("st02_out").toString
       val ckpt = Files.createTempDirectory("st02_ckpt").toString
-      withStreamConf(s, 8) { c =>
+      withStreamConf(s) { c =>
         c.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet")
           .parquet(d)
@@ -381,7 +378,7 @@ object Streaming {
       copyBatch(staged.resolve("b1.parquet"), inDir, "b1.parquet", 0L)
       copyBatch(staged.resolve("b2.parquet"), inDir, "b2.parquet", 60000L)
       copyBatch(staged.resolve("st03_sent.parquet"), inDir, "b3.parquet", 120000L)
-      withStreamConf(s, 8) { c =>
+      withStreamConf(s) { c =>
         c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(inDir.toString)
@@ -455,7 +452,7 @@ object Streaming {
       // for
       copyBatch(staged.resolve("st04_s24.parquet"), inDir, "b3.parquet", 120000L)
       copyBatch(staged.resolve("st04_s25.parquet"), inDir, "b4.parquet", 180000L)
-      withStreamConf(s, 8) { c =>
+      withStreamConf(s) { c =>
       c.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(inDir.toString)
@@ -531,7 +528,7 @@ object Streaming {
       val ckpt = Files.createTempDirectory("st05_ckpt").toString
       copyBatch(staged.resolve("st05_b1.parquet"), inDir, "b1.parquet", 0L)
       copyBatch(staged.resolve("st05_b2.parquet"), inDir, "b2.parquet", 60000L)
-      withStreamConf(s, 8) { c =>
+      withStreamConf(s) { c =>
         c.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(inDir.toString)
@@ -595,7 +592,7 @@ object Streaming {
       val ckpt = Files.createTempDirectory("st06_ckpt").toString
       copyBatch(staged.resolve("st06_b1.parquet"), inDir, "b1.parquet", 0L)
       copyBatch(staged.resolve("st06_b2.parquet"), inDir, "b2.parquet", 60000L)
-      withStreamConf(s, 8) { c =>
+      withStreamConf(s) { c =>
         c.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(inDir.toString)
@@ -634,7 +631,7 @@ object Streaming {
       val ckpt = Files.createTempDirectory("st07_ckpt").toString
       copyBatch(staged.resolve("st07_b1.parquet"), inDir, "b1.parquet", 0L)
       copyBatch(staged.resolve("st07_b2.parquet"), inDir, "b2.parquet", 60000L)
-      withStreamConf(s, 8) { c =>
+      withStreamConf(s) { c =>
         c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(inDir.toString)

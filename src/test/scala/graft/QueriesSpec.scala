@@ -968,7 +968,7 @@ class QueriesSpec extends AnyFunSuite {
     import graft.operators.Similarity
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val cb = Similarity.ivfTrain(emb, "vec_id", "embedding",
-      nCells = 4, dim = 64, iters = 2, trainSampleMod = 3)
+      nCells = 4, iters = 2, trainSampleMod = 3)
     assert(cb.count() === 4L)
     val out = Similarity.ivfTopK(emb, "vec_id", "embedding", cb, k = 3, nProbe = 2)
       .collect()
@@ -985,11 +985,11 @@ class QueriesSpec extends AnyFunSuite {
     // summation order (Spark's avg vs a serial loop), so centroids must
     // agree to float-noise tolerance round by round
     for (iters <- Seq(1, 3)) {
-      val dist = Similarity.ivfTrain(emb, "vec_id", "embedding",
+      val dist = Oracles.ivfTrainBroadcast(emb, "vec_id", "embedding",
           nCells = 4, dim = 64, iters = iters)
         .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
       val coll = Similarity.ivfTrain(emb, "vec_id", "embedding",
-          nCells = 4, dim = 64, iters = iters, collectTrain = true)
+          nCells = 4, iters = iters)
         .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
       assert(dist.keySet === coll.keySet)
       dist.foreach { case (cell, cv) =>
@@ -1002,13 +1002,38 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("IVF and PQ training each run one Spark job") {
+    import graft.operators.Similarity
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.Bridge
+    // read (schema inference runs a job) before the listener: only
+    // training and the codebook collect count
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    def jobsOf(train: => org.apache.spark.sql.DataFrame): Int = {
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      Bridge.drainListeners(sc, 10000L)
+      sc.addSparkListener(listener)
+      try {
+        assert(train.collect().nonEmpty)
+        Bridge.drainListeners(sc, 10000L)
+        jobs.get
+      } finally sc.removeSparkListener(listener)
+    }
+    assert(jobsOf(Similarity.ivfTrain(emb, "vec_id", "embedding", nCells = 4, iters = 3)) === 1)
+    assert(jobsOf(Similarity.pqTrain(emb, "vec_id", "embedding", m = 8, ks = 16, subDim = 8)) === 1)
+  }
+
   test("e04 plans: one broadcast-codebook flop pass; cartesian-free search") {
     import graft.operators.Similarity
     // string-level checks: AdaptiveSparkPlanExec does not expose its
     // inner plan as children, so node-type traversal misses the joins
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val codebook = Similarity.ivfTrain(emb, "vec_id", "embedding",
-      nCells = 4, dim = 64, iters = 1)
+      nCells = 4, iters = 1)
     // assignment: the only nested-loop join is data × broadcast(codebook);
     // a CartesianProduct would mean the table got crossed with itself,
     // and the partial WindowGroupLimit bounds the shuffle to nProbe/row

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.sources.ImageCodec
@@ -9,11 +10,12 @@ import graft.sources.ImageCodec
  * Differential-test oracles for the codegen'd expressions: each one is the
  * UDF (or fold-of-Columns) formulation the expression replaced (SURVEY.md
  * §7 stage 5), and `ExpressionsSpec` and `QueriesSpec` assert bit-equality
- * between the two. Nothing in the library calls them. The jaccard,
- * containment and downsample UDFs call the same `graft.core.MinHash` loop
- * as their expressions, so for those they check the `ArrayData` and
- * codegen plumbing; the loop itself is checked against the merge-based
- * `intersection_size` in `KernelPropertySpec`.
+ * between the two. [[ivfTrainBroadcast]] is likewise the distributed
+ * k-means the driver-local IVF training replaced. Nothing in the library
+ * calls them. The jaccard, containment and downsample UDFs call the same
+ * `graft.core.MinHash` loop as their expressions, so for those they check
+ * the `ArrayData` and codegen plumbing; the loop itself is checked against
+ * the merge-based `intersection_size` in `KernelPropertySpec`.
  */
 object Oracles {
 
@@ -174,6 +176,57 @@ object Oracles {
       }
     })
     f(vec)
+  }
+
+  /** The broadcast-model formulation of
+    * [[graft.operators.Similarity.ivfTrain]], the classic distributed
+    * k-means shape (MLlib's KMeans does the same internally): each round
+    * broadcasts the nCells×dim model, assigns every vector to its
+    * max-cosine centroid (6-digit rounding, ties to the lowest cell) in
+    * one narrow pass and re-averages per (cell, component) — one job per
+    * round. Same init, empty-cell and fixpoint rules as the driver-local
+    * loop; only the summation order differs (Spark's `avg` against a
+    * serial loop), so the two agree to float noise. */
+  def ivfTrainBroadcast(df: DataFrame, idCol: String, vecCol: String,
+      nCells: Int, dim: Int, iters: Int): DataFrame = {
+    import graft.operators.Similarity.dot
+    val spark = df.sparkSession
+    import spark.implicits._
+    val v = df.select(col(idCol).as("id"),
+        transform(col(vecCol), x => x.cast("double")).as("v"))
+      .withColumn("nrm", dot(col("v"), col("v")))
+      .persist()
+    try {
+      var cents: Array[(Long, Seq[Double])] =
+        v.orderBy(xxhash64(col("id")), col("id")).limit(nCells)
+          .select(col("id"), col("v")).as[(Long, Seq[Double])].collect()
+          .zipWithIndex.map { case ((_, cv), i) => (i.toLong, cv) }
+      var it = 0
+      var converged = false
+      while (it < iters && !converged) {
+        val cdf = cents.toSeq.toDF("cell", "cv")
+          .withColumn("cn", dot(col("cv"), col("cv")))
+        val wc = Window.partitionBy(col("id")).orderBy(col("csim").desc, col("cell"))
+        val means = v.crossJoin(broadcast(cdf))
+          .withColumn("csim",
+            round(dot(col("v"), col("cv")) / sqrt(col("nrm") * col("cn")), 6))
+          .withColumn("crk", row_number().over(wc))
+          .where(col("crk") === 1)
+          .groupBy(col("cell"))
+          .agg(array((0 until dim).map(i => avg(col("v").getItem(i))): _*).as("cv"))
+          .as[(Long, Seq[Double])].collect().toMap
+        // empty cells keep their previous centroid
+        val next = cents.map { case (c, old) => (c, means.getOrElse(c, old)) }
+        // between jobs Spark reorders the sums, so exact equality may
+        // never fire; the band is the driver-local loop's
+        converged = next.zip(cents).forall { case ((_, a), (_, b)) =>
+          a.zip(b).forall { case (x, y) => math.abs(x - y) <= 1e-12 }
+        }
+        cents = next
+        it += 1
+      }
+      cents.toSeq.toDF("cell", "cv")
+    } finally v.unpersist(false)
   }
 
   /** The fold-of-Columns form of the Manku combos (scheme 1 of

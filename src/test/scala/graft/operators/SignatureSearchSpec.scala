@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{MinHash, SketchConfig}
 
-/** `SignatureSearch.linear` on synthetic sketches, without the reference
-  * fixtures: every mode's score must equal its `graft.core` kernel bit for
-  * bit, in bottom-k and in scaled mode. */
+/** `SignatureSearch.linear` and `indexed` on synthetic sketches, without
+  * the reference fixtures: every mode's score must equal its `graft.core`
+  * kernel bit for bit, in bottom-k and in scaled mode, and the index must
+  * return exactly the rows the linear scan does. */
 class SignatureSearchSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -59,6 +60,32 @@ class SignatureSearchSpec extends AnyFunSuite {
       val thr = want.values.toSeq.sorted.apply(want.size / 2)
       val kept = scores(SignatureSearch.linear(db, q, cfg, thr, mode, qa))
       assert(kept === want.filter(_._2 > thr))
+    }
+  }
+
+  for ((label, cfg) <- Seq("bottom-k num 500" -> bottomK, "scaled num 0" -> scaled)) {
+    test(s"indexed returns the rows and scores of linear in every mode ($label)") {
+      val sigs = sketches(cfg)
+      val db = sigs.toDF("filename", "mins", "abunds")
+      val (_, q, qa) = sigs(1)
+      val dir = java.nio.file.Files.createTempDirectory("graft-sig-index")
+      try {
+        val index = dir.resolve("index").toString
+        SignatureSearch.buildIndex(db, index)
+        for (mode <- Seq("similarity", "containment", "abundance");
+             thr <- Seq(0.01, 0.5)) {
+          val want = SignatureSearch.linear(db, q, cfg, thr, mode, qa).collect().toSet
+          val got = SignatureSearch.indexed(db, index, q, cfg, thr, mode, qa).collect().toSet
+          assert(got === want, s"$mode at $thr")
+          assert(want.nonEmpty, s"$mode at $thr: the query matches itself")
+          if (thr == 0.01) assert(want.size > 1, s"$mode at $thr: partial overlaps expected")
+        }
+      } finally {
+        val files = java.nio.file.Files.walk(dir)
+        try files.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(p => java.nio.file.Files.delete(p))
+        finally files.close()
+      }
     }
   }
 
