@@ -97,10 +97,12 @@ final class CacheHandle {
  *          large-star/small-star, O(log n) rounds)
  *        ⇄ representative relabel
  *
- * Five candidate sources are unioned, mirroring the reference's
+ * Five candidate sources feed one band table, mirroring the reference's
  * multi-sketch records (`Signature.signatures`, one per ksize×moltype —
  * here one per modality): image MinHash bands, caption MinHash bands,
  * phash bit-blocks, caption SimHash bit-blocks, and exact-phash groups.
+ * One projection with one generator emits every source's tagged keys
+ * ([[bandedAll]]), so the band side reads the exact-dedup table once.
  */
 object DedupPipeline {
 
@@ -136,60 +138,46 @@ object DedupPipeline {
   def candidates(skReps: DataFrame, cfg: DedupConfig): DataFrame =
     Lsh.candidatePairsCapped(bandedAll(skReps, cfg))
 
-  /** The exploded (id, bandKey, cap) band table feeding the shared bucket
-    * shuffle — all five candidate sources union'd. Split out of
-    * [[candidates]] so bucket accounting ([[Lsh.bucketStats]]) reads the
-    * same table the pair generation does. */
-  def bandedAll(skReps: DataFrame, cfg: DedupConfig): DataFrame = {
-    val cap = Lsh.explodeBands(
-      skReps.select(col("vid").as("id"),
-        minhashBands(col("cap_mins"), cfg.capBands, cfg.capRowsPerBand, cfg.capSketch.seed).as("bk")),
-      "id", "bk", sourceTag = 1)
-    val img = Lsh.explodeBands(
-      skReps.select(col("vid").as("id"),
-        minhashBands(col("img_mins"), cfg.imgBands, cfg.imgRowsPerBand, cfg.imgSketch.seed).as("bk")),
-      "id", "bk", sourceTag = 2)
-    // fingerprint sources use the Manku multi-piece scheme at radius 2
-    // (6 blocks, C(6,4)=15 four-block ~44-bit joint keys): ham <= 2
-    // candidate recall is guaranteed by pigeonhole — the radius all true
-    // same-image transforms measure — and key selectivity is what holds
-    // at scale. The two rejected designs are instructive: single 16-bit
-    // pigeonhole blocks saturate (at 10^5 rows, 92% of block mass sat
-    // past the heat cap and the phash path was silently dead — 59 lost
-    // capedit pairs), and 3-block 33-bit joints (radius-3 guarantee)
-    // stayed cold per-bucket but admitted 12.7M coincidence pairs at
-    // 600k rows on correlated phashes, a 50x confirm blowup. See
-    // GraftFunctions.fingerprintBandsHamming2.
-    val ph = Lsh.explodeBands(
-      skReps.select(col("vid").as("id"),
-        fingerprintBandsHamming2(col("phash")).as("bk")),
-      "id", "bk", sourceTag = 3)
-    val sh = Lsh.explodeBands(
-      skReps.select(col("vid").as("id"),
-        fingerprintBandsHamming2(col("cap_simhash")).as("bk")),
-      "id", "bk", sourceTag = 4)
-    // full-phash equality as its own source: a ham-0 pair riding inside a
-    // genuine near-identical MASS sees every 3-block joint bucket heat
-    // past the cap (the joints of a near-identical mass are shared by the
-    // whole mass). The exact-64-bit group is the tightest key available,
-    // so it is the last bucket to cross the cap — it recovers the ham-0
-    // fraction of exactly those masses.
-    val phx = Lsh.explodeBands(
-      skReps.select(col("vid").as("id"), array(col("phash")).as("bk")),
-      "id", "bk", sourceTag = 5)
-    // One shared bucket shuffle for all five sources; MinHash bands and
-    // exact-phash groups take the standard heat cap, fingerprint joints
-    // the tighter one (see fpJointMaxBucket — redundant combo tables
-    // carry their recall, and a joint bucket past the cap is coincidence
-    // mass whose ham-0 fraction the exact-phash source recovers).
-    cap.union(img).union(phx).withColumn("cap", lit(cfg.maxBucket))
-      .union(ph.union(sh).withColumn("cap", lit(cfg.fpJointMaxBucket)))
-  }
+  /** The (id, bandKey, cap) band table feeding the shared bucket shuffle:
+    * all five candidate sources, read from `skReps` in one [[Lsh.bands]]
+    * projection. Split out of [[candidates]] so bucket accounting
+    * ([[Lsh.bucketStats]]) reads the same table the pair generation does.
+    * MinHash bands and exact-phash groups take the standard heat cap,
+    * fingerprint joints the tighter one (see fpJointMaxBucket — redundant
+    * combo tables carry their recall, and a joint bucket past the cap is
+    * coincidence mass whose ham-0 fraction the exact-phash source
+    * recovers). */
+  def bandedAll(skReps: DataFrame, cfg: DedupConfig): DataFrame =
+    Lsh.bands(skReps, col("vid"),
+      (1, minhashBands(col("cap_mins"), cfg.capBands, cfg.capRowsPerBand, cfg.capSketch.seed),
+        cfg.maxBucket),
+      (2, minhashBands(col("img_mins"), cfg.imgBands, cfg.imgRowsPerBand, cfg.imgSketch.seed),
+        cfg.maxBucket),
+      // fingerprint sources use the Manku multi-piece scheme at radius 2
+      // (6 blocks, C(6,4)=15 four-block ~44-bit joint keys): ham <= 2
+      // candidate recall is guaranteed by pigeonhole — the radius all true
+      // same-image transforms measure — and key selectivity is what holds
+      // at scale. The two rejected designs are instructive: single 16-bit
+      // pigeonhole blocks saturate (at 10^5 rows, 92% of block mass sat
+      // past the heat cap and the phash path was silently dead — 59 lost
+      // capedit pairs), and 3-block 33-bit joints (radius-3 guarantee)
+      // stayed cold per-bucket but admitted 12.7M coincidence pairs at
+      // 600k rows on correlated phashes, a 50x confirm blowup. See
+      // GraftFunctions.fingerprintBandsHamming2.
+      (3, fingerprintBandsHamming2(col("phash")), cfg.fpJointMaxBucket),
+      (4, fingerprintBandsHamming2(col("cap_simhash")), cfg.fpJointMaxBucket),
+      // full-phash equality as its own source: a ham-0 pair riding inside a
+      // genuine near-identical MASS sees every 3-block joint bucket heat
+      // past the cap (the joints of a near-identical mass are shared by the
+      // whole mass). The exact-64-bit group is the tightest key available,
+      // so it is the last bucket to cross the cap — it recovers the ham-0
+      // fraction of exactly those masses.
+      (5, array(col("phash")), cfg.maxBucket))
 
   /**
-   * Per-rule edge predicates over a [[scores]] or [[scoresAllRules]]
-   * frame — split out so the spec layer can attribute each caught pair
-   * to the rule that caught it.
+   * Per-rule edge predicates over a [[scores]] frame or the specs'
+   * ungated reference scoring — split out so the spec layer can
+   * attribute each caught pair to the rule that caught it.
    *
    * SCALE PRINCIPLE (round-5 redesign): no single weak modality may merge
    * on its own. At 10⁵ reps the complete candidate set (post-Manku keys)
@@ -281,7 +269,8 @@ object DedupPipeline {
    * confirms the pair, so it is an edge whatever `cap_lcs` says; -2 =
    * [[lcsRelevance]] fails, so no `cap_lcs` value could make it an edge.
    * Only the remaining pairs pay the O(len·log len) per-pair suffix sort.
-   * The emitted EDGE SET equals [[scoresAllRules]]'s (spec-asserted).
+   * The emitted EDGE SET equals the specs' ungated reference scoring's
+   * (`PipelineOracles.scoresAllRules`, spec-asserted).
    */
   def scores(cands: DataFrame, sk: DataFrame, cfg: DedupConfig): DataFrame = {
     val sa = sk.select(col("vid").as("a"), col("img_mins").as("img_a"),
@@ -316,30 +305,6 @@ object DedupPipeline {
       .withColumn("substr_hit", col("cap_lcs") >= cfg.substringMinLen)
   }
 
-  /** Ungated reference scoring: every candidate pair, every score, the
-    * suffix-array kernel run on every pair (no sentinels). The specs use
-    * it as ground truth for [[scores]]' edge set and to attribute each
-    * caught pair to every rule that fires on it. Same columns as
-    * [[scores]] plus the joined sketch payload. */
-  def scoresAllRules(cands: DataFrame, sk: DataFrame, cfg: DedupConfig): DataFrame = {
-    val a = sk.select(
-      col("vid").as("a"), col("cap_mins").as("cap_a"), col("img_mins").as("img_a"),
-      col("cap_simhash").as("sh_a"), col("phash").as("ph_a"), col("cap_norm").as("cn_a"))
-    val b = sk.select(
-      col("vid").as("b"), col("cap_mins").as("cap_b"), col("img_mins").as("img_b"),
-      col("cap_simhash").as("sh_b"), col("phash").as("ph_b"), col("cap_norm").as("cn_b"))
-    cands.join(a, "a").join(b, "b")
-      .withColumn("img_sim", jaccard(col("img_a"), col("img_b"), cfg.imgSketch))
-      .withColumn("cap_sim", jaccard(col("cap_a"), col("cap_b"), cfg.capSketch))
-      .withColumn("ph_ham", hamming64(col("ph_a"), col("ph_b")))
-      .withColumn("sh_ham", hamming64(col("sh_a"), col("sh_b")))
-      .withColumn("cap_contain",
-        greatest(containment(col("cap_a"), col("cap_b")),
-          containment(col("cap_b"), col("cap_a"))))
-      .withColumn("cap_lcs", capLcs(cfg))
-      .withColumn("substr_hit", col("cap_lcs") >= cfg.substringMinLen)
-  }
-
   /** Exact-substring pass (north rule): generalized-suffix-array longest
     * common substring of the normalized captions. Containment of the
     * shorter caption is the special case lcs == min(len); unlike
@@ -347,7 +312,7 @@ object DedupPipeline {
     * long shared chunk. Inputs are capped at lcsMaxChars (pathological
     * megabyte captions must not blow the per-pair suffix sort; decisions
     * resolve far below the cap). */
-  private def capLcs(cfg: DedupConfig): Column =
+  private[operators] def capLcs(cfg: DedupConfig): Column =
     captionLcs(
       substring(col("cn_a"), 1, cfg.lcsMaxChars),
       substring(col("cn_b"), 1, cfg.lcsMaxChars))
@@ -431,7 +396,7 @@ object DedupPipeline {
       cache: CacheHandle = new CacheHandle()): (DataFrame, DataFrame) = {
     val sk = sketches(Bridge.rebind(pipelineSession(corpus.sparkSession), corpus), cfg)
     // one window shuffle tags each row with its exact-group rep; persisted
-    // because all four band sources and both confirm sides read it.
+    // because the band table and both confirm sides read it.
     // Tracked in `cache` — callers release() after materialization.
     val tagged = cache.track(exactDedupWindowed(sk).persist())
     val exactEdges = tagged.where(col("image_id") =!= col("rep"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -24,27 +24,46 @@ import org.apache.spark.sql.functions._
  *    images) must lose their exact-dup mass upstream in the exact-dedup
  *    pre-aggregation (turns the worst skew into a groupBy).
  *
- * Dropped-bucket accounting is exposed via [[bucketStats]] — callers log
- * it to the lineage table (never silently).
+ * Dropped-bucket accounting is exposed via [[bucketStats]], a separate
+ * job over the same band table. No library code calls it today; only the
+ * benchmark's traced mode does (`perfbench`). The flagship row funnel
+ * (ROADMAP item 1) is where dropped buckets are to be observed on jobs
+ * that already run.
  */
 object Lsh {
 
   /**
-   * @param banded DataFrame with columns (id, bandKey: Long) — one row per
-   *               (row, band) from `explode`d band arrays. The flagship
-   *               passes the Long `vid`; any orderable id type works.
-   * @return pairs (a, b) with a < b in the id type's natural order
-   *         (numeric for Long ids), distinct.
+   * The one band table every LSH consumer builds: `(id, bandKey, cap)`,
+   * one row per (row, source, key), read from `df` in ONE projection with
+   * ONE generator however many sources there are (a union of per-source
+   * explodes scans `df` once per source).
+   *
+   * Each source is `(tag, keys, cap)`: `keys` an array-of-band-keys
+   * column, `tag` mixed into every key (`bandKey = xxhash64(key, tag)`) so
+   * different sketch families (image minhash / caption minhash / phash /
+   * simhash) never share buckets, and `cap` the source's hot-bucket
+   * tolerance that [[candidatePairsCapped]] applies. A null `keys` array
+   * contributes no rows and leaves the row's other sources intact.
    */
-  def candidatePairs(banded: DataFrame, maxBucket: Int = 64): DataFrame =
-    candidatePairsCapped(banded.withColumn("cap", lit(maxBucket)))
+  def bands(df: DataFrame, id: Column, sources: (Int, Column, Int)*): DataFrame = {
+    val tagged = sources.map { case (tag, keys, cap) =>
+      transform(coalesce(keys, array()),
+        k => struct(xxhash64(k, lit(tag)).as("bandKey"), lit(cap).as("cap")))
+    }
+    df.select(id.as("id"), inline(concat(tagged: _*)))
+  }
 
   /**
-   * Like [[candidatePairs]] but with a per-row `cap` column: band sources
-   * with different hot-bucket tolerances (MinHash vs fingerprint blocks)
-   * share ONE bucket shuffle instead of one per source. All rows of a
-   * bucket come from one source (the source tag is mixed into the key),
-   * so `min(cap)` per bucket is exact.
+   * @param banded DataFrame with columns (id, bandKey: Long, cap: Int), as
+   *               [[bands]] emits it. The flagship passes the Long `vid`;
+   *               any orderable id type works. Sources with different
+   *               hot-bucket tolerances (MinHash vs fingerprint blocks)
+   *               share ONE bucket shuffle instead of one per source. All
+   *               rows of a bucket come from one source (the source tag is
+   *               mixed into the key), so they carry one cap.
+   * @return pairs (a, b) with a < b in the id type's natural order
+   *         (numeric for Long ids), distinct, from the buckets of 2 to
+   *         `cap` rows.
    */
   def candidatePairsCapped(banded: DataFrame): DataFrame = {
     val spark = banded.sparkSession
@@ -86,15 +105,5 @@ object Lsh {
       sum(when($"bn" > maxBucket, 1L).otherwise(0L)),
       max($"bn")).as[(Option[Long], Option[Long], Option[Long])].first()
     (r._1.getOrElse(0L), r._2.getOrElse(0L), r._3.getOrElse(0L))
-  }
-
-  /** Explode an array-of-band-keys column into (id, bandKey) rows, mixing
-    * the source tag into the key so different sketch families (image
-    * minhash / caption minhash / phash / simhash) never share buckets. */
-  def explodeBands(df: DataFrame, idCol: String, bandsCol: String, sourceTag: Int): DataFrame = {
-    df.select(col(idCol).as("id"),
-      explode(col(bandsCol)).as("rawKey"))
-      .select(col("id"),
-        xxhash64(col("rawKey"), lit(sourceTag)).as("bandKey"))
   }
 }

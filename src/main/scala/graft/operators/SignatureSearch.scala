@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import graft.core.SketchConfig
 import graft.functions.GraftFunctions
 
@@ -79,6 +80,11 @@ object SignatureSearch {
     db.select(col("filename"), explode(col("mins")).as("h"))
       .write.mode("overwrite").parquet(path)
 
+  /** The postings schema [[buildIndex]] writes for `db`: [[indexed]] reads
+    * the index with it, so no search pays a schema-inference job. */
+  private def indexSchema(db: DataFrame): StructType =
+    new StructType().add(db.schema("filename")).add("h", LongType)
+
   /**
    * Index-backed search (`SBT::find` re-expressed,
    * `/root/reference/src/index/sbt.rs:147-175`): both reference
@@ -96,7 +102,7 @@ object SignatureSearch {
       queryAbunds: Array[Long] = null): DataFrame = {
     require(threshold > 0.0,
       "indexed search requires a positive threshold (zero-overlap rows score 0)")
-    val cands = db.sparkSession.read.parquet(indexPath)
+    val cands = db.sparkSession.read.schema(indexSchema(db)).parquet(indexPath)
       .where(col("h").isin(queryMins.toSeq: _*))
       .select(col("filename"))
     linear(db.join(broadcast(cands), Seq("filename"), "left_semi"),

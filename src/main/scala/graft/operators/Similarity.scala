@@ -143,8 +143,9 @@ object Similarity {
         raise_error(concat(lit(s"lshPairs: non-numeric $idCol: "), col(idCol).cast("string"))))
       .otherwise(col(idCol).cast("long"))
     val keyed = df.select(idLong.as("id"),
-      explode(hyperplaneKeys(col(vecCol), dim, k, nTables, probe = probe)).as("bandKey"))
-    val cands = Lsh.candidatePairs(keyed, maxBucket)
+      explode(hyperplaneKeys(col(vecCol), dim, k, nTables, probe = probe)).as("bandKey"),
+      lit(maxBucket).as("cap"))
+    val cands = Lsh.candidatePairsCapped(keyed)
     val va = df.select(col(idCol).cast("long").as("a"), asDouble(col(vecCol)).as("va"))
       .withColumn("na", dot(col("va"), col("va")))
     val vb = df.select(col(idCol).cast("long").as("b"), asDouble(col(vecCol)).as("vb"))

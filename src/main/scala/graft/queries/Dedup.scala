@@ -75,13 +75,12 @@ object Dedup {
         GraftFunctions.captionSimhash(col("text"), docSketch.ksize).as("simhash"))
     }
 
-  /** (id, bandKey) — the exploded MinHash LSH band table over doc_id. */
+  /** (id, bandKey, cap) — the MinHash LSH band table over doc_id, heat
+    * cap 64. */
   private[queries] def docBanded(s: SparkSession, d: String): DataFrame =
     dumpDerived(s, d, "doc_banded", files = 1) {
-      Lsh.explodeBands(
-        docSketches(s, d).select(col("doc_id").as("id"),
-          GraftFunctions.minhashBands(col("mins"), bands = 16, rowsPerBand = 8).as("bk")),
-        "id", "bk", sourceTag = 11)
+      Lsh.bands(docSketches(s, d), col("doc_id"),
+        (11, GraftFunctions.minhashBands(col("mins"), bands = 16, rowsPerBand = 8), 64))
     }
 
   /** LSH candidate pairs over the banded dump — itself dumped once per
@@ -95,7 +94,7 @@ object Dedup {
     // ONE task (measured 0.8 s single-task at sf0.1); inert at scale.
     dumpDerived(s, d, "doc_candidates") {
       withConf(s, "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k") { c =>
-        Lsh.candidatePairs(docBanded(c, d), maxBucket = 64)
+        Lsh.candidatePairsCapped(docBanded(c, d))
       }
     }
 
@@ -413,11 +412,8 @@ object Dedup {
     // discipline); QueriesSpec re-asserts it at 5000 docs.
     QueryDef("d05_simhash_dedup", { (s, d) =>
       val sk = docSketches(s, d)
-      val banded = Lsh.explodeBands(
-        sk.select(col("doc_id").as("id"),
-          GraftFunctions.fingerprintJointBands(col("simhash"), 5).as("bk")),
-        "id", "bk", sourceTag = 12)
-      Lsh.candidatePairs(banded, maxBucket = 64)
+      Lsh.candidatePairsCapped(Lsh.bands(sk, col("doc_id"),
+          (12, GraftFunctions.fingerprintJointBands(col("simhash"), 5), 64)))
         .join(sk.select(col("doc_id").as("a"), col("simhash").as("sh_a")), "a")
         .join(sk.select(col("doc_id").as("b"), col("simhash").as("sh_b")), "b")
         .withColumn("hamming", GraftFunctions.hamming64(col("sh_a"), col("sh_b")))
@@ -1137,8 +1133,8 @@ object Dedup {
     QueryDef("d23_split_stability", { (s, d) =>
       val cutoff = tableRows(s, d, "documents") * 4 / 5
       val sk = docSketches(s, d)
-      val preEdges = Lsh.candidatePairs(
-          docBanded(s, d).where(col("id") < cutoff), maxBucket = 64)
+      val preEdges = Lsh.candidatePairsCapped(
+          docBanded(s, d).where(col("id") < cutoff))
         .join(sk.select(col("doc_id").as("a"), col("mins").as("mins_a")), "a")
         .join(sk.select(col("doc_id").as("b"), col("mins").as("mins_b")), "b")
         .where(GraftFunctions.jaccard(col("mins_a"), col("mins_b"), docSketch) >= 0.5)

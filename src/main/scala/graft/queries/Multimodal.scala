@@ -38,17 +38,14 @@ object Multimodal {
   /** Shared m07/m10 confirm tail: a per-row fingerprint table (several
     * rows per id — frame or offset slots) → guaranteed-radius banding →
     * the shared Lsh heat cap (NO pre-distinct: the bucket window +
-    * candidatePairs' array_distinct subsume it in ONE shuffle of the
+    * candidatePairsCapped's array_distinct subsume it in ONE shuffle of the
     * band table; the cap therefore counts slot multiplicity — harsher
     * on hot buckets, the protective direction) → slot×slot min-Hamming
     * confirm ≤ maxHam. `bands` must guarantee candidacy at radius ≥
     * maxHam (pigeonhole), so recall is structural, not probabilistic. */
   private def bandMinHamPairs(fp: DataFrame, idCol: String, fpCol: String,
       bands: Column => Column, sourceTag: Int, maxHam: Int): DataFrame = {
-    val banded = Lsh.explodeBands(
-      fp.select(col(idCol).as("id"), bands(col(fpCol)).as("bk")),
-      "id", "bk", sourceTag = sourceTag)
-    Lsh.candidatePairs(banded, maxBucket = 64)
+    Lsh.candidatePairsCapped(Lsh.bands(fp, col(idCol), (sourceTag, bands(col(fpCol)), 64)))
       .join(fp.select(col(idCol).as("a"), col(fpCol).as("fa")), "a")
       .join(fp.select(col(idCol).as("b"), col(fpCol).as("fb")), "b")
       .groupBy(col("a"), col("b"))

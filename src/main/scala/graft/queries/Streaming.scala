@@ -538,11 +538,8 @@ object Streaming {
             // (spread: the sketch kernel would run single-task per batch)
             val sk = spread(s, batch).select(col("doc_id").as("new_id"),
               GraftFunctions.captionMinhash(col("text"), docSketch).as("mins_n"))
-            val banded = Lsh.explodeBands(
-              sk.select(col("new_id").as("id"),
-                GraftFunctions.minhashBands(col("mins_n"), bands = 16,
-                  rowsPerBand = 8).as("bk")),
-              "id", "bk", sourceTag = 11)
+            val banded = Lsh.bands(sk, col("new_id"),
+                (11, GraftFunctions.minhashBands(col("mins_n"), bands = 16, rowsPerBand = 8), 64))
               .select(col("id").as("new_id"), col("bandKey"))
             val cands = banded.join(corpusKept, "bandKey")
               .select("new_id", "old_id").distinct()

@@ -179,7 +179,7 @@ class PipelineSpec extends AnyFunSuite {
     // scoresAllRules: attribution needs EVERY rule scored on every pair —
     // the pipeline's scores short-circuits the LCS kernel on cheap-confirmed
     // pairs (edge set identical; asserted by the short-circuit test)
-    val scored = DedupPipeline.scoresAllRules(gt, sk, cfg)
+    val scored = PipelineOracles.scoresAllRules(gt, sk, cfg)
     val rules = DedupPipeline.edgeRules(cfg)
     val agg = scored.agg(
       count(lit(1)).as("n"),
@@ -213,7 +213,7 @@ class PipelineSpec extends AnyFunSuite {
     val skReps = tagged.where($"image_id" === $"rep")
     val cands = DedupPipeline.candidates(skReps, cfg).cache()
     def edgeSet(all: Boolean): Set[(Long, Long)] =
-      (if (all) DedupPipeline.scoresAllRules(cands, skReps, cfg)
+      (if (all) PipelineOracles.scoresAllRules(cands, skReps, cfg)
        else DedupPipeline.scores(cands, skReps, cfg))
         .where(DedupPipeline.edgeRule(cfg))
         .select($"a", $"b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -247,7 +247,7 @@ class PipelineSpec extends AnyFunSuite {
     // the slim reject may only drop pairs no rule could confirm: edges
     // from the COMPLETE scoring of every candidate (scoresAllRules — the
     // ungated all-pairs shape) must survive the staged path exactly
-    val unfiltered = DedupPipeline.scoresAllRules(cands, skReps, cfg)
+    val unfiltered = PipelineOracles.scoresAllRules(cands, skReps, cfg)
       .where(DedupPipeline.edgeRule(cfg))
       .select($"a", $"b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // scores emits one row per candidate that passes the slim reject
