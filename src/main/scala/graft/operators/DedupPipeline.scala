@@ -67,27 +67,42 @@ final case class DedupConfig(
     lcsMaxChars: Int = 4096,
     ccMaxIter: Int = 25)
 
-/** Tracks DataFrames persisted while building a pipeline so callers can
-  * release executor cache once the result is materialized (a long-lived
-  * session running many pipelines would otherwise leak cache). */
+/** Tracks the local checkpoints taken while building a pipeline so
+  * callers can free their executor blocks once the result is
+  * materialized (a long-lived session running many pipelines would
+  * otherwise leak them). [[release]] unpersists each checkpoint's RDD;
+  * a frame still planned over it cannot run after that. */
 final class CacheHandle {
-  private var dfs: List[DataFrame] = Nil
-  private[operators] def track(df: DataFrame): DataFrame = { dfs ::= df; df }
-  def release(): Unit = { dfs.foreach(_.unpersist(false)); dfs = Nil }
+  private var rdds: List[org.apache.spark.rdd.RDD[_]] = Nil
+  /** `df` checkpointed eagerly (one job, now) and tracked. */
+  private[operators] def checkpoint(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(true)
+    rdds :::= cp.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.toList
+    cp
+  }
+  /** Ids of the tracked checkpoint RDDs, for the specs. */
+  private[operators] def rddIds: Seq[Int] = rdds.map(_.id)
+  def release(): Unit = { rdds.foreach(_.unpersist(false)); rdds = Nil }
 }
 
 /**
  * The flagship operator: near-duplicate detection + clustering over the
  * `(image_id, bytes, w, h, fmt, caption, phash)` table.
  *
- * Stage graph (shuffle boundaries marked ⇄):
+ * Stage graph (shuffle boundaries marked ⇄, the checkpoint ■):
  *
  *   scan → sketch (narrow; bytes projected away immediately after)
  *        ⇄ exact-dedup window (partitionBy exact_key — removes
  *          exact-dup mass BEFORE LSH: the worst bucket skew becomes a
  *          pre-aggregation, SURVEY.md §7)
+ *        ■ local checkpoint — ONE eager job inside [[edges]]; every
+ *          scan below (band table, confirm sides, exact edges, idmap)
+ *          reads its rows
  *        → band explode (narrow)
- *        ⇄ bucket grouping → in-bucket pair generation (capped, counted)
+ *        ⇄ bucket shuffle by bandKey → sort by (bandKey, id) → one scan
+ *          per bucket: cap count + in-bucket pairs (Lsh.candidatePairsCapped)
  *        ⇄ pair dedup
  *        ⇄ staged confirm join (slim image/fingerprint side, the
  *          corroboration reject, then the caption side for survivors)
@@ -391,14 +406,26 @@ object DedupPipeline {
    * independent connected-components oracle) before clustering. Both
    * frames (and [[clusters]]' result) belong to a child session of the
    * corpus' (see [[pipelineSession]]), so they execute under its conf.
+   *
+   * NOT lazy: this runs ONE job before it returns — sketching and the
+   * exact-dedup window, local-checkpointed through `cache`
+   * ([[CacheHandle.checkpoint]]). Everything downstream (the band table,
+   * the four confirm sides, the exact edges, `idmap`) then plans against
+   * the checkpointed rows instead of re-planning the sketch subtree once
+   * per scan, and no downstream job waits on another's cache fill. The
+   * trade-off: the checkpoint is a materialization barrier the optimizer
+   * cannot see through, and on a cluster it becomes a checkpoint-table
+   * write (like the connected-components checkpoint) whose blocks live
+   * until `cache.release()`; a lost executor loses them.
    */
   def edges(corpus: DataFrame, cfg: DedupConfig = DedupConfig(),
       cache: CacheHandle = new CacheHandle()): (DataFrame, DataFrame) = {
     val sk = sketches(Bridge.rebind(pipelineSession(corpus.sparkSession), corpus), cfg)
-    // one window shuffle tags each row with its exact-group rep; persisted
-    // because the band table and both confirm sides read it.
+    // one window shuffle tags each row with its exact-group rep; the band
+    // table, the four confirm sides, exactEdges and idmap all read it, so
+    // it is checkpointed here, eagerly — see the scaladoc.
     // Tracked in `cache` — callers release() after materialization.
-    val tagged = cache.track(exactDedupWindowed(sk).persist())
+    val tagged = cache.checkpoint(exactDedupWindowed(sk))
     val exactEdges = tagged.where(col("image_id") =!= col("rep"))
       .select(col("vid").as("src"), xxhash64(col("rep")).as("dst"))
     val skReps = tagged.where(col("image_id") === col("rep"))

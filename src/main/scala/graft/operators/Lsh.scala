@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /**
  * LSH banding → candidate pairs. This is the Spark-native replacement for
@@ -12,12 +13,13 @@ import org.apache.spark.sql.functions._
  * s-curve guarantee.
  *
  * Scale design:
- *  - bucket sizes are computed FIRST and oversize buckets are dropped
- *    before any `collect_list` — no unbounded per-bucket row ever
- *    materializes (a web-scale hot bucket would otherwise be a single
- *    multi-GB aggregation row);
- *  - the size-filter join and the member grouping share the `bandKey`
- *    hash partitioning, so the filter costs no extra shuffle;
+ *  - no unbounded per-bucket row ever materializes: the band table is
+ *    shuffled once by `bandKey` and sorted within each partition, and one
+ *    scan over each bucket's run counts its rows and buffers at most
+ *    `cap` ids, dropping the bucket the moment it passes the cap (a
+ *    web-scale hot bucket would otherwise be a single multi-GB row);
+ *  - the size gate and the pair generation happen in that one scan, so
+ *    they cost no shuffle beyond the bucket shuffle itself;
  *  - pairs are generated inside each (bounded) bucket — no self-join,
  *    which would shuffle the exploded table twice;
  *  - hot buckets (power-law at web scale: boilerplate captions, blank
@@ -54,44 +56,68 @@ object Lsh {
   }
 
   /**
-   * @param banded DataFrame with columns (id, bandKey: Long, cap: Int), as
+   * @param banded DataFrame with columns (id, bandKey, cap: Int), as
    *               [[bands]] emits it. The flagship passes the Long `vid`;
-   *               any orderable id type works. Sources with different
+   *               any orderable id type works (the queries pass String
+   *               `video_id`/`audio_id`). Sources with different
    *               hot-bucket tolerances (MinHash vs fingerprint blocks)
    *               share ONE bucket shuffle instead of one per source. All
    *               rows of a bucket come from one source (the source tag is
-   *               mixed into the key), so they carry one cap.
+   *               mixed into the key), so they carry one cap; the scan
+   *               reads it from the bucket's first row.
    * @return pairs (a, b) with a < b in the id type's natural order
    *         (numeric for Long ids), distinct, from the buckets of 2 to
-   *         `cap` rows.
+   *         `cap` rows that hold at least 2 distinct non-null ids.
+   *
+   * One shuffle of the band table by `bandKey`, each partition sorted by
+   * (bandKey, id), then ONE pass over each bucket's run of rows
+   * ([[bucketPairs]]): every row counts toward the cap (a repeated or
+   * null id too), at most `cap` distinct non-null ids are buffered, and a
+   * bucket that passes its cap is dropped there, so no bucket — however
+   * hot — holds more than `cap` ids in memory. Ids arrive sorted, so the
+   * distinct members are the run's id changes and pairs come out with
+   * a < b without an array sort. The pair dedup across buckets is the
+   * only other shuffle.
    */
   def candidatePairsCapped(banded: DataFrame): DataFrame = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-
-    // Bucket-size gating as a WINDOW over the bucket key: one shuffle of
-    // the exploded band table, inside which the count, the size filter,
-    // and the member grouping all happen (the former sizes-aggregate +
-    // semi-join formulation scanned and shuffled the band table twice).
-    // Oversize buckets still never materialize as arrays: the filter runs
-    // before `collect_list`, and WindowExec's buffer is spill-safe.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy($"bandKey")
-    val kept = banded
-      .withColumn("bn", count(lit(1)).over(w))
-      .where($"bn" >= 2 && $"bn" <= $"cap")
-
-    // In-bucket pair generation with BUILT-IN expressions only (no UDF
-    // encoder round-trip, type-generic over Long/String ids): sort the
-    // distinct members, explode the anchor index i, then explode the
-    // tail slice — every b after the anchor. a < b holds by sort order.
-    val grouped = kept.groupBy($"bandKey").agg(collect_list($"id").as("ids"))
-    grouped
-      .select(array_sort(array_distinct($"ids")).as("ids"))
-      .where(size($"ids") >= 2) // distinct could collapse a bucket below 2
-      .select($"ids", explode(sequence(lit(0), size($"ids") - 2)).as("i"))
-      .select(element_at($"ids", $"i" + 1).as("a"),
-        explode(slice($"ids", $"i" + 2, size($"ids"))).as("b"))
+    val idType = banded.schema("id").dataType
+    val pairSchema = StructType(Seq(
+      StructField("a", idType, nullable = false), StructField("b", idType, nullable = false)))
+    banded.select(col("bandKey"), col("id"), col("cap"))
+      .repartition(col("bandKey"))
+      .sortWithinPartitions(col("bandKey"), col("id"))
+      .mapPartitions((rows: Iterator[Row]) => bucketPairs(rows))(Encoders.row(pairSchema))
       .dropDuplicates("a", "b")
+  }
+
+  /** The per-partition scan of [[candidatePairsCapped]] over
+    * `(bandKey, id, cap)` rows sorted by (bandKey, id): each run of one
+    * bandKey is a bucket; its ids become pairs when it has 2..cap rows
+    * and at least 2 distinct non-null ids. */
+  private def bucketPairs(rows: Iterator[Row]): Iterator[Row] = {
+    val in = rows.buffered
+    val buckets = new Iterator[Array[Any]] {
+      def hasNext: Boolean = in.hasNext
+      def next(): Array[Any] = {
+        val key = in.head.get(0)
+        val cap = in.head.getInt(2)
+        val ids = new scala.collection.mutable.ArrayBuffer[Any]()
+        var n = 0L
+        while (in.hasNext && java.util.Objects.equals(in.head.get(0), key)) {
+          val r = in.next()
+          n += 1
+          if (n <= cap && !r.isNullAt(1)) {
+            val id = r.get(1)
+            if (ids.isEmpty || ids.last != id) ids += id
+          }
+        }
+        if (n >= 2 && n <= cap && ids.length >= 2) ids.toArray else Array.empty
+      }
+    }
+    buckets.flatMap { ids =>
+      ids.indices.iterator.flatMap(i =>
+        (i + 1 until ids.length).iterator.map(j => Row(ids(i), ids(j))))
+    }
   }
 
   /** Bucket-size accounting for lineage/metrics: (kept_buckets,

@@ -137,8 +137,8 @@ object Similarity {
     val n = if (nRows > 0) nRows else df.count()
     val k = if (nPlanes > 0) nPlanes
       else math.max(4, math.ceil(math.log(math.max(n, 2L).toDouble / occupancy) / math.log(2)).toInt)
-    // fail fast on a non-numeric id: a silent cast-null would vanish from
-    // collect_list and return an empty pair set with no error
+    // fail fast on a non-numeric id: a silent cast-null is no bucket
+    // member, so the pair set would come back empty with no error
     val idLong = when(col(idCol).isNotNull && col(idCol).cast("long").isNull,
         raise_error(concat(lit(s"lshPairs: non-numeric $idCol: "), col(idCol).cast("string"))))
       .otherwise(col(idCol).cast("long"))
@@ -357,9 +357,9 @@ object Similarity {
     * O(n·cellsize), never O(n²); the codebook join is broadcast; the one
     * data shuffle keys on `cell` and carries ONLY (ccos, id) — the vector
     * payload never rides a shuffle. In-cell ordering and the ordered pair
-    * set both come out of one sorted `collect_list` per cell (the
-    * [[Lsh.candidatePairsCapped]] idiom: pairs are id-only; vectors hash-
-    * join back per side), so there is no windowed self-join recomputing
+    * set both come out of one sorted `collect_list` per cell (pairs are
+    * id-only, as in [[Lsh.candidatePairsCapped]]; vectors hash-join back
+    * per side), so there is no windowed self-join recomputing
     * the membership subtree per consumer. A pathologically hot cell at
     * production scale is handled the same way the LSH path caps hot
     * buckets — split the cell by re-running Lloyd on it (not needed at

@@ -88,14 +88,8 @@ object Dedup {
     * d14/d15), and the bucket-size window over the exploded band table is
     * the expensive step; re-running it per consumer was pure repeat work. */
   private[queries] def docCandidates(s: SparkSession, d: String): DataFrame =
-    // 64k minPartitionSize scope (see embPairs): the bucket window +
-    // in-bucket pair generation read ~1 MB of banded shuffle but carry
-    // the pair-expansion compute, so the default byte floor ran them in
-    // ONE task (measured 0.8 s single-task at sf0.1); inert at scale.
     dumpDerived(s, d, "doc_candidates") {
-      withConf(s, "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k") { c =>
-        Lsh.candidatePairsCapped(docBanded(c, d))
-      }
+      Lsh.candidatePairsCapped(docBanded(s, d))
     }
 
   /** (doc_id, cluster) — the ≥0.5-Jaccard-confirmed near-dup clustering,
@@ -303,11 +297,10 @@ object Dedup {
       val allGrams = docs.select(col("doc_id"), col("source"),
           explode(expr("array_distinct(transform(sequence(1, length(text)-2), i -> xxhash64(substring(text, i, 3))))")).as("gh"))
       // df-filter as a WINDOW over (source, gh) — the oracle's own
-      // QUALIFY formulation and the Lsh.candidatePairsCapped idiom: ONE
-      // explode pass + one exchange instead of a groupBy branch joined
-      // back against a second full explode of the same scan (measured:
-      // the two explode branches each cost ~17-20 task-seconds
-      // at sf0.1). The window's (source, gh) partitioning and sort are
+      // QUALIFY formulation: ONE explode pass + one exchange instead of
+      // a groupBy branch joined back against a second full explode of
+      // the same scan (measured: the two explode branches each cost
+      // ~17-20 task-seconds at sf0.1). The window's (source, gh) partitioning and sort are
       // exactly what the self-join below needs, so the join adds no
       // exchange or sort on either side.
       val wdf = Window.partitionBy(col("source"), col("gh"))
@@ -1126,7 +1119,7 @@ object Dedup {
     // corpora and whether the doc leaked across the boundary. Scale
     // shape: the prefix chain rides the SAME sketch/band dumps (a filter
     // on the banded table IS the banding of the prefix corpus — band
-    // keys are per-doc), so the marginal cost is one more bucket window
+    // keys are per-doc), so the marginal cost is one more bucket shuffle
     // + confirm join + CC loop on 80% of the edge mass; nothing
     // re-sketches. The oracle re-derives BOTH recursive closures
     // independently.

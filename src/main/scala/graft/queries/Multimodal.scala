@@ -37,9 +37,9 @@ object Multimodal {
 
   /** Shared m07/m10 confirm tail: a per-row fingerprint table (several
     * rows per id — frame or offset slots) → guaranteed-radius banding →
-    * the shared Lsh heat cap (NO pre-distinct: the bucket window +
-    * candidatePairsCapped's array_distinct subsume it in ONE shuffle of the
-    * band table; the cap therefore counts slot multiplicity — harsher
+    * the shared Lsh heat cap (NO pre-distinct: candidatePairsCapped's
+    * bucket scan keeps one member per id in its ONE shuffle of the band
+    * table; the cap therefore counts slot multiplicity — harsher
     * on hot buckets, the protective direction) → slot×slot min-Hamming
     * confirm ≤ maxHam. `bands` must guarantee candidacy at radius ≥
     * maxHam (pigeonhole), so recall is structural, not probabilistic. */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -76,5 +76,75 @@ class LshSpec extends AnyFunSuite {
       Seq(7L, 8L).map((_, 300L, 2))).toDF("id", "bandKey", "cap")
     assert(pairs(Lsh.candidatePairsCapped(banded)) ===
       Seq((4L, 5L), (4L, 6L), (5L, 6L), (7L, 8L)))
+  }
+
+  /** The pair set of [[Lsh.candidatePairsCapped]], asserted equal to the
+    * window reference's ([[PipelineOracles.candidatePairsWindow]]). */
+  private def checkedPairs(banded: DataFrame): Set[Row] = {
+    val got = Lsh.candidatePairsCapped(banded).collect()
+    val want = PipelineOracles.candidatePairsWindow(banded).collect().toSet
+    assert(got.length === got.toSet.size, "pairs are not distinct")
+    assert(got.toSet === want)
+    got.toSet
+  }
+
+  test("sort-scan equals the window reference: Long ids, mixed caps, repeats") {
+    val rnd = new scala.util.Random(7)
+    // 400 buckets of 1..12 rows drawn from 60 ids (repeats within a
+    // bucket happen), caps 4 and 64 (per bucket)
+    val rows = (0 until 400).flatMap { k =>
+      val cap = if (k % 3 == 0) 4 else 64
+      Seq.fill(1 + rnd.nextInt(12))((rnd.nextInt(60).toLong, k.toLong * 7919L, cap))
+    }
+    val got = checkedPairs(rows.toDF("id", "bandKey", "cap"))
+    assert(got.nonEmpty)
+    assert(got.forall(r => r.getLong(0) < r.getLong(1)))
+  }
+
+  test("sort-scan equals the window reference: String ids, nulls counted toward the cap") {
+    val rnd = new scala.util.Random(11)
+    val rows = (0 until 300).flatMap { k =>
+      Seq.fill(1 + rnd.nextInt(6)) {
+        val id = if (rnd.nextInt(8) == 0) null else s"v${rnd.nextInt(40)}"
+        (id, k.toLong, 4)
+      }
+    }
+    val got = checkedPairs(rows.toDF("id", "bandKey", "cap"))
+    assert(got.nonEmpty)
+    assert(got.forall(r => r.getString(0) < r.getString(1)))
+    // a null id is no member but counts: two ids + one null fill cap 3
+    val nulls = Seq(("x", 1L, 3), (null, 1L, 3), ("y", 1L, 3),
+      ("p", 2L, 2), (null, 2L, 2), ("q", 2L, 2)).toDF("id", "bandKey", "cap")
+    assert(checkedPairs(nulls) === Set(Row("x", "y")))
+  }
+
+  test("sort-scan: a repeated id counts toward the cap as rows, as one member") {
+    // bucket 100: ids 1,1,2 = 3 rows within cap 3 -> (1,2);
+    // bucket 200: ids 3,3,4 = 3 rows over cap 2 -> dropped
+    val banded = Seq((1L, 100L, 3), (1L, 100L, 3), (2L, 100L, 3),
+      (3L, 200L, 2), (3L, 200L, 2), (4L, 200L, 2)).toDF("id", "bandKey", "cap")
+    assert(checkedPairs(banded) === Set(Row(1L, 2L)))
+  }
+
+  test("sort-scan: buckets of exactly cap rows kept, cap + 1 dropped, per cap") {
+    val banded = (Seq(1L, 2L, 3L, 4L).map((_, 10L, 4)) ++
+      Seq(5L, 6L, 7L, 8L, 9L).map((_, 20L, 4)) ++
+      (100L until 164L).map((_, 30L, 64)) ++
+      (200L until 265L).map((_, 40L, 64))).toDF("id", "bandKey", "cap")
+    val got = checkedPairs(banded)
+    assert(got.size === 6 + 64 * 63 / 2)
+    assert(got.forall(r => r.getLong(0) < 200L && !(5L to 9L).contains(r.getLong(0))))
+  }
+
+  test("sort-scan: a bucket collapsing below 2 distinct ids emits nothing") {
+    val banded = Seq((5L, 1L, 8), (5L, 1L, 8), (5L, 1L, 8), (6L, 2L, 8))
+      .toDF("id", "bandKey", "cap")
+    assert(checkedPairs(banded).isEmpty)
+  }
+
+  test("sort-scan: a 100k-row hot bucket emits nothing beside a kept bucket") {
+    val hot = spark.range(0, 100000).select($"id", lit(1L).as("bandKey"), lit(64).as("cap"))
+    val cold = Seq((1L, 2L, 64), (2L, 2L, 64)).toDF("id", "bandKey", "cap")
+    assert(checkedPairs(hot.union(cold)) === Set(Row(1L, 2L)))
   }
 }

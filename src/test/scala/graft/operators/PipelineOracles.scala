@@ -74,4 +74,37 @@ object PipelineOracles {
     cap.union(img).union(phx).withColumn("cap", lit(cfg.maxBucket))
       .union(ph.union(sh).withColumn("cap", lit(cfg.fpJointMaxBucket)))
   }
+
+  /** The window formulation [[Lsh.candidatePairsCapped]] replaced: a
+    * `count` window over `bandKey` gates bucket size, then `collect_list`
+    * + `array_sort(array_distinct)` + two explodes generate the in-bucket
+    * pairs. The specs compare the sort-scan's pair set against it. */
+  def candidatePairsWindow(banded: DataFrame): DataFrame = {
+    val spark = banded.sparkSession
+    import spark.implicits._
+
+    // Bucket-size gating as a WINDOW over the bucket key: one shuffle of
+    // the exploded band table, inside which the count, the size filter,
+    // and the member grouping all happen (the former sizes-aggregate +
+    // semi-join formulation scanned and shuffled the band table twice).
+    // Oversize buckets still never materialize as arrays: the filter runs
+    // before `collect_list`, and WindowExec's buffer is spill-safe.
+    val w = org.apache.spark.sql.expressions.Window.partitionBy($"bandKey")
+    val kept = banded
+      .withColumn("bn", count(lit(1)).over(w))
+      .where($"bn" >= 2 && $"bn" <= $"cap")
+
+    // In-bucket pair generation with BUILT-IN expressions only (no UDF
+    // encoder round-trip, type-generic over Long/String ids): sort the
+    // distinct members, explode the anchor index i, then explode the
+    // tail slice — every b after the anchor. a < b holds by sort order.
+    val grouped = kept.groupBy($"bandKey").agg(collect_list($"id").as("ids"))
+    grouped
+      .select(array_sort(array_distinct($"ids")).as("ids"))
+      .where(size($"ids") >= 2) // distinct could collapse a bucket below 2
+      .select($"ids", explode(sequence(lit(0), size($"ids") - 2)).as("i"))
+      .select(element_at($"ids", $"i" + 1).as("a"),
+        explode(slice($"ids", $"i" + 2, size($"ids"))).as("b"))
+      .dropDuplicates("a", "b")
+  }
 }
