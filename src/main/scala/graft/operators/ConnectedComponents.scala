@@ -113,6 +113,8 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
    * back as a local relation on `start`'s session, hinted for broadcast:
    * its size is exact on the driver, so the label joins downstream
    * ([[labelAll]], [[DedupPipeline.clustersFromEdges]]) never shuffle it.
+   * Nothing reads `start` after the collect, so its checkpoint is freed
+   * right there.
    */
   private[operators] def driverLabels(start: DataFrame): DataFrame = {
     val parts = start.queryExecution.toRdd.mapPartitions { rows =>
@@ -120,6 +122,7 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
       rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
       Iterator.single(b.result())
     }.collect()
+    CacheHandle.free(start)
     val ends = Array.concat(parts.toSeq: _*)
     val ids = ends.clone()
     java.util.Arrays.sort(ids)
@@ -148,7 +151,10 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
     * edges `start` (`edgeCount` of them) until the edge set repeats.
     * `edgesPerPartition` is the target edges per reducer when sizing the
     * in-loop shuffle width via [[chooseLoopWidth]]: [[run]] passes 2M,
-    * specs pass a small value to force a wide loop. */
+    * specs pass a small value to force a wide loop. Each round frees the
+    * checkpoint it read (`start`, then every superseded round) once its
+    * own eager checkpoint exists; the converged star stays, because the
+    * lazy label aggregate returned here reads it. */
   private[operators] def loopLabels(start: DataFrame, edgeCount: Long, maxIter: Int,
       edgesPerPartition: Long): DataFrame = {
     val spark = start.sparkSession
@@ -211,6 +217,7 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
       val sig = (m("edges").asInstanceOf[Long], m("sig").asInstanceOf[Long])
       converged = sig == lastSig
       lastSig = sig
+      CacheHandle.free(e)
       e = ss
       iter += 1
       logWarning(s"[cc] round $iter edges=${sig._1} sig=${sig._2} converged=$converged")

@@ -77,14 +77,24 @@ final class CacheHandle {
   /** `df` checkpointed eagerly (one job, now) and tracked. */
   private[operators] def checkpoint(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(true)
-    rdds :::= cp.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.toList
+    rdds :::= CacheHandle.rddsOf(cp)
     cp
   }
   /** Ids of the tracked checkpoint RDDs, for the specs. */
   private[operators] def rddIds: Seq[Int] = rdds.map(_.id)
   def release(): Unit = { rdds.foreach(_.unpersist(false)); rdds = Nil }
+}
+
+object CacheHandle {
+  /** The checkpointed RDDs a checkpoint frame `cp` reads. */
+  private[operators] def rddsOf(cp: DataFrame): List[org.apache.spark.rdd.RDD[_]] =
+    cp.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.toList
+
+  /** Unpersist the checkpoint `cp` reads; a frame still planned over it
+    * cannot run after that. */
+  private[operators] def free(cp: DataFrame): Unit = rddsOf(cp).foreach(_.unpersist(false))
 }
 
 /**

@@ -75,13 +75,16 @@ object Dedup {
         GraftFunctions.captionSimhash(col("text"), docSketch.ksize).as("simhash"))
     }
 
-  /** (id, bandKey, cap) — the MinHash LSH band table over doc_id, heat
-    * cap 64. */
+  /** (id, bandKey, cap) — the doc MinHash LSH band table of `(doc_id,
+    * mins)` rows: 16 bands × 8 rows, heat cap 64. The corpus index
+    * ([[docBanded]]) and st05's arriving micro-batches band through it. */
+  private[queries] def docBands(sk: DataFrame): DataFrame =
+    Lsh.bands(sk, col("doc_id"),
+      (11, GraftFunctions.minhashBands(col("mins"), bands = 16, rowsPerBand = 8), 64))
+
+  /** [[docBands]] over every document, dumped once per (sfDir, JVM). */
   private[queries] def docBanded(s: SparkSession, d: String): DataFrame =
-    dumpDerived(s, d, "doc_banded", files = 1) {
-      Lsh.bands(docSketches(s, d), col("doc_id"),
-        (11, GraftFunctions.minhashBands(col("mins"), bands = 16, rowsPerBand = 8), 64))
-    }
+    dumpDerived(s, d, "doc_banded", files = 1)(docBands(docSketches(s, d)))
 
   /** LSH candidate pairs over the banded dump — itself dumped once per
     * (sfDir, JVM): five queries consume the same pair set (d03/d04/d12/
@@ -92,17 +95,56 @@ object Dedup {
       Lsh.candidatePairsCapped(docBanded(s, d))
     }
 
+  /** `(a, b, jac_est)` for the candidate doc pairs `cands (a, b)` whose
+    * sketches in `sk (doc_id, mins)` confirm at jac_est ≥ 0.5 — the one
+    * doc-pair confirm (d04, d06/d11, d12/st05, d20, d21, d23). jac_est is
+    * rounded to 6 places like the oracle's [[jacSql]], and the rounding
+    * never moves a pair across the threshold: jac_est is k/n with
+    * n ≤ 128 (combined denominator), so |k/n − 0.5| ≥ 1/256 whenever it
+    * isn't exactly 0.5. */
+  private[queries] def confirmDocPairs(cands: DataFrame, sk: DataFrame): DataFrame =
+    cands
+      .join(sk.select(col("doc_id").as("a"), col("mins").as("mins_a")), "a")
+      .join(sk.select(col("doc_id").as("b"), col("mins").as("mins_b")), "b")
+      .withColumn("jac_est",
+        round(GraftFunctions.jaccard(col("mins_a"), col("mins_b"), docSketch), 6))
+      .where(col("jac_est") >= 0.5)
+      .select(col("a"), col("b"), col("jac_est"))
+
+  /** The incremental-dedup probe d12 (one shot) and st05 (per micro-batch)
+    * share: the corpus (doc_id % 5 ≠ 0) band index, heat-capped on the
+    * index side only — a bucket holding more than its `cap` corpus rows
+    * is dropped, however many new docs probe it (the
+    * [[incrementalDedupOracle]] rule, not [[Lsh.candidatePairsCapped]]'s,
+    * which counts both sides). The returned function takes new-doc
+    * sketches `(doc_id, mins)` and their [[docBands]] and returns each new
+    * doc's best corpus near-dup `(new_id, dup_of, jac_est)`: max confirmed
+    * Jaccard, ties to the lowest corpus id. Building it materializes the
+    * sketch and band dumps, so a stream calls it before it starts. */
+  private[queries] def docIndexProbe(s: SparkSession, d: String): (DataFrame, DataFrame) => DataFrame = {
+    val oldBands = docBanded(s, d).where(col("id") % 5 =!= 0)
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("bandKey"))))
+      .where(col("n") <= col("cap"))
+      .select(col("id").as("b"), col("bandKey"))
+    val oldSk = docSketches(s, d).where(col("doc_id") % 5 =!= 0)
+      .select(col("doc_id"), col("mins"))
+    val pick = Window.partitionBy(col("a")).orderBy(col("jac_est").desc, col("b"))
+    (newSk, newBands) => {
+      val cands = newBands.select(col("id").as("a"), col("bandKey"))
+        .join(oldBands, "bandKey").select(col("a"), col("b")).distinct()
+      confirmDocPairs(cands, newSk.select(col("doc_id"), col("mins")).unionByName(oldSk))
+        .withColumn("rk", row_number().over(pick)).where(col("rk") === 1)
+        .select(col("a").as("new_id"), col("b").as("dup_of"), col("jac_est"))
+    }
+  }
+
   /** (doc_id, cluster) — the ≥0.5-Jaccard-confirmed near-dup clustering,
     * dumped once per (sfDir, JVM): d06 returns it verbatim and d11 keys
     * its keep-rule off it (the confirm joins and the iterative CC loop
     * previously ran twice per verify run). */
   private def docClusterLabels(s: SparkSession, d: String): DataFrame =
     dumpDerived(s, d, "doc_cluster_labels") {
-      val sk = docSketches(s, d)
-      val edges = docCandidates(s, d)
-        .join(sk.select(col("doc_id").as("a"), col("mins").as("mins_a")), "a")
-        .join(sk.select(col("doc_id").as("b"), col("mins").as("mins_b")), "b")
-        .where(GraftFunctions.jaccard(col("mins_a"), col("mins_b"), docSketch) >= 0.5)
+      val edges = confirmDocPairs(docCandidates(s, d), docSketches(s, d))
         .select(col("a").as("src"), col("b").as("dst"))
       ConnectedComponents
         .labelAll(t(s, d, "documents").select(col("doc_id").as("id")), edges)
@@ -378,13 +420,7 @@ object Dedup {
          |SELECT a, b FROM cand""".stripMargin),
     // candidate confirm with reference-semantics Jaccard estimate
     QueryDef("d04_minhash_jaccard_dedup", { (s, d) =>
-      val sk = docSketches(s, d)
-      docCandidates(s, d)
-        .join(sk.select(col("doc_id").as("a"), col("mins").as("mins_a")), "a")
-        .join(sk.select(col("doc_id").as("b"), col("mins").as("mins_b")), "b")
-        .withColumn("jac_est", round(GraftFunctions.jaccard(col("mins_a"), col("mins_b"), docSketch), 6))
-        .where(col("jac_est") >= 0.5)
-        .select(col("a"), col("b"), col("jac_est"))
+      confirmDocPairs(docCandidates(s, d), docSketches(s, d))
     },
       s"""WITH $candSql,
          |$jacSql
@@ -539,26 +575,8 @@ object Dedup {
     // id) at >= 0.5. Within-delta duplicates are the batch self-dedup's
     // job (d03/d04 over the delta), not this probe's.
     QueryDef("d12_incremental_dedup", { (s, d) =>
-      val sk = docSketches(s, d)
-      val bands = docBanded(s, d)
-      val newB = bands.where(col("id") % 5 === 0)
-        .select(col("id").as("new_id"), col("bandKey"))
-      val oldB = bands.where(col("id") % 5 =!= 0)
-        .select(col("id").as("old_id"), col("bandKey"))
-      val keep = oldB.groupBy("bandKey")
-        .agg(count(lit(1)).as("n")).where(col("n") <= 64).select("bandKey")
-      val cands = newB.join(keep, "bandKey").join(oldB, "bandKey")
-        .select(col("new_id"), col("old_id")).distinct()
-      val scored = cands
-        .join(sk.select(col("doc_id").as("new_id"), col("mins").as("mins_n")), "new_id")
-        .join(sk.select(col("doc_id").as("old_id"), col("mins").as("mins_o")), "old_id")
-        .withColumn("jac_est",
-          round(GraftFunctions.jaccard(col("mins_n"), col("mins_o"), docSketch), 6))
-        .where(col("jac_est") >= 0.5)
-      val pick = Window.partitionBy(col("new_id"))
-        .orderBy(col("jac_est").desc, col("old_id"))
-      scored.withColumn("rk", row_number().over(pick)).where(col("rk") === 1)
-        .select(col("new_id"), col("old_id").as("dup_of"), col("jac_est"))
+      docIndexProbe(s, d)(docSketches(s, d).where(col("doc_id") % 5 === 0),
+        docBanded(s, d).where(col("id") % 5 === 0))
     },
       incrementalDedupOracle),
     // repeated-span flagging — the MassiveText/C4 "remove spans that
@@ -967,12 +985,9 @@ object Dedup {
     // extra corpus scan, no new shuffle wider than the edge set.
     QueryDef("d20_dedup_pressure", { (s, d) =>
       val sk = docSketches(s, d)
-      val p = docCandidates(s, d)
-        .join(sk.select(col("doc_id").as("a"), col("mins").as("mins_a"),
-          col("source").as("src_a")), "a")
-        .join(sk.select(col("doc_id").as("b"), col("mins").as("mins_b"),
-          col("source").as("src_b")), "b")
-        .where(GraftFunctions.jaccard(col("mins_a"), col("mins_b"), docSketch) >= 0.5)
+      val p = confirmDocPairs(docCandidates(s, d), sk)
+        .join(sk.select(col("doc_id").as("a"), col("source").as("src_a")), "a")
+        .join(sk.select(col("doc_id").as("b"), col("source").as("src_b")), "b")
         .select(least(col("src_a"), col("src_b")).as("sa"),
           greatest(col("src_a"), col("src_b")).as("sb"),
           col("a"), col("b"))
@@ -1013,19 +1028,11 @@ object Dedup {
     // edge-keyed (AQE broadcasts the edge side), member counts are one
     // agg over the label table, and both final groupBys key on the
     // cluster id — nothing here rivals the dedup that produced the input.
-    // Note rounding cannot desync this from d06's unrounded ≥ 0.5 edge
-    // filter: jac_est is k/n with n ≤ 128 (combined denominator), so
-    // |k/n − 0.5| ≥ 1/256 whenever it isn't exactly 0.5 — round-to-6
-    // never flips the threshold.
+    // The edges are d06's own confirm ([[confirmDocPairs]]), so they are
+    // exactly the edges its closure was built from.
     QueryDef("d21_cluster_dilution", { (s, d) =>
       val labels = docClusterLabels(s, d)
-      val sk = docSketches(s, d)
-      val edges = docCandidates(s, d)
-        .join(sk.select(col("doc_id").as("a"), col("mins").as("mins_a")), "a")
-        .join(sk.select(col("doc_id").as("b"), col("mins").as("mins_b")), "b")
-        .withColumn("jac_est",
-          round(GraftFunctions.jaccard(col("mins_a"), col("mins_b"), docSketch), 6))
-        .where(col("jac_est") >= 0.5)
+      val edges = confirmDocPairs(docCandidates(s, d), docSketches(s, d))
         .select(col("a"), col("jac_est"))
       val mem = labels.groupBy("cluster")
         .agg(count(lit(1)).as("n_members"))
@@ -1125,12 +1132,8 @@ object Dedup {
     // independently.
     QueryDef("d23_split_stability", { (s, d) =>
       val cutoff = tableRows(s, d, "documents") * 4 / 5
-      val sk = docSketches(s, d)
-      val preEdges = Lsh.candidatePairsCapped(
-          docBanded(s, d).where(col("id") < cutoff))
-        .join(sk.select(col("doc_id").as("a"), col("mins").as("mins_a")), "a")
-        .join(sk.select(col("doc_id").as("b"), col("mins").as("mins_b")), "b")
-        .where(GraftFunctions.jaccard(col("mins_a"), col("mins_b"), docSketch) >= 0.5)
+      val preEdges = confirmDocPairs(Lsh.candidatePairsCapped(
+          docBanded(s, d).where(col("id") < cutoff)), docSketches(s, d))
         .select(col("a").as("src"), col("b").as("dst"))
       val preLabels = ConnectedComponents.labelAll(
           t(s, d, "documents").select(col("doc_id").as("id"))

@@ -3,7 +3,6 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Helpers every query family shares: table reads, scan widening, the
   * derived-table dump cache and its oracle-side paths, and scoped session
@@ -102,37 +101,6 @@ object QuerySupport {
   private[queries] def withConf[T](s: SparkSession, key: String, value: String)(
       body: SparkSession => T): T =
     body(Bridge.scoped(s, key -> value))
-
-  /** Start a streaming query from a child of `s` carrying stream-scoped
-    * conf, run it over all available input and stop it. The stream pins
-    * both values into its checkpoint at start; `s` never changes:
-    *
-    *  - `spark.sql.shuffle.partitions` lowered to 8 — the state stores
-    *    allocate one instance per shuffle partition PER MICRO-BATCH, a
-    *    fixed cost the tiny validation streams pay 3-5× per query at
-    *    width 32. At production scale a stream sizes this to its state,
-    *    not 8.
-    *  - `spark.sql.streaming.noDataMicroBatches.enabled=false` — the
-    *    engine otherwise appends an extra NO-DATA micro-batch (a full
-    *    plan + state-store lifecycle + sink-commit round) after every
-    *    watermark advance, purely to emit/evict EARLIER than the next
-    *    data batch would. Every st-query's emission is DATA-batch-driven
-    *    by construction, so those extra batches change wall time only,
-    *    never the output: st01/st04 stage a SECOND, later sentinel
-    *    precisely so a data batch runs with the already-advanced
-    *    watermark (closing every real window / firing every timeout
-    *    wall); st02's dedup and st08's inner join emit on row arrival
-    *    (their watermarks only bound state); st03 closes sessions on
-    *    per-user sentinel ROWS (NoTimeout — a no-data batch is a no-op);
-    *    st05-st07 are stateless foreachBatch probes with no watermark at
-    *    all. At production scale re-enabling them is a latency knob
-    *    (sub-batch emission), not a correctness one. */
-  private[queries] def withStreamConf(s: SparkSession)(
-      start: SparkSession => StreamingQuery): Unit = {
-    val q = start(Bridge.scoped(s, "spark.sql.shuffle.partitions" -> "8",
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))
-    try q.processAllAvailable() finally q.stop()
-  }
 
   /** Corpus size for multimodal queries, scaled off the sf dir name. */
   def corpusRows(dir: String): Long =

@@ -1,22 +1,26 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.StructType
 import graft.functions.GraftFunctions
-import graft.operators.Lsh
 import graft.queries.QuerySupport._
-import graft.queries.Dedup.{deconGrams, deconScore, docBanded, docSketch, docSketches, gramHashes}
+import graft.queries.Dedup.{deconGrams, deconScore, docBands, docIndexProbe, gramHashes}
 import graft.queries.Multimodal.{m09Parts, probeImageBands}
 
 /** `stNN` Structured Streaming queries.
   *
-  * SOURCE SEAM: every st* query stages mtime-ordered parquet batches into
-  * a temp dir and reads them through the FILE source with
+  * SOURCE SEAM: every st* query runs through one harness, [[stream]],
+  * and states only its staged batch files, its source schema and its
+  * transform. The harness copies the batches, in list order, into a
+  * fresh dir and reads them through the FILE source with
   * maxFilesPerTrigger=1 — test scaffolding that makes micro-batch
   * boundaries, watermark advancement, and state hand-off deterministic
-  * and oracle-checkable in tests. The seam is exactly the
+  * and oracle-checkable in tests. The seam is exactly the harness's one
   * `readStream` line: a production deployment swaps
   * `readStream.schema(...).parquet(dir)` for its real unbounded source
   * (`format("kafka")` + the same `ts` watermark, or a rate/socket source)
@@ -39,20 +43,34 @@ object Streaming {
       (r.getTimestamp(0), r.getTimestamp(1))
     })
 
+  /** Best-effort recursive delete. It runs in `finally` blocks, where a
+    * throw would mask the failure that got there (a failed write can
+    * leave a non-empty `_temporary` tree behind). */
+  private def deleteTree(f: java.io.File): Unit = {
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete(): Unit
+    }
+    try rm(f)
+    catch { case scala.util.control.NonFatal(_) => }
+  }
+
   /**
    * Stage every streaming query's micro-batch files ONCE per (sfDir, JVM)
    * — the `dumpDerived` pattern applied to the stream scaffolding (the
-   * file-source batches are deterministic functions of the events table,
+   * file-source batches are deterministic functions of the input tables,
    * so st01/st03/st04 re-running the split/coalesce/sentinel writes per
    * query was pure fixed cost; st03 and st04 even share the same halves).
-   * Queries COPY the staged files into their own source dir (cheap FS
-   * copy) and stamp mtimes there — the file source orders batches by
-   * mtime, which must be per-query-run, not per-staging.
+   * [[stream]] COPIES the staged files into each run's own source dir
+   * (cheap FS copy) and stamps mtimes there — the file source orders
+   * batches by mtime, which must be per-query-run, not per-staging.
+   * Staging also makes the batches robust to an input table being a
+   * parquet DIRECTORY: a raw copy of a directory-shaped table would
+   * silently stage an empty batch.
    */
-  private def stagedStreamBatches(s: SparkSession, d: String): java.nio.file.Path = {
+  private def stagedStreamBatches(s: SparkSession, d: String): Path = {
     val dir = java.nio.file.Paths.get(s"${derivedDir(d)}/stream_batches")
     dumpedPaths.getOrElseUpdate(dir.toString, {
-      import java.nio.file.{Files, StandardCopyOption}
       val events = t(s, d, "events")
       val schema = events.schema
       val (minTs, maxTs) = eventsTsRange(s, d)
@@ -64,18 +82,9 @@ object Streaming {
           df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = tmp.toFile.listFiles()
             .filter(_.getName.endsWith(".parquet")).head
-          Files.move(part.toPath, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
-        } finally { // drop the _SUCCESS/.crc litter, not just the part file
-          // Best-effort recursive cleanup: a failed write can leave a
-          // non-empty _temporary tree, and a throw from this finally
-          // would mask the original write failure
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete(): Unit
-          }
-          try rm(tmp.toFile)
-          catch { case scala.util.control.NonFatal(_) => }
-        }
+          Files.move(part.toPath, dir.resolve(name),
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        } finally deleteTree(tmp.toFile) // the _SUCCESS/.crc litter too
       }
       def tsLit(ms: Long) =
         lit(new java.sql.Timestamp(ms)).cast(schema("ts").dataType)
@@ -85,7 +94,7 @@ object Streaming {
         .select(col("image_id"), col("phash"))
       val delta = t(s, d, "documents").where(col("doc_id") % 5 === 0)
       val train = t(s, d, "documents").where(col("doc_id") % 43 =!= 0)
-      // All 12 staged batch files are independent tiny coalesce(1) write
+      // All 14 staged batch files are independent tiny coalesce(1) write
       // jobs; run them from a small driver pool so the next job's tasks
       // back-fill the idle session instead of queueing behind each
       // serial job's commit (measured ~0.1 s of driver+
@@ -93,7 +102,9 @@ object Streaming {
       // thread-safe; every write lands in its own temp dir and is moved
       // to a distinct file name.
       val work: Seq[(DataFrame, String)] = Seq(
-        // session halves at the midpoint cutoff (st03 + st04 share these)
+        // st02's one micro-batch: the whole events table
+        (events, "events.parquet"),
+        // session halves at the midpoint cutoff (st01/st03/st04/st08)
         (events.where(col("ts").cast("timestamp") < cutoff), "b1.parquet"),
         (events.where(col("ts").cast("timestamp") >= cutoff), "b2.parquet"),
         // st03 per-user closing sentinel batch
@@ -140,15 +151,97 @@ object Streaming {
     dir
   }
 
-  /** Copy a staged batch file into a streaming source dir with a
-    * controlled mtime offset (the file source orders batches by mtime). */
-  private def copyBatch(src: java.nio.file.Path, inDir: java.nio.file.Path,
-      name: String, mtimeOffsetMs: Long): Unit = {
-    val dst = inDir.resolve(name)
-    java.nio.file.Files.copy(src, dst,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    dst.toFile.setLastModified(System.currentTimeMillis() + mtimeOffsetMs)
+  /** How a stream's rows reach the sink [[stream]] owns. */
+  private sealed trait Sink
+  /** A streaming transform appended to a parquet file sink. `src()` opens
+    * one more file source over the run's batches: each call is its own
+    * source with its own offsets (st08 joins two). */
+  private final case class Append(transform: (() => DataFrame) => DataFrame) extends Sink
+  /** A batch transform over each micro-batch (`foreachBatch`), written
+    * with the batchId-keyed overwrite — the idempotent append: a
+    * micro-batch replayed from the checkpoint after a partial commit
+    * rewrites ITS OWN directory instead of appending duplicate rows. */
+  private final case class PerBatch(transform: DataFrame => DataFrame) extends Sink
+
+  /**
+   * The one stream harness. Copies the staged `batches`, in list order,
+   * into a fresh input dir with increasing mtimes, so the file source
+   * (schema `schema`, maxFilesPerTrigger=1) reads one file per
+   * micro-batch in list order; runs `sink` over it to completion; deletes
+   * the input copy and the checkpoint once the query has stopped; and
+   * returns the sink read back through `s` (without `batch_id`, which
+   * partition discovery surfaces for [[PerBatch]] sinks and is sink
+   * bookkeeping, not data). The sink dir stays: the returned frame
+   * reads it lazily.
+   *
+   * The query starts from a child of `s` carrying stream-scoped conf
+   * (pinned into the checkpoint at start; `s` never changes):
+   *
+   *  - `spark.sql.shuffle.partitions` lowered to 8 — the state stores
+   *    allocate one instance per shuffle partition PER MICRO-BATCH, a
+   *    fixed cost the tiny validation streams pay 3-5× per query at
+   *    width 32. At production scale a stream sizes this to its state,
+   *    not 8.
+   *  - `spark.sql.streaming.noDataMicroBatches.enabled=false` — the
+   *    engine otherwise appends an extra NO-DATA micro-batch (a full
+   *    plan + state-store lifecycle + sink-commit round) after every
+   *    watermark advance, purely to emit/evict EARLIER than the next
+   *    data batch would. This is the only place it is set, and it holds
+   *    one invariant every st-query keeps: its emission is
+   *    DATA-batch-driven, so a result that depends on the watermark has
+   *    a later data batch that runs with the advanced watermark. st01
+   *    and st04 stage a SECOND, later sentinel precisely so a data batch
+   *    runs with the already-advanced watermark (closing every real
+   *    window / firing every timeout wall); st02's dedup and st08's inner
+   *    join emit on row arrival (their watermarks only bound state);
+   *    st03 closes sessions on per-user sentinel ROWS (NoTimeout — a
+   *    no-data batch is a no-op); st05-st07 are stateless foreachBatch
+   *    probes with no watermark at all. A new stream whose emission
+   *    waits on the watermark alone must end its batch list with such a
+   *    trailing sentinel, or it silently loses its last windows and
+   *    timeouts. At production scale re-enabling no-data batches is a
+   *    latency knob (sub-batch emission), not a correctness one.
+   */
+  private def stream(s: SparkSession, d: String, batches: Seq[String],
+      schema: StructType, sink: Sink): DataFrame = {
+    val staged = stagedStreamBatches(s, d)
+    val in = Files.createTempDirectory("stream_in")
+    val ckpt = Files.createTempDirectory("stream_ckpt")
+    val out = Files.createTempDirectory("stream_out").toString
+    try {
+      val t0 = System.currentTimeMillis()
+      batches.zipWithIndex.foreach { case (name, i) =>
+        Files.copy(staged.resolve(name), in.resolve(name)).toFile
+          .setLastModified(t0 + i * 60000L)
+      }
+      val c = Bridge.scoped(s, "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+      def src(): DataFrame = c.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(in.toString)
+      val (rows, toSink) = sink match {
+        case Append(f) => (f(() => src()), (w: DataStreamWriter[Row]) =>
+          w.outputMode("append").format("parquet").option("path", out))
+        case PerBatch(f) => (src(), (w: DataStreamWriter[Row]) =>
+          w.foreachBatch { (batch: DataFrame, batchId: Long) =>
+            f(batch).write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+          })
+      }
+      val q = toSink(rows.writeStream)
+        .option("checkpointLocation", ckpt.toString).start()
+      try q.processAllAvailable() finally q.stop()
+    } finally {
+      deleteTree(in.toFile)
+      deleteTree(ckpt.toFile)
+    }
+    val back = s.read.parquet(out)
+    sink match {
+      case PerBatch(_) => back.drop("batch_id")
+      case Append(_) => back
+    }
   }
+
+  /** The events streams' source schema (st01-st04, st08). */
+  private def eventsSchema(s: SparkSession, d: String): StructType = t(s, d, "events").schema
 
   /** Session gap (micros): a quiet period longer than this closes the
     * session. 8 h fits the synthetic events' inter-event spacing. */
@@ -236,40 +329,20 @@ object Streaming {
     // (the scale pattern — state is evicted as the watermark passes each
     // window; nothing accumulates on the driver). A finite file stream
     // never advances the watermark past its last window, so two sentinel
-    // files (3h/4h beyond max event time, one per micro-batch via
-    // maxFilesPerTrigger=1) push the watermark over every real window;
-    // sentinel rows are filtered from the result.
+    // files (3h/4h beyond max event time, one per micro-batch) push the
+    // watermark over every real window; sentinel rows are filtered from
+    // the result. Batches 1-2 are the real events (the staged halves,
+    // whose union is the full table).
     QueryDef("st01_stream_hourly", { (s, d) =>
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val schema = t(s, d, "events").schema
-      val staged = stagedStreamBatches(s, d)
-      val inDir = Files.createTempDirectory("st01_in")
-      val outDir = Files.createTempDirectory("st01_out").toString
-      val ckpt = Files.createTempDirectory("st01_ckpt").toString
-      // batches 1-2: the real events via the staged halves (their union
-      // is the full table; staging also makes this robust to the input
-      // being a parquet DIRECTORY — a raw Files.copy of a directory-shaped
-      // table would silently stage an empty batch); batches 3-4: the
-      // staged watermark sentinels
-      copyBatch(staged.resolve("b1.parquet"), inDir, "b1.parquet", 0L)
-      copyBatch(staged.resolve("b2.parquet"), inDir, "b2.parquet", 30000L)
-      copyBatch(staged.resolve("st01_s3.parquet"), inDir, "b3.parquet", 60000L)
-      copyBatch(staged.resolve("st01_s4.parquet"), inDir, "b4.parquet", 120000L)
-      withStreamConf(s) { c =>
-        c.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir.toString)
+      stream(s, d, Seq("b1.parquet", "b2.parquet", "st01_s3.parquet", "st01_s4.parquet"),
+        eventsSchema(s, d), Append(src => src()
           .withColumn("ts", col("ts").cast("timestamp"))
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .select(col("window.start").cast("timestamp_ntz").as("hour_start"),
-            col("event_type"), col("n"))
-          .writeStream.outputMode("append").format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .start()
-      }
-      s.read.parquet(outDir).where(col("event_type") =!= "__sentinel")
+            col("event_type"), col("n"))))
+        .where(col("event_type") =!= "__sentinel")
     },
       """SELECT date_trunc('hour', ts) AS hour_start, event_type, count(*) AS n
         |FROM events GROUP BY 1, 2""".stripMargin),
@@ -286,39 +359,24 @@ object Streaming {
     // halves keep every row ahead of the min-of-sources watermark:
     // nothing is late, so completeness is exact, not best-effort.
     QueryDef("st08_stream_stream_join", { (s, d) =>
-      import java.nio.file.Files
-      val schema = t(s, d, "events").schema
-      val staged = stagedStreamBatches(s, d)
-      val inDir = Files.createTempDirectory("st08_in")
-      val outDir = Files.createTempDirectory("st08_out").toString
-      val ckpt = Files.createTempDirectory("st08_ckpt").toString
-      copyBatch(staged.resolve("b1.parquet"), inDir, "b1.parquet", 0L)
-      copyBatch(staged.resolve("b2.parquet"), inDir, "b2.parquet", 30000L)
-      withStreamConf(s) { c =>
+      stream(s, d, Seq("b1.parquet", "b2.parquet"), eventsSchema(s, d), Append { src =>
         // two independent sources over the same staged files, each
-        // filtered to its event type (each readStream call is its own
-        // source with its own offsets; the global watermark is the MIN
+        // filtered to its event type (the global watermark is the MIN
         // across both, so neither side can evict state the other still
         // needs)
-        def src(tpe: String, idAs: String, tsAs: String) =
-          c.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-            .where(col("event_type") === tpe)
+        def side(tpe: String, idAs: String, tsAs: String) =
+          src().where(col("event_type") === tpe)
             .select(col("user_id"), col("event_id").as(idAs),
               col("ts").cast("timestamp").as(tsAs))
             .withWatermark(tsAs, "1 hour")
-        val views = src("view", "view_id", "vts")
-        val purchases = src("purchase", "purchase_id", "pts")
+        val views = side("view", "view_id", "vts")
+        val purchases = side("purchase", "purchase_id", "pts")
         views.join(purchases,
             views("user_id") === purchases("user_id") &&
               col("pts") >= col("vts") &&
               col("pts") <= col("vts") + expr("INTERVAL 2 HOURS"))
           .select(views("user_id"), col("view_id"), col("purchase_id"))
-          .writeStream.outputMode("append").format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .start()
-      }
-      s.read.parquet(outDir)
+      })
     },
       // the batch interval join: the streaming inner join's emitted-match
       // union must equal it exactly (inner + time constraint = no
@@ -337,26 +395,16 @@ object Streaming {
     // scale); within one replay of the finite input this is exactly
     // distinct-by-key, which the batch oracle checks. Only the key columns
     // are emitted — the surviving row's other fields depend on arrival
-    // order, which a distributed dedup deliberately does not promise.
+    // order, which a distributed dedup deliberately does not promise. The
+    // whole table arrives as ONE micro-batch: split into time-ordered
+    // batches, a key seen again after the watermark evicted its state
+    // would be emitted twice.
     QueryDef("st02_stream_dedup", { (s, d) =>
-      import java.nio.file.Files
-      val events = t(s, d, "events")
-      val schema = events.schema
-      val outDir = Files.createTempDirectory("st02_out").toString
-      val ckpt = Files.createTempDirectory("st02_ckpt").toString
-      withStreamConf(s) { c =>
-        c.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(d)
-          .withColumn("ts", col("ts").cast("timestamp"))
-          .withWatermark("ts", "1 hour")
-          .dropDuplicatesWithinWatermark("user_id", "event_type")
-          .select(col("user_id"), col("event_type"))
-          .writeStream.outputMode("append").format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .start()
-      }
-      s.read.parquet(outDir)
+      stream(s, d, Seq("events.parquet"), eventsSchema(s, d), Append(src => src()
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark("user_id", "event_type")
+        .select(col("user_id"), col("event_type"))))
     },
       "SELECT DISTINCT user_id, event_type FROM events"),
     // CUSTOM STATE — `flatMapGroupsWithState`:
@@ -368,20 +416,9 @@ object Streaming {
     // sentinel pattern applied to state closure); the sentinel's own
     // session never closes and is never emitted.
     QueryDef("st03_stream_sessions", { (s, d) =>
-      import java.nio.file.Files
       import s.implicits._
-      val schema = t(s, d, "events").schema
-      val staged = stagedStreamBatches(s, d)
-      val inDir = Files.createTempDirectory("st03_in")
-      val outDir = Files.createTempDirectory("st03_out").toString
-      val ckpt = Files.createTempDirectory("st03_ckpt").toString
-      copyBatch(staged.resolve("b1.parquet"), inDir, "b1.parquet", 0L)
-      copyBatch(staged.resolve("b2.parquet"), inDir, "b2.parquet", 60000L)
-      copyBatch(staged.resolve("st03_sent.parquet"), inDir, "b3.parquet", 120000L)
-      withStreamConf(s) { c =>
-        c.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir.toString)
+      stream(s, d, Seq("b1.parquet", "b2.parquet", "st03_sent.parquet"),
+        eventsSchema(s, d), Append(src => src()
           .select(col("user_id"),
             unix_micros(col("ts").cast("timestamp")).as("tsu"))
           .as[(Long, Long)]
@@ -394,12 +431,7 @@ object Streaming {
           .select(col("user_id"),
             timestamp_micros(col("start_us")).cast("timestamp_ntz").as("session_start"),
             timestamp_micros(col("end_us")).cast("timestamp_ntz").as("session_end"),
-            col("n_events"))
-          .writeStream.outputMode("append").format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .start()
-      }
-      s.read.parquet(outDir)
+            col("n_events"))))
     },
       // batch gaps-and-islands replica of the stateful sessionization: a
       // > 8h quiet period starts a new session (ties/duplicates continue —
@@ -427,57 +459,38 @@ object Streaming {
     // Here each open session is walled with setTimeoutTimestamp(last +
     // gap) and the ENGINE closes it once the global watermark passes the
     // wall. The only test scaffolding left is ONE far-future event for a
-    // single synthetic key in a final batch — the watermark is global, so
-    // one row advances it for every user at once (vs st03's one sentinel
-    // PER user); that key's own session is filtered from the result.
+    // single synthetic key (-1; synthetic user ids are non-negative) in
+    // the final batches — the watermark is global, so one row advances it
+    // for every user at once (vs st03's one sentinel PER user); that
+    // key's own session is filtered from the result. The +24 h sentinel
+    // pushes the watermark past every wall (maxTs + 24h - 1h delay > any
+    // last-event + 8h gap); the +25 h one makes the timeout firing
+    // deterministic by construction — the watermark +24 h advanced is
+    // APPLIED in the next batch, so a second, later sentinel guarantees
+    // a DATA batch runs with it, firing every wall inside work
+    // processAllAvailable provably waits for.
     QueryDef("st04_stream_sessions_evt", { (s, d) =>
-      import java.nio.file.Files
       import s.implicits._
-      val schema = t(s, d, "events").schema
-      val staged = stagedStreamBatches(s, d)
-      val inDir = Files.createTempDirectory("st04_in")
-      val outDir = Files.createTempDirectory("st04_out").toString
-      val ckpt = Files.createTempDirectory("st04_ckpt").toString
-      val sentinelUid = -1L // synthetic user ids are non-negative
-      copyBatch(staged.resolve("b1.parquet"), inDir, "b1.parquet", 0L)
-      copyBatch(staged.resolve("b2.parquet"), inDir, "b2.parquet", 60000L)
-      // staged one-row, one-key sentinels: b3 (+24 h) pushes the watermark
-      // past every wall (maxTs + 24h - 1h delay > any last-event + 8h
-      // gap); b4 (+25 h) makes the timeout firing deterministic by
-      // construction — the watermark b3 advanced is APPLIED in the next
-      // batch, and while the engine's no-data micro-batch normally
-      // provides one, that is a trigger-policy behavior: a second, later
-      // sentinel guarantees a DATA batch runs with the advanced watermark,
-      // firing every wall inside work processAllAvailable provably waits
-      // for
-      copyBatch(staged.resolve("st04_s24.parquet"), inDir, "b3.parquet", 120000L)
-      copyBatch(staged.resolve("st04_s25.parquet"), inDir, "b4.parquet", 180000L)
-      withStreamConf(s) { c =>
-      c.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.toString)
-        .withColumn("ts", col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-        // the watermarked ATTRIBUTE itself must be in the fMGWS input's
-        // schema (the analyzer checks attribute metadata, not just the
-        // plan node), so `ts` rides along next to its micros rendering
-        .select(col("user_id"), unix_micros(col("ts")).as("tsu"), col("ts"))
-        .as[(Long, Long, java.sql.Timestamp)]
-        .groupByKey(_._1)
-        .flatMapGroupsWithState(
-          org.apache.spark.sql.streaming.OutputMode.Append(),
-          org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout())(
-          Streaming.sessionizeEvt)
-        .toDF("user_id", "start_us", "end_us", "n_events")
-        .select(col("user_id"),
-          timestamp_micros(col("start_us")).cast("timestamp_ntz").as("session_start"),
-          timestamp_micros(col("end_us")).cast("timestamp_ntz").as("session_end"),
-          col("n_events"))
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .start()
-      }
-      s.read.parquet(outDir).where(col("user_id") =!= sentinelUid)
+      stream(s, d, Seq("b1.parquet", "b2.parquet", "st04_s24.parquet", "st04_s25.parquet"),
+        eventsSchema(s, d), Append(src => src()
+          .withColumn("ts", col("ts").cast("timestamp"))
+          .withWatermark("ts", "1 hour")
+          // the watermarked ATTRIBUTE itself must be in the fMGWS input's
+          // schema (the analyzer checks attribute metadata, not just the
+          // plan node), so `ts` rides along next to its micros rendering
+          .select(col("user_id"), unix_micros(col("ts")).as("tsu"), col("ts"))
+          .as[(Long, Long, java.sql.Timestamp)]
+          .groupByKey(_._1)
+          .flatMapGroupsWithState(
+            org.apache.spark.sql.streaming.OutputMode.Append(),
+            org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout())(
+            Streaming.sessionizeEvt)
+          .toDF("user_id", "start_us", "end_us", "n_events")
+          .select(col("user_id"),
+            timestamp_micros(col("start_us")).cast("timestamp_ntz").as("session_start"),
+            timestamp_micros(col("end_us")).cast("timestamp_ntz").as("session_end"),
+            col("n_events"))))
+        .where(col("user_id") =!= -1L)
     },
       // the EventTimeTimeout variant computes the SAME partition of events
       // into sessions — closure mechanics (watermark wall vs sentinel)
@@ -510,63 +523,19 @@ object Streaming {
     // static index, so no watermark or state store is involved and
     // exactly-once comes from foreachBatch's batchId-idempotent append.
     // Two micro-batches prove the probe is batch-composable; the result
-    // equals d12's one-shot batch answer (the shared oracle SQL).
+    // equals d12's one-shot batch answer (the same probe, the shared
+    // oracle SQL).
     QueryDef("st05_stream_incr_dedup", { (s, d) =>
-      import java.nio.file.Files
-      val docs = t(s, d, "documents")
-      // static side: the persisted corpus index, heat-capped like d03/d12
-      val corpusBands = docBanded(s, d).where(col("id") % 5 =!= 0)
-        .select(col("id").as("old_id"), col("bandKey"))
-      val keepB = corpusBands.groupBy("bandKey")
-        .agg(count(lit(1)).as("n")).where(col("n") <= 64).select("bandKey")
-      val corpusKept = corpusBands.join(keepB, "bandKey")
-      val corpusSk = docSketches(s, d).where(col("doc_id") % 5 =!= 0)
-        .select(col("doc_id").as("old_id"), col("mins").as("mins_o"))
-      val staged = stagedStreamBatches(s, d)
-      val inDir = Files.createTempDirectory("st05_in")
-      val outDir = Files.createTempDirectory("st05_out").toString
-      val ckpt = Files.createTempDirectory("st05_ckpt").toString
-      copyBatch(staged.resolve("st05_b1.parquet"), inDir, "b1.parquet", 0L)
-      copyBatch(staged.resolve("st05_b2.parquet"), inDir, "b2.parquet", 60000L)
-      withStreamConf(s) { c =>
-        c.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir.toString)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // same kernel, bands, tag as the persisted index build
-            // (spread: the sketch kernel would run single-task per batch)
-            val sk = spread(s, batch).select(col("doc_id").as("new_id"),
-              GraftFunctions.captionMinhash(col("text"), docSketch).as("mins_n"))
-            val banded = Lsh.bands(sk, col("new_id"),
-                (11, GraftFunctions.minhashBands(col("mins_n"), bands = 16, rowsPerBand = 8), 64))
-              .select(col("id").as("new_id"), col("bandKey"))
-            val cands = banded.join(corpusKept, "bandKey")
-              .select("new_id", "old_id").distinct()
-            val pick = Window.partitionBy(col("new_id"))
-              .orderBy(col("jac_est").desc, col("old_id"))
-            cands.join(sk, "new_id").join(corpusSk, "old_id")
-              .withColumn("jac_est", round(
-                GraftFunctions.jaccard(col("mins_n"), col("mins_o"), docSketch), 6))
-              .where(col("jac_est") >= 0.5)
-              .withColumn("rk", row_number().over(pick)).where(col("rk") === 1)
-              .select(col("new_id"), col("old_id").as("dup_of"), col("jac_est"))
-              // batchId-keyed overwrite = the idempotent append: a
-              // micro-batch replayed from the checkpoint after a partial
-              // commit rewrites ITS OWN directory instead of appending
-              // duplicate decision rows
-              .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .start()
-      }
-      // partition discovery surfaces batch_id; it is sink bookkeeping,
-      // not part of the decision schema
-      s.read.parquet(outDir).select("new_id", "dup_of", "jac_est")
+      val probe = docIndexProbe(s, d)
+      stream(s, d, Seq("st05_b1.parquet", "st05_b2.parquet"),
+        t(s, d, "documents").schema, PerBatch { batch =>
+          // same kernel and band source as the persisted index build
+          // (spread: the sketch kernel would run single-task per batch)
+          val sk = spread(s, batch).select(col("doc_id"),
+            GraftFunctions.captionMinhash(col("text"), Dedup.docSketch).as("mins"))
+          probe(sk, docBands(sk))
+        })
     },
-      // the streaming probe's decisions must equal d12's one-shot batch
-      // answer — same index, same kernel, same rule, shared oracle SQL
       Dedup.incrementalDedupOracle),
     // streaming decontamination — d16's continuous-ingest twin (the
     // st05↔d12 relationship replayed on the decontamination tier):
@@ -575,37 +544,16 @@ object Streaming {
     // batch's membership join). The per-doc overlap is independent of
     // batching, so the union of per-batch outputs provably equals d16's
     // one-shot answer — st06 shares d16's oracle, and the spec asserts
-    // the set equality. Exactly-once via batchId-keyed idempotent
-    // overwrite, same as st05.
+    // the set equality.
     QueryDef("st06_stream_decontaminate", { (s, d) =>
-      import java.nio.file.Files
-      val docs = t(s, d, "documents")
       val evalGrams = dumpDerived(s, d, "decon_eval_grams")(
         deconGrams(s, d).where(col("ev")).select(col("gh")).distinct())
         .withColumn("hit", lit(1L))
-      val staged = stagedStreamBatches(s, d)
-      val inDir = Files.createTempDirectory("st06_in")
-      val outDir = Files.createTempDirectory("st06_out").toString
-      val ckpt = Files.createTempDirectory("st06_ckpt").toString
-      copyBatch(staged.resolve("st06_b1.parquet"), inDir, "b1.parquet", 0L)
-      copyBatch(staged.resolve("st06_b2.parquet"), inDir, "b2.parquet", 60000L)
-      withStreamConf(s) { c =>
-        c.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir.toString)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // spread: a micro-batch is one staged file → one partition;
-            // the 13-gram kernel would run single-task per batch
-            deconScore(gramHashes(spread(s, batch)), evalGrams)
-              .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .start()
-      }
-      s.read.parquet(outDir)
-        .select("doc_id", "n_grams", "n_hit", "overlap", "contaminated")
+      // spread: a micro-batch is one staged file → one partition; the
+      // 13-gram kernel would run single-task per batch
+      stream(s, d, Seq("st06_b1.parquet", "st06_b2.parquet"),
+        t(s, d, "documents").schema,
+        PerBatch(batch => deconScore(gramHashes(spread(s, batch)), evalGrams)))
     },
       // streaming decontamination provably equals the one-shot d16 (per-doc
       // overlap is batching-independent) — same oracle
@@ -616,33 +564,12 @@ object Streaming {
     // PERSISTED corpus band index. Each image's verdict reads only the
     // static index, so the union of per-batch outputs provably equals
     // m09's one-shot answer — st07 shares m09's brute-force Hamming
-    // oracle, and the spec asserts the set equality. Exactly-once via
-    // batchId-keyed idempotent overwrite, same as st05/st06.
+    // oracle, and the spec asserts the set equality.
     QueryDef("st07_stream_image_neardup", { (s, d) =>
-      import java.nio.file.Files
       val (ph, corpusBands) = m09Parts(s, d)
-      val schema = ph.select(col("image_id"), col("phash")).schema
-      val staged = stagedStreamBatches(s, d)
-      val inDir = Files.createTempDirectory("st07_in")
-      val outDir = Files.createTempDirectory("st07_out").toString
-      val ckpt = Files.createTempDirectory("st07_ckpt").toString
-      copyBatch(staged.resolve("st07_b1.parquet"), inDir, "b1.parquet", 0L)
-      copyBatch(staged.resolve("st07_b2.parquet"), inDir, "b2.parquet", 60000L)
-      withStreamConf(s) { c =>
-        c.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir.toString)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            probeImageBands(batch, corpusBands)
-              .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .start()
-      }
-      s.read.parquet(outDir)
-        .select("image_id", "n_matches", "min_ham", "first_dup_id")
+      stream(s, d, Seq("st07_b1.parquet", "st07_b2.parquet"),
+        ph.select(col("image_id"), col("phash")).schema,
+        PerBatch(probeImageBands(_, corpusBands)))
     },
       // streaming image ingest probe equals m09's one-shot answer (each
       // verdict reads only the persisted index) — same brute-force oracle

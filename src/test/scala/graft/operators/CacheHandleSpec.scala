@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.SyntheticCorpus
 
 /** What a [[DedupPipeline]] pass leaves in executor storage: the
-  * exact-dedup checkpoint lives until [[CacheHandle.release]]. */
+  * exact-dedup checkpoint lives until [[CacheHandle.release]], and
+  * connected components frees its own checkpoints. */
 class CacheHandleSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
@@ -21,8 +22,21 @@ class CacheHandleSpec extends AnyFunSuite {
     assert(checkpoints.forall(sc.getPersistentRDDs.contains))
     cache.release()
     assert(checkpoints.forall(id => !sc.getPersistentRDDs.contains(id)))
-    // the connected-components initial checkpoint is not tracked by the
-    // handle, as before the exact-dedup table was checkpointed
+    // the driver path frees the connected-components checkpoint after
+    // its collect
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, left)
+  }
+
+  test("the CC loop frees its start and every superseded round; only the star stays") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // a 200-node chain takes several rounds on a forced-wide loop
+    val edges = (0L until 200L).map(i => (i, i + 1)).toDF("src", "dst")
+    val labels = CcLoop(edges, edgesPerPartition = 16L).collect()
+    assert(labels.length === 201)
+    assert(labels.forall(_.getLong(1) == 0L))
     val left = sc.getPersistentRDDs.keySet -- before
     assert(left.size <= 1, left)
   }
