@@ -203,21 +203,6 @@ object Shingles {
     out
   }
 
-  /** Word w-shingle hashes: tokenize on whitespace, hash each window of
-    * `w` tokens joined by a single space. */
-  def wordShingleHashes(text: String, w: Int, seed: Long): Array[Long] = {
-    val toks = tokenize(text)
-    if (toks.isEmpty) return Array.emptyLongArray
-    if (toks.length < w) return Array(Murmur3.hash64(toks.mkString(" "), seed))
-    val out = new Array[Long](toks.length - w + 1)
-    var i = 0
-    while (i + w <= toks.length) {
-      out(i) = Murmur3.hash64(toks.slice(i, i + w).mkString(" "), seed)
-      i += 1
-    }
-    out
-  }
-
   /** Lowercase + collapse runs of whitespace to single spaces + trim. */
   def normalizeText(text: String): String = {
     val sb = new java.lang.StringBuilder(text.length)

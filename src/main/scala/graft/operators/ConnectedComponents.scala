@@ -63,6 +63,8 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
    * still beats the loop (900k chain edges, local[4]: 7.7 s vs 20.5 s).
    */
   private[operators] val DriverEdgeGate: Long = 1000000L
+  /** Round cap of [[loopLabels]], which fails loudly if it is reached. */
+  private[operators] val MaxIter: Int = 25
 
   /** The path choice of [[run]]: union-find on the driver at or below
     * [[DriverEdgeGate]] canonical edges, the distributed loop above it.
@@ -77,7 +79,7 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
    *         than through self-loops). Below the gate it is a broadcast
    *         local relation, above it a lazy aggregate.
    */
-  def run(edges: DataFrame, maxIter: Int = 25): DataFrame = {
+  def run(edges: DataFrame, maxIter: Int = MaxIter): DataFrame = {
     val (start, edgeCount) = canonical(edges)
     if (finishOnDriver(edgeCount)) driverLabels(start)
     else loopLabels(start, edgeCount, maxIter, edgesPerPartition = 2000000L)
@@ -250,7 +252,7 @@ object ConnectedComponents extends org.apache.spark.internal.Logging {
    * (static auto-broadcast stays off: sizes derived from UDF plans are
    * garbage).
    */
-  def labelAll(nodes: DataFrame, edges: DataFrame, maxIter: Int = 25): DataFrame = {
+  def labelAll(nodes: DataFrame, edges: DataFrame, maxIter: Int = MaxIter): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
     val lbl = run(edges, maxIter)

@@ -7,65 +7,73 @@ import graft.core.SketchConfig
 import graft.functions.GraftFunctions._
 
 /**
- * Tuning of the end-to-end near-duplicate pipeline (the engine's flagship
- * query — north_rule of BASELINE.json). Defaults match the synthetic
- * corpus' perturbation magnitudes; band/row counts give the s-curve
- * P(detect | jaccard=0.8) ≈ 1 − (1−0.8⁴)³² ≈ 1 − 5·10⁻⁸.
+ * The flagship pipeline's tuning: constants, not options. Each comment's
+ * guarantee holds only at its value. Band/row counts give the s-curve
+ * P(detect | jaccard=0.8) ≈ 1 − (1−0.8⁴)³² ≈ 1 − 5·10⁻⁸. The type exists
+ * because perfbench and the specs name it and its members and pass `cfg`
+ * positionally; the `cfg` parameters can go only in a change that also
+ * edits perfbench. `toString` renders every value as the Lineage
+ * fingerprint input, so a changed constant invalidates old checkpoints.
  */
-final case class DedupConfig(
-    imgSketch: SketchConfig = SketchConfig(num = 128, ksize = 16),
-    imgStride: Int = 4,
-    capSketch: SketchConfig = SketchConfig(num = 128, ksize = 4),
-    // image content is near-orthogonal across rows -> lenient s-curve (32x4).
-    // captions carry heavy template/boilerplate background similarity ->
-    // steep s-curve (16x8) so background jaccard ~0.5 stays out of buckets
-    imgBands: Int = 32,
-    imgRowsPerBand: Int = 4,
-    // 8×16 after the round-1 flood diagnosis: 16×8 let 61% of jaccard-0.7
-    // template background collide (2.09M of 2.4M candidate pairs at 300k
-    // were caption-source); 8×16 passes 2.6% at 0.7 and 91% at the 0.92
-    // caption-only edge threshold (image-backed dups are unaffected)
-    capBands: Int = 8,
-    capRowsPerBand: Int = 16,
-    tauImg: Double = 0.35,
-    // caption-only evidence must be near-identity to merge clusters: at
-    // web scale, templated/boilerplate captions chain moderate-similarity
-    // pairs into mega-clusters of genuinely different images. Moderate
-    // caption similarity is still REPORTED by the pair queries (d04/d05) —
-    // it just does not glue image clusters on its own.
-    tauCap: Double = 0.92,
-    tauCapCorroborated: Double = 0.8,
-    // confirm-side fingerprint radii; the candidate keys (Manku
-    // multi-piece, 6 blocks, 4-block joints) guarantee recall to radius
-    // 2, see GraftFunctions.fingerprintBandsHamming2
-    phashMaxHamming: Int = 3,
-    simhashMaxHamming: Int = 3,
-    maxBucket: Int = 64,
-    // tight heat cap for the fingerprint JOINT buckets: on dense
-    // correlated content the joint-bucket size distribution is heavy-
-    // tailed (measured at 600k rows: ~650k candidate pairs PER size
-    // tier 2 / 3-4 / 5-8 / 9-16), so Σ C(size,2) is what this cap
-    // bounds. Table redundancy, not bucket depth, carries recall
-    // through it: a ham-1 pair shares C(5,4)=5 of the 15 combo tables,
-    // ham-0 all 15 (same-image transforms measure ham ≤ 2; the n=100k
-    // e2e gate pins recall 1.0 under this cap).
-    fpJointMaxBucket: Int = 4,
-    substringMinLen: Int = 20,
-    // head-rewrite (splice) floor for the suffix-array pass. It bounds
-    // the caption-side false-positive MASS (measured on the synthetic
-    // template corpus: 9% of unrelated caption pairs share a >= 30-char
-    // chunk, max 58 — tiny-vocabulary templates are chunk-heavy); the
-    // conjunction with ph_ham <= phashMaxHamming carries precision, so a
-    // false merge needs BOTH a boilerplate chunk AND a near-identical
-    // perceptual hash between unrelated images (~1e-8/pair measured via
-    // the corpus' phash collision rate). The e2e spec asserts the
-    // resulting cluster partition EQUALS ground truth.
-    spliceMinLen: Int = 30,
-    // operational cap on the per-pair suffix-array input (chars): bounds
-    // confirm-stage work and memory on pathological captions; any real
-    // splice/containment decision resolves well within it
-    lcsMaxChars: Int = 4096,
-    ccMaxIter: Int = 25)
+final case class DedupConfig() {
+  val imgSketch: SketchConfig = SketchConfig(num = 128, ksize = 16)
+  val imgStride: Int = 4
+  val capSketch: SketchConfig = SketchConfig(num = 128, ksize = 4)
+  // image content is near-orthogonal across rows -> lenient s-curve (32x4).
+  // captions carry heavy template/boilerplate background similarity ->
+  // steep s-curve (16x8) so background jaccard ~0.5 stays out of buckets
+  val imgBands: Int = 32
+  val imgRowsPerBand: Int = 4
+  // 8×16 after the round-1 flood diagnosis: 16×8 let 61% of jaccard-0.7
+  // template background collide (2.09M of 2.4M candidate pairs at 300k
+  // were caption-source); 8×16 passes 2.6% at 0.7 and 91% at the 0.92
+  // caption-only edge threshold (image-backed dups are unaffected)
+  val capBands: Int = 8
+  val capRowsPerBand: Int = 16
+  val tauImg: Double = 0.35
+  // caption-only evidence must be near-identity to merge clusters: at
+  // web scale, templated/boilerplate captions chain moderate-similarity
+  // pairs into mega-clusters of genuinely different images. Moderate
+  // caption similarity is still REPORTED by the pair queries (d04/d05) —
+  // it just does not glue image clusters on its own.
+  val tauCap: Double = 0.92
+  val tauCapCorroborated: Double = 0.8
+  // confirm-side fingerprint radii; the candidate keys (Manku
+  // multi-piece, 6 blocks, 4-block joints) guarantee recall to radius
+  // 2, see GraftFunctions.fingerprintBandsHamming2
+  val phashMaxHamming: Int = 3
+  val simhashMaxHamming: Int = 3
+  val maxBucket: Int = 64
+  // tight heat cap for the fingerprint JOINT buckets: on dense
+  // correlated content the joint-bucket size distribution is heavy-
+  // tailed (measured at 600k rows: ~650k candidate pairs PER size
+  // tier 2 / 3-4 / 5-8 / 9-16), so Σ C(size,2) is what this cap
+  // bounds. Table redundancy, not bucket depth, carries recall
+  // through it: a ham-1 pair shares C(5,4)=5 of the 15 combo tables,
+  // ham-0 all 15 (same-image transforms measure ham ≤ 2; the n=100k
+  // e2e gate pins recall 1.0 under this cap).
+  val fpJointMaxBucket: Int = 4
+  val substringMinLen: Int = 20
+  // head-rewrite (splice) floor for the suffix-array pass. It bounds
+  // the caption-side false-positive MASS (measured on the synthetic
+  // template corpus: 9% of unrelated caption pairs share a >= 30-char
+  // chunk, max 58 — tiny-vocabulary templates are chunk-heavy); the
+  // conjunction with ph_ham <= phashMaxHamming carries precision, so a
+  // false merge needs BOTH a boilerplate chunk AND a near-identical
+  // perceptual hash between unrelated images (~1e-8/pair measured via
+  // the corpus' phash collision rate). The e2e spec asserts the
+  // resulting cluster partition EQUALS ground truth.
+  val spliceMinLen: Int = 30
+  // operational cap on the per-pair suffix-array input (chars): bounds
+  // confirm-stage work and memory on pathological captions; any real
+  // splice/containment decision resolves well within it
+  val lcsMaxChars: Int = 4096
+  val ccMaxIter: Int = ConnectedComponents.MaxIter
+  override def toString: String = Seq(imgSketch, imgStride, capSketch, imgBands,
+    imgRowsPerBand, capBands, capRowsPerBand, tauImg, tauCap, tauCapCorroborated,
+    phashMaxHamming, simhashMaxHamming, maxBucket, fpJointMaxBucket,
+    substringMinLen, spliceMinLen, lcsMaxChars, ccMaxIter).mkString("DedupConfig(", ",", ")")
+}
 
 /** Tracks the local checkpoints taken while building a pipeline so
   * callers can free their executor blocks once the result is
@@ -436,14 +444,24 @@ object DedupPipeline {
     // it is checkpointed here, eagerly — see the scaladoc.
     // Tracked in `cache` — callers release() after materialization.
     val tagged = cache.checkpoint(exactDedupWindowed(sk))
-    val exactEdges = tagged.where(col("image_id") =!= col("rep"))
-      .select(col("vid").as("src"), xxhash64(col("rep")).as("dst"))
-    val skReps = tagged.where(col("image_id") === col("rep"))
-    val cands = candidates(skReps, cfg)
-    val nearEdges = confirm(cands, skReps, cfg)
-      .select(col("a").as("src"), col("b").as("dst"))
-    (tagged.select(col("image_id"), col("vid")), exactEdges.union(nearEdges))
+    val skReps = reps(tagged)
+    val near = nearEdges(confirm(candidates(skReps, cfg), skReps, cfg))
+    (idmap(tagged), exactEdges(tagged).union(near))
   }
+
+  // the glue between an exactDedupWindowed table, confirm and the CC tail:
+  // group representatives (the only rows banding and confirm see), an edge
+  // from every other row to its representative, confirmed pairs as edges,
+  // and the (image_id, vid) map clustersFromEdges labels
+  private[operators] def reps(tagged: DataFrame): DataFrame =
+    tagged.where(col("image_id") === col("rep"))
+  private[operators] def exactEdges(tagged: DataFrame): DataFrame =
+    tagged.where(col("image_id") =!= col("rep"))
+      .select(col("vid").as("src"), xxhash64(col("rep")).as("dst"))
+  private[operators] def nearEdges(confirmed: DataFrame): DataFrame =
+    confirmed.select(col("a").as("src"), col("b").as("dst"))
+  private[operators] def idmap(tagged: DataFrame): DataFrame =
+    tagged.select(col("image_id"), col("vid"))
 
   /** Clustering tail: CC over the edge set + representative relabel.
     * The relabel is ONE window pass over `component` (min image_id +
@@ -452,7 +470,8 @@ object DedupPipeline {
     * the labels (they cover edge endpoints only): below the CC driver
     * gate they are a broadcast-hinted local relation of exact size,
     * above it AQE broadcasts the loop's star from runtime statistics. */
-  def clustersFromEdges(idmap: DataFrame, edges: DataFrame, ccMaxIter: Int = 25): DataFrame = {
+  def clustersFromEdges(idmap: DataFrame, edges: DataFrame,
+      ccMaxIter: Int = ConnectedComponents.MaxIter): DataFrame = {
     // raw CC labels cover edge endpoints only (≪ corpus); rows without a
     // label are singleton clusters — ONE broadcastable left join labels
     // the whole corpus (labelAll would join the full node set twice)

@@ -120,21 +120,17 @@ object Lineage {
     val tagged = lin.stage("exact_tagged", skFp) {
       DedupPipeline.exactDedupWindowed(sk)
     }
-    val exactEdges = lin.stage("exact_edges", skFp) {
-      tagged.where(col("image_id") =!= col("rep"))
-        .select(col("vid").as("src"), xxhash64(col("rep")).as("dst"))
-    }
-    val skReps = tagged.where(col("image_id") === col("rep"))
+    val exactEdges = lin.stage("exact_edges", skFp)(DedupPipeline.exactEdges(tagged))
+    val skReps = DedupPipeline.reps(tagged)
 
     val cands = lin.stage("candidates", fingerprint(skFp, "cands")) {
       DedupPipeline.candidates(skReps, cfg)
     }
     val nearEdges = lin.stage("near_edges", fingerprint(skFp, "confirm")) {
-      DedupPipeline.confirm(cands, skReps, cfg)
-        .select(col("a").as("src"), col("b").as("dst"))
+      DedupPipeline.nearEdges(DedupPipeline.confirm(cands, skReps, cfg))
     }
     lin.stage("clusters", fingerprint(skFp, "clusters")) {
-      DedupPipeline.clustersFromEdges(tagged.select(col("image_id"), col("vid")),
+      DedupPipeline.clustersFromEdges(DedupPipeline.idmap(tagged),
         exactEdges.union(nearEdges), cfg.ccMaxIter)
     }
   }

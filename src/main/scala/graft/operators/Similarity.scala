@@ -28,13 +28,9 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     Bridge.column(SketchExpressions.dot(Bridge.expression(a), Bridge.expression(b)))
 
-  /** Cosine similarity column between two ARRAY<DOUBLE> columns. */
-  def cosine(a: Column, b: Column): Column =
-    round(dot(a, b) / sqrt(dot(a, a) * dot(b, b)), 6)
-
-  /** Cosine from a precomputed dot and per-side squared norms — hoists the
-    * norm computation out of the pair loop (it is per-vector, not
-    * per-pair; identical value and therefore identical rounding). */
+  /** Cosine, rounded to 6 places, from a precomputed dot and per-side
+    * squared norms — the norms are per-vector, so they are computed
+    * outside the pair loop. */
   private def cosineWithNorms(dotCol: Column, na: Column, nb: Column): Column =
     round(dotCol / sqrt(na * nb), 6)
 

@@ -167,12 +167,11 @@ object Streaming {
    * The one stream harness. Copies the staged `batches`, in list order,
    * into a fresh input dir with increasing mtimes, so the file source
    * (schema `schema`, maxFilesPerTrigger=1) reads one file per
-   * micro-batch in list order; runs `sink` over it to completion; deletes
-   * the input copy and the checkpoint once the query has stopped; and
-   * returns the sink read back through `s` (without `batch_id`, which
-   * partition discovery surfaces for [[PerBatch]] sinks and is sink
-   * bookkeeping, not data). The sink dir stays: the returned frame
-   * reads it lazily.
+   * micro-batch in list order; runs `sink` over it to completion; returns
+   * the sink read back through `s` into a local relation (without
+   * `batch_id`, which partition discovery surfaces for [[PerBatch]] sinks
+   * and is sink bookkeeping, not data); and deletes the input copy, the
+   * checkpoint and the sink dir, which nothing reads after that.
    *
    * The query starts from a child of `s` carrying stream-scoped conf
    * (pinned into the checkpoint at start; `s` never changes):
@@ -207,7 +206,7 @@ object Streaming {
     val staged = stagedStreamBatches(s, d)
     val in = Files.createTempDirectory("stream_in")
     val ckpt = Files.createTempDirectory("stream_ckpt")
-    val out = Files.createTempDirectory("stream_out").toString
+    val out = Files.createTempDirectory("stream_out")
     try {
       val t0 = System.currentTimeMillis()
       batches.zipWithIndex.foreach { case (name, i) =>
@@ -220,7 +219,7 @@ object Streaming {
         .option("maxFilesPerTrigger", "1").parquet(in.toString)
       val (rows, toSink) = sink match {
         case Append(f) => (f(() => src()), (w: DataStreamWriter[Row]) =>
-          w.outputMode("append").format("parquet").option("path", out))
+          w.outputMode("append").format("parquet").option("path", out.toString))
         case PerBatch(f) => (src(), (w: DataStreamWriter[Row]) =>
           w.foreachBatch { (batch: DataFrame, batchId: Long) =>
             f(batch).write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
@@ -229,15 +228,13 @@ object Streaming {
       val q = toSink(rows.writeStream)
         .option("checkpointLocation", ckpt.toString).start()
       try q.processAllAvailable() finally q.stop()
-    } finally {
-      deleteTree(in.toFile)
-      deleteTree(ckpt.toFile)
-    }
-    val back = s.read.parquet(out)
-    sink match {
-      case PerBatch(_) => back.drop("batch_id")
-      case Append(_) => back
-    }
+      val back = s.read.parquet(out.toString)
+      val data = sink match {
+        case PerBatch(_) => back.drop("batch_id")
+        case Append(_) => back
+      }
+      s.createDataFrame(data.collectAsList(), data.schema)
+    } finally Seq(in, ckpt, out).foreach(p => deleteTree(p.toFile))
   }
 
   /** The events streams' source schema (st01-st04, st08). */

@@ -262,6 +262,17 @@ class PipelineSpec extends AnyFunSuite {
     cands.unpersist(); tagged.unpersist()
   }
 
+  test("DedupConfig is constants: no constructor parameter, every value in its rendering") {
+    // the rendering is Lineage.checkpointedClusters' config fingerprint
+    // input; it pins all 18 values, so checkpoints written before the
+    // fields became constants still resume
+    assert(DedupConfig().toString ===
+      "DedupConfig(SketchConfig(128,16,false,42,0,false),4,SketchConfig(128,4,false,42,0,false)," +
+        "32,4,8,16,0.35,0.92,0.8,3,3,64,4,20,30,4096,25)")
+    val ctors = classOf[DedupConfig].getConstructors
+    assert(ctors.nonEmpty && ctors.forall(_.getParameterCount == 0), ctors.toSeq)
+  }
+
   test("end-to-end dedup: recall >= 0.99 vs ground truth at n=2000") {
     assertDedupMatchesGroundTruth(2000L, maxFusions = 0)
   }

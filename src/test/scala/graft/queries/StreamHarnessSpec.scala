@@ -8,7 +8,7 @@ import graft.operators.SparkTestSession
 
 /** Guards the one stream harness (`Streaming.stream`): every st-query
   * opens its source and its sink there, and a run cleans up its input
-  * copy and checkpoint. */
+  * copy, checkpoint and sink dir. */
 class StreamHarnessSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
@@ -54,7 +54,7 @@ class StreamHarnessSpec extends AnyFunSuite {
   test("an st05 run leaves no stream input or checkpoint dir in the temp dir") {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def streamDirs: Set[String] =
-      Option(tmp.list()).toSeq.flatten.filter(_.matches("""st\w*_(in|ckpt)\d*""")).toSet
+      Option(tmp.list()).toSeq.flatten.filter(_.matches("""st\w*_(in|out|ckpt)\d*""")).toSet
     val before = streamDirs
     val rows = SparkEntry.queries("st05_stream_incr_dedup")(spark, "/root/testdata/sf0.001")
       .collect()
